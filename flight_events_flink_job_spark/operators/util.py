@@ -55,6 +55,19 @@ def pinned_partitions(sess) -> int:
     return par
 
 
+def plan_size(df: DataFrame) -> int | None:
+    """The optimizer's size estimate of ``df`` in bytes, or None when it
+    is unknown: non-file-backed plans (createDataFrame over an RDD, a
+    Kafka source) report the ``spark.sql.defaultSizeInBytes`` sentinel
+    (Long.MaxValue), and a stats call that raises says nothing either.
+    Callers treat None as "take the safe plan"."""
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return None
+    return size if 0 <= size < (1 << 50) else None
+
+
 # Eager-checkpoint budget for multi-consumer intermediate frames. Local
 # default (64 MB at the optimizer-estimate level, which underestimates
 # real row bytes) clears every sf fixture by orders of magnitude while
@@ -86,19 +99,19 @@ def checkpoint_small(df: DataFrame, probe: DataFrame | None = None) -> DataFrame
     corpus frame is file-backed, so the unknown case is test/driver
     scale by construction.
     """
-    sess = df.sparkSession
-    budget = int(
-        sess.conf.get(CHECKPOINT_BUDGET_CONF, str(CHECKPOINT_BUDGET_DEFAULT))
-    )
     try:
-        target = probe if probe is not None else df
-        size = int(
-            target._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        budget = int(
+            df.sparkSession.conf.get(
+                CHECKPOINT_BUDGET_CONF, str(CHECKPOINT_BUDGET_DEFAULT)
+            )
         )
-        if 0 <= size < (1 << 50) and size > budget:
-            return df
-    except Exception:
-        pass
+    except ValueError:
+        # A malformed budget degrades to the default, not a crash in
+        # every gated operator at plan-construction time.
+        budget = CHECKPOINT_BUDGET_DEFAULT
+    size = plan_size(probe if probe is not None else df)
+    if size is not None and size > budget:
+        return df
     return df.localCheckpoint(eager=True)
 
 

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from flight_events_flink_job_spark.operators.util import (
     CHECKPOINT_BUDGET_CONF,
+    CHECKPOINT_BUDGET_DEFAULT,
     checkpoint_small,
     pinned_partitions,
     spread,
@@ -102,6 +103,20 @@ def test_checkpoint_small_probe_overrides_inflated_estimate(spark):
     try:
         assert checkpoint_small(big) is big
         assert _plan_root(checkpoint_small(big, probe=small)) == "LogicalRDD"
+    finally:
+        spark.conf.unset(CHECKPOINT_BUDGET_CONF)
+
+
+def test_checkpoint_small_malformed_budget_falls_back_to_default(spark):
+    # A malformed budget must not raise at plan-construction time: it
+    # reads as the default, which a small known frame clears (so it is
+    # checkpointed) and the gate still refuses a frame estimated above it.
+    spark.conf.set(CHECKPOINT_BUDGET_CONF, "64 megabytes")
+    try:
+        out = checkpoint_small(spark.range(1000))
+        assert _plan_root(out) == "LogicalRDD"
+        big = spark.range(CHECKPOINT_BUDGET_DEFAULT)  # 8 bytes/row estimate
+        assert checkpoint_small(big) is big
     finally:
         spark.conf.unset(CHECKPOINT_BUDGET_CONF)
 

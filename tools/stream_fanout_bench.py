@@ -4,11 +4,11 @@ reference with by construction — FEA:37 feeds 5 branches from a single
 consumed stream).
 
 Topology A — the repo's production shape (streaming/job.py
-run_file_stream): ONE readStream → parse → foreachBatch{persist batch;
-write all 6 sinks from the persisted batch}. The staged input is
-scanned and parsed ONCE per micro-batch; the six branches (flights
-archive, dead-letter, notifications, airline/route/hourly partials)
-read the in-memory persisted batch.
+run_file_stream): ONE readStream → parse → foreachBatch{local
+checkpoint of the batch; write all 6 sinks from the checkpoint}. The
+staged input is scanned and parsed ONCE per micro-batch; the six
+branches (flights archive, dead-letter, notifications,
+airline/route/hourly partials) read the checkpointed batch.
 
 Topology B — the naive Spark shape this repo deliberately avoids: six
 independent writeStream queries over the same staged directory, each
