@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.textual import jaccard, token_set_key
 from ..functions.vectors import cosine_arrow, to_double
-from .util import checkpoint_small, pinned_partitions, spread, spread_by
+from .util import checkpoint_small, pinned_partitions, plan_size, spread, spread_by
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -938,15 +938,8 @@ def _approx_doc_count(docs: DataFrame) -> int:
     moves ~0.9x per corpus doubling), so a 2x divisor error costs at
     most ~15% near the boundary and nothing elsewhere. Unknown stats
     (non-file-backed test frames) fall back to the exact count."""
-    try:
-        size = int(
-            docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        if 0 <= size < (1 << 50):
-            return size // SIMHASH_EST_DOC_BYTES
-    except Exception:
-        pass
-    return docs.count()
+    size = plan_size(docs)
+    return docs.count() if size is None else size // SIMHASH_EST_DOC_BYTES
 
 
 def simhash_near_pairs(

@@ -139,21 +139,43 @@ def spread_by(df: DataFrame, *cols: str, factor: int = 2) -> DataFrame:
     base = factor * sess.sparkContext.defaultParallelism
     # Same cheap stats-based split estimate as spread() (see below) for
     # the never-shrink floor; RDD-conversion fallback if unavailable.
-    splits = None
+    size = plan_size(df)
+    if size is None:
+        splits = df.rdd.getNumPartitions()
+    else:
+        splits = -(-size // _max_partition_bytes(sess))
+    return df.repartition(max(base, splits), *cols)
+
+
+def _max_partition_bytes(sess) -> int:
+    """``spark.sql.files.maxPartitionBytes``: the byte size of one scan
+    split."""
+    return int(sess._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+
+
+def _root_spreads_to(df: DataFrame, target: int) -> bool:
+    """True when ``df``'s plan root is an explicit SHUFFLING repartition
+    to >= ``target`` partitions. r13 (r12 ADVICE item 2): such a
+    known-small input must stay a NO-OP under :func:`spread` — the r12
+    stats gate repartitioned it unconditionally, adding a shuffle that
+    could also SHRINK its parallelism to exactly ``target``. Catalyst's
+    CollapseRepartition would fold spread's repartition over the
+    existing one, so the plan-root check is exact for the
+    repartition-then-spread shape; deeper pre-split layouts stay on the
+    size gate. ``coalesce(n)`` is a ``Repartition`` with shuffle=false
+    that can never raise a one-split input's partition count, so it
+    does not count (r13 ADVICE item 1)."""
     try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        max_pb = int(
-            sess._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-        )
-        # Long.MaxValue-ish stats mean "unknown" (non-file-backed
-        # plans default to spark.sql.defaultSizeInBytes) — fall back.
-        if 0 <= size < (1 << 50):
-            splits = -(-size // max_pb)
+        plan = df._jdf.queryExecution().optimizedPlan()
+        cls = plan.getClass().getSimpleName()
+        if cls == "Repartition":
+            return bool(plan.shuffle()) and int(plan.numPartitions()) >= target
+        if cls == "RepartitionByExpression":
+            opt = plan.optNumPartitions()
+            return bool(opt.isDefined()) and int(opt.get()) >= target
     except Exception:
         pass
-    if splits is None:
-        splits = df.rdd.getNumPartitions()
-    return df.repartition(max(base, splits), *cols)
+    return False
 
 
 def spread(df: DataFrame, by: Column | None = None) -> DataFrame:
@@ -178,37 +200,10 @@ def spread(df: DataFrame, by: Column | None = None) -> DataFrame:
     # cores is equivalent to sizeInBytes < maxPartitionBytes * cores.
     # Estimate-too-big merely skips the repartition (the old no-op
     # path); estimate-unavailable falls back to the RDD gate.
-    known = False
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        size = int(plan.stats().sizeInBytes())
-        max_pb = int(
-            sess._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-        )
-        # Long.MaxValue-ish stats mean "unknown" (non-file-backed
-        # plans default to spark.sql.defaultSizeInBytes) — fall back.
-        known = 0 <= size < (1 << 50)
-        if known and size >= max_pb * target:
+    size = plan_size(df)
+    if size is None:
+        if df.rdd.getNumPartitions() >= target:
             return df
-        # r13 (r12 ADVICE item 2): a known-small input that already
-        # carries an explicit >= target repartition at the plan root
-        # must stay a NO-OP — the r12 stats gate repartitioned it
-        # unconditionally, adding a shuffle that could also SHRINK its
-        # parallelism to exactly `target`. (Catalyst's
-        # CollapseRepartition would fold spread's repartition over the
-        # existing one, so the plan-root check is exact for the
-        # repartition-then-spread shape; deeper pre-split layouts stay
-        # on the size gate above.)
-        if known:
-            cls = plan.getClass().getSimpleName()
-            if cls == "Repartition" and int(plan.numPartitions()) >= target:
-                return df
-            if cls == "RepartitionByExpression":
-                opt = plan.optNumPartitions()
-                if opt.isDefined() and int(opt.get()) >= target:
-                    return df
-    except Exception:
-        pass
-    if not known and df.rdd.getNumPartitions() >= target:
+    elif size >= _max_partition_bytes(sess) * target or _root_spreads_to(df, target):
         return df
     return df.repartition(target, by) if by is not None else df.repartition(target)

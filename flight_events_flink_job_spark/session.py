@@ -10,8 +10,15 @@ machine rather than Spark's legacy 200.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+STATE_STORE_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 
 
 def get_spark(
@@ -91,3 +98,25 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     return spark
+
+
+@contextmanager
+def rocksdb_state_store(spark: SparkSession) -> Iterator[None]:
+    """Run the streaming queries started inside on the RocksDB state
+    store, then restore the previous provider — unset again if it was
+    unset. The provider is read once per query at start, so it only
+    has to be in place while the query starts and drains.
+
+    RocksDB spills state to local disk with bounded memory and
+    incremental checkpoints (the right store at scale); the
+    transformWithState column families also need it, since the default
+    HDFS-backed store rejects them."""
+    prev = spark.conf.get(STATE_STORE_PROVIDER_CONF, None)
+    spark.conf.set(STATE_STORE_PROVIDER_CONF, ROCKSDB_PROVIDER)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(STATE_STORE_PROVIDER_CONF)
+        else:
+            spark.conf.set(STATE_STORE_PROVIDER_CONF, prev)

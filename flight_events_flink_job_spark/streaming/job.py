@@ -26,11 +26,13 @@ in :func:`make_fanout_batch`).
 
 Window aggregates are written as *mergeable partials* per micro-batch
 (counts + delay sums per (window, key)) and finalized on read by
-``merge_*_stats`` — exactly Flink's AggregateFunction add (in-batch
-partial) / merge (serving-side final) split, FEA:224-247, externalized
-to storage. This keeps the multi-aggregate fan-out in ONE pass over the
-data with exact results and no cross-batch driver state; the serving
-merge is a small groupBy over (key, window) rows.
+``merge_*_stats`` — Flink's AggregateFunction add (in-batch partial) /
+merge (serving-side final) split, FEA:224-247, externalized to
+storage. The add, merge and finalize of A1-A3 are written once in
+operators/aggregates.py and re-exported here. This keeps the
+multi-aggregate fan-out in ONE pass over the data with exact results
+and no cross-batch driver state; the serving merge is a small groupBy
+over (key, window) rows.
 
 :func:`streaming_airline_stats_watermarked` is the idiomatic
 single-aggregate alternative: event-time window + watermark + append
@@ -47,21 +49,31 @@ to ``to_json`` + Kafka sink on topic flight-delay-notifications).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from ..functions.flight import hour_of_day, route_key
 from ..observability import observe_parse
-from ..operators.aggregates import ROUND_DP
+
+# Re-exported: the registry, perfbench, tools and tests import the
+# A1-A3 partials and merges (and the RocksDB provider) from here.
+from ..operators.aggregates import (  # noqa: F401
+    airline_stats,
+    merge_airline_stats,
+    merge_hourly_stats,
+    merge_route_stats,
+    partial_airline_stats,
+    partial_hourly_stats,
+    partial_route_stats,
+)
 from ..operators.notifications import delay_notifications
 from ..operators.parse import parse_flight_events, rejected_rows, valid_flights
 from ..operators.util import plan_size
-from ..schemas import (
-    AIRLINE_STATS_COLUMNS,
-    HOURLY_STATS_COLUMNS,
-    ROUTE_STATS_COLUMNS,
-)
+from ..schemas import AIRLINE_STATS_COLUMNS
+from ..session import ROCKSDB_PROVIDER, rocksdb_state_store  # noqa: F401
 from ..sources.fixtures import load_table
 from ..sources.flight_adapter import flight_event_json
 from .sinks import write_serving_table
@@ -78,121 +90,19 @@ def stage_flight_event_json(
 
 
 # ---------------------------------------------------------------------------
-# Mergeable partial aggregates (Flink add/merge split, externalized)
-# ---------------------------------------------------------------------------
-
-def partial_airline_stats(flights: DataFrame, window_size: str = "2 minutes") -> DataFrame:
-    w = F.window("scheduled_time", window_size)
-    return flights.groupBy(w.alias("w"), "airline").agg(
-        F.count("*").alias("total_flights"),
-        F.sum(F.when(F.col("is_delayed") == 1, 1).otherwise(0)).alias("delayed_flights"),
-        F.sum(F.col("delay_minutes").cast("double")).alias("sum_delay"),
-    ).select(
-        "airline", "total_flights", "delayed_flights", "sum_delay",
-        F.col("w.start").alias("window_start"), F.col("w.end").alias("window_end"),
-    )
-
-
-def merge_airline_stats(partials: DataFrame) -> DataFrame:
-    out = (
-        partials.groupBy("airline", "window_start", "window_end")
-        .agg(
-            F.sum("total_flights").alias("total_flights"),
-            F.sum("delayed_flights").alias("delayed_flights"),
-            F.sum("sum_delay").alias("sum_delay"),
-        )
-        .select(
-            "airline",
-            "total_flights",
-            "delayed_flights",
-            F.round(F.col("sum_delay") / F.col("total_flights"), ROUND_DP).alias(
-                "avg_delay_minutes"
-            ),
-            F.round(
-                F.col("delayed_flights") * 100.0 / F.col("total_flights"), ROUND_DP
-            ).alias("delay_rate"),
-            "window_start",
-            "window_end",
-        )
-    )
-    assert out.columns == AIRLINE_STATS_COLUMNS
-    return out
-
-
-def partial_route_stats(flights: DataFrame, window_size: str = "3 minutes") -> DataFrame:
-    w = F.window("scheduled_time", window_size)
-    return flights.groupBy(w.alias("w"), "origin", "destination").agg(
-        F.count("*").alias("total_flights"),
-        F.sum(F.col("delay_minutes").cast("double")).alias("sum_delay"),
-    ).select(
-        "origin", "destination", "total_flights", "sum_delay",
-        F.col("w.start").alias("window_start"), F.col("w.end").alias("window_end"),
-    )
-
-
-def merge_route_stats(partials: DataFrame) -> DataFrame:
-    out = (
-        partials.groupBy("origin", "destination", "window_start", "window_end")
-        .agg(
-            F.sum("total_flights").alias("total_flights"),
-            F.sum("sum_delay").alias("sum_delay"),
-        )
-        .select(
-            route_key(F.col("origin"), F.col("destination")).alias("route"),
-            "origin",
-            "destination",
-            "total_flights",
-            F.round(F.col("sum_delay") / F.col("total_flights"), ROUND_DP).alias(
-                "avg_delay_minutes"
-            ),
-            "window_start",
-            "window_end",
-        )
-    )
-    assert out.columns == ROUTE_STATS_COLUMNS
-    return out
-
-
-def partial_hourly_stats(flights: DataFrame, window_size: str = "5 minutes") -> DataFrame:
-    w = F.window("scheduled_time", window_size)
-    return flights.groupBy(
-        w.alias("w"), hour_of_day(F.col("scheduled_time")).alias("hour_of_day")
-    ).agg(
-        F.count("*").alias("total_flights"),
-        F.sum(F.when(F.col("is_delayed") == 1, 1).otherwise(0)).alias("delayed_flights"),
-        F.sum(F.col("delay_minutes").cast("double")).alias("sum_delay"),
-    ).select(
-        "hour_of_day", "total_flights", "delayed_flights", "sum_delay",
-        F.col("w.start").alias("window_start"), F.col("w.end").alias("window_end"),
-    )
-
-
-def merge_hourly_stats(partials: DataFrame) -> DataFrame:
-    out = (
-        partials.groupBy("hour_of_day", "window_start", "window_end")
-        .agg(
-            F.sum("total_flights").alias("total_flights"),
-            F.sum("delayed_flights").alias("delayed_flights"),
-            F.sum("sum_delay").alias("sum_delay"),
-        )
-        .select(
-            "hour_of_day",
-            "total_flights",
-            "delayed_flights",
-            F.round(F.col("sum_delay") / F.col("total_flights"), ROUND_DP).alias(
-                "avg_delay_minutes"
-            ),
-            "window_start",
-            "window_end",
-        )
-    )
-    assert out.columns == HOURLY_STATS_COLUMNS
-    return out
-
-
-# ---------------------------------------------------------------------------
 # The streaming job
 # ---------------------------------------------------------------------------
+
+def _text_stream(
+    spark: SparkSession, source_dir: str, max_files_per_trigger: int | None
+) -> DataFrame:
+    """The staged JSON text files as a stream, ``max_files_per_trigger``
+    files per micro-batch (all available files when None)."""
+    reader = spark.readStream
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.text(source_dir)
+
 
 def run_file_stream(
     spark: SparkSession,
@@ -209,12 +119,12 @@ def run_file_stream(
     — the deterministic test/backfill mode. Drop the trigger for a
     continuous tail of an arriving directory (or the Kafka twin).
     """
-    reader = spark.readStream
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     # P8 log taps: per-micro-batch observed metrics instead of the
     # reference's per-record LOG.info (see observability.py).
-    parsed = observe_parse(parse_flight_events(reader.text(source_dir)), "parse_metrics")
+    parsed = observe_parse(
+        parse_flight_events(_text_stream(spark, source_dir, max_files_per_trigger)),
+        "parse_metrics",
+    )
 
     query = (
         parsed.writeStream.foreachBatch(make_fanout_batch(warehouse_dir))
@@ -268,7 +178,7 @@ def release_checkpoint(batch: DataFrame) -> None:
     batch.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)
 
 
-def make_fanout_batch(warehouse_dir: str, parallel_sinks: bool = True):
+def make_fanout_batch(warehouse_dir: str):
     """The five-way fan-out executed once per micro-batch — shared by
     the file-stream job above and the Kafka job below (the source is
     the only difference; the reference topology FEA:37->75/90/113/136/158
@@ -291,18 +201,20 @@ def make_fanout_batch(warehouse_dir: str, parallel_sinks: bool = True):
     executor mid-batch fails the batch, and the restarted query
     replays the epoch (see exactly-once below).
 
-    ``parallel_sinks`` (default True, measured round 7): the six sink
-    writes are submitted from a thread pool so their Spark jobs run
-    CONCURRENTLY over the checkpointed partitions. With sequential
-    writes, each sink's job leaves most executor cores idle while small
-    stages run — the naive 6-independent-queries topology beat the
-    shared scan 1.7x on wall at small scale purely on that concurrency
+    Sink thread pool: the six sink writes are submitted from a thread
+    pool so their Spark jobs run CONCURRENTLY over the checkpointed
+    partitions. With sequential writes, each sink's job leaves most
+    executor cores idle while small stages run — the naive
+    6-independent-queries topology beat the shared scan 1.7x on wall
+    at small scale purely on that concurrency
     (tools/stream_fanout_bench.py). Concurrent sinks recover the
     parallelism while keeping the ONE source scan + parse per batch
     that makes the shared topology the 100 TB shape (6x scan
     amplification is the naive topology's unfixable cost; idle cores
-    were this topology's fixable one). Writes target six DIFFERENT
-    paths, so thread-parallel writes never contend on a committer.
+    were this topology's fixable one): at sf0.1 the pooled fan-out
+    drained in 6.10 s against 10.92 s for sequential sinks
+    (bench/stream_fanout_r8.json). Writes target six DIFFERENT paths,
+    so thread-parallel writes never contend on a committer.
 
     Exactly-once (round-7 VERDICT item 3): foreachBatch re-executes
     the last UNCOMMITTED epoch after a crash (at-least-once), so blind
@@ -373,15 +285,9 @@ def make_fanout_batch(warehouse_dir: str, parallel_sinks: bool = True):
                     f"epoch={epoch_id}"
                 ),
             ]
-            if parallel_sinks:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(len(writes)) as pool:
-                    for fut in [pool.submit(w) for w in writes]:
-                        fut.result()
-            else:
-                for w in writes:
-                    w()
+            with ThreadPoolExecutor(len(writes)) as pool:
+                for fut in [pool.submit(w) for w in writes]:
+                    fut.result()
         finally:
             release_checkpoint(batch)
 
@@ -439,31 +345,10 @@ def streaming_airline_stats_watermarked(
     when an availableNow drain finishes stay in state (unemitted) —
     tests account for that.
     """
-    reader = spark.readStream
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    flights = valid_flights(parse_flight_events(reader.text(source_dir)))
-    agg = (
-        flights.withWatermark("scheduled_time", watermark)
-        .groupBy(F.window("scheduled_time", window_size).alias("w"), "airline")
-        .agg(
-            F.count("*").alias("total_flights"),
-            F.sum(F.when(F.col("is_delayed") == 1, 1).otherwise(0)).alias(
-                "delayed_flights"
-            ),
-            F.round(F.avg("delay_minutes"), ROUND_DP).alias("avg_delay_minutes"),
-        )
-        .withColumn(
-            "delay_rate",
-            F.round(F.col("delayed_flights") * 100.0 / F.col("total_flights"), ROUND_DP),
-        )
-        .select(
-            "airline", "total_flights", "delayed_flights", "avg_delay_minutes",
-            "delay_rate",
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-        )
+    flights = valid_flights(
+        parse_flight_events(_text_stream(spark, source_dir, max_files_per_trigger))
     )
+    agg = airline_stats(flights.withWatermark("scheduled_time", watermark), window_size)
     query = (
         agg.writeStream.outputMode("append")
         .format("parquet")
@@ -502,10 +387,7 @@ def run_file_stream_jdbc(
     """
     from ..sources.jdbc import write_jdbc_table
 
-    reader = spark.readStream
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    parsed = parse_flight_events(reader.text(source_dir))
+    parsed = parse_flight_events(_text_stream(spark, source_dir, max_files_per_trigger))
 
     def insert_partials(batch_df: DataFrame, _epoch_id: int) -> None:
         write_jdbc_table(
@@ -525,9 +407,37 @@ def run_file_stream_jdbc(
     q.awaitTermination()
 
 
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
+def _changelog_snapshot(
+    agg: DataFrame,
+    out_dir: str,
+    checkpoint_dir: str,
+    drain: Callable[[DataStreamWriter], None],
+) -> DataFrame:
+    """Drain an UPDATE-mode A1 aggregate into an epoch-stamped changelog
+    and return its snapshot — the upsert sink shared by the two
+    update-mode queries below. foreachBatch appends each emission
+    tagged with ``_epoch``; the snapshot keeps each key's latest-epoch
+    row (max_by over ``_epoch``; ties impossible: one emission per key
+    per epoch). ``drain`` sets the trigger on the writer, starts it and
+    returns once the changelog is complete."""
+
+    def append_epoch(batch_df: DataFrame, epoch_id: int) -> None:
+        batch_df.withColumn("_epoch", F.lit(epoch_id)).write.mode("append").parquet(
+            out_dir
+        )
+
+    drain(
+        agg.writeStream.outputMode("update")
+        .foreachBatch(append_epoch)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    log = agg.sparkSession.read.parquet(out_dir)
+    value_cols = [c for c in log.columns if c not in ("airline", "window_start", "_epoch")]
+    return (
+        log.groupBy("airline", "window_start")
+        .agg(*[F.expr(f"max_by({c}, _epoch)").alias(c) for c in value_cols])
+        .select(AIRLINE_STATS_COLUMNS)
+    )
 
 
 def streaming_airline_stats_update(
@@ -537,7 +447,6 @@ def streaming_airline_stats_update(
     checkpoint_dir: str,
     window_size: str = "2 minutes",
     max_files_per_trigger: int | None = 2,
-    use_rocksdb: bool = True,
 ) -> DataFrame:
     """A1 as an UPDATE-mode streaming aggregate over the RocksDB state
     store — the two §2.4 config points the append-mode demos don't
@@ -545,87 +454,30 @@ def streaming_airline_stats_update(
 
     Update mode re-emits a (airline, window) row in EVERY micro-batch
     that changed it (a changelog, vs append's emit-once-on-finalize),
-    so the sink is an epoch-stamped upsert: foreachBatch appends rows
-    tagged with the epoch, the final snapshot keeps each key's
-    latest-epoch row. No watermark on purpose — nothing is late-dropped
-    and windows never leave state, so the final snapshot must equal the
-    batch A1 aggregate exactly (that parity is the oracle); production
-    would add the watermark back purely as the state-retention policy.
+    so the sink is an epoch-stamped upsert (:func:`_changelog_snapshot`).
+    No watermark on purpose — nothing is late-dropped and windows never
+    leave state, so the final snapshot must equal the batch A1
+    aggregate exactly (that parity is the oracle); production would add
+    the watermark back purely as the state-retention policy.
 
     RocksDB (``spark.sql.streaming.stateStore.providerClass``): at real
     scale the per-executor window state outgrows the default in-JVM-heap
     HDFS-backed store; RocksDB spills state to local disk with bounded
     memory and incremental-checkpoints to the checkpoint location. The
-    conf is read per-query at start; the previous provider is restored
-    after the drain so other tests keep the default store.
+    conf is read per-query at start; :func:`session.rocksdb_state_store`
+    restores the previous provider after the drain so other queries
+    keep the default store.
     """
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    if use_rocksdb:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
-        reader = spark.readStream
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        flights = valid_flights(parse_flight_events(reader.text(source_dir)))
-        agg = (
-            flights.groupBy(
-                F.window("scheduled_time", window_size).alias("w"), "airline"
-            )
-            .agg(
-                F.count("*").alias("total_flights"),
-                F.sum(F.when(F.col("is_delayed") == 1, 1).otherwise(0)).alias(
-                    "delayed_flights"
-                ),
-                F.round(F.avg("delay_minutes"), ROUND_DP).alias(
-                    "avg_delay_minutes"
-                ),
-            )
-            .withColumn(
-                "delay_rate",
-                F.round(
-                    F.col("delayed_flights") * 100.0 / F.col("total_flights"),
-                    ROUND_DP,
-                ),
-            )
-            .select(
-                "airline", "total_flights", "delayed_flights",
-                "avg_delay_minutes", "delay_rate",
-                F.col("w.start").alias("window_start"),
-                F.col("w.end").alias("window_end"),
-            )
-        )
-
-        def upsert_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-            batch_df.withColumn("_epoch", F.lit(epoch_id)).write.mode(
-                "append"
-            ).parquet(out_dir)
-
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(upsert_epoch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-    # Snapshot = latest changelog emission per key (max_by over _epoch;
-    # ties impossible: one emission per key per epoch).
-    log = spark.read.parquet(out_dir)
-    value_cols = [c for c in log.columns if c not in
-                  ("airline", "window_start", "_epoch")]
-    return (
-        log.groupBy("airline", "window_start")
-        .agg(*[
-            F.expr(f"max_by({c}, _epoch)").alias(c) for c in value_cols
-        ])
-        .select(AIRLINE_STATS_COLUMNS)
+    flights = valid_flights(
+        parse_flight_events(_text_stream(spark, source_dir, max_files_per_trigger))
     )
+    with rocksdb_state_store(spark):
+        return _changelog_snapshot(
+            airline_stats(flights, window_size),
+            out_dir,
+            checkpoint_dir,
+            lambda w: w.trigger(availableNow=True).start().awaitTermination(),
+        )
 
 
 def topk_routes_from_partials(partials: DataFrame, k: int = 10) -> DataFrame:
@@ -694,58 +546,17 @@ def streaming_datagen_stats_watermarked(
     from ..sources.datagen import GEN_FORMAT, register_datagen
 
     register_datagen(spark)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
-        raw = (
-            spark.readStream.format(GEN_FORMAT)
-            .option("rows", rows)
-            .option("rowsPerBatch", rows_per_batch)
-            .load()
-        )
-        flights = valid_flights(parse_flight_events(raw))
-        agg = (
-            flights.withWatermark("scheduled_time", watermark)
-            .groupBy(
-                F.window("scheduled_time", window_size).alias("w"), "airline"
-            )
-            .agg(
-                F.count("*").alias("total_flights"),
-                F.sum(F.when(F.col("is_delayed") == 1, 1).otherwise(0)).alias(
-                    "delayed_flights"
-                ),
-                F.round(F.avg("delay_minutes"), ROUND_DP).alias(
-                    "avg_delay_minutes"
-                ),
-            )
-            .withColumn(
-                "delay_rate",
-                F.round(
-                    F.col("delayed_flights") * 100.0 / F.col("total_flights"),
-                    ROUND_DP,
-                ),
-            )
-            .select(
-                "airline", "total_flights", "delayed_flights",
-                "avg_delay_minutes", "delay_rate",
-                F.col("w.start").alias("window_start"),
-                F.col("w.end").alias("window_end"),
-            )
-        )
+    raw = (
+        spark.readStream.format(GEN_FORMAT)
+        .option("rows", rows)
+        .option("rowsPerBatch", rows_per_batch)
+        .load()
+    )
+    flights = valid_flights(parse_flight_events(raw))
 
-        def upsert_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-            batch_df.withColumn("_epoch", F.lit(epoch_id)).write.mode(
-                "append"
-            ).parquet(out_dir)
-
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(upsert_epoch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        # Drain: the generator holds at `rows`; stop once all input is
+    def drain(writer: DataStreamWriter) -> None:
+        q = writer.trigger(processingTime="0 seconds").start()
+        # The generator holds at `rows`; stop once all input is
         # consumed AND an empty batch has run (the changelog is then
         # complete — update mode emits on change, not on finalize).
         # recentProgress retains only the last ~100 entries, so absorb
@@ -787,19 +598,11 @@ def streaming_datagen_stats_watermarked(
             )
         q.stop()
         q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
-    log = spark.read.parquet(out_dir)
-    value_cols = [c for c in log.columns if c not in
-                  ("airline", "window_start", "_epoch")]
-    return (
-        log.groupBy("airline", "window_start")
-        .agg(*[
-            F.expr(f"max_by({c}, _epoch)").alias(c) for c in value_cols
-        ])
-        .select(AIRLINE_STATS_COLUMNS)
-    )
+    with rocksdb_state_store(spark):
+        return _changelog_snapshot(
+            airline_stats(flights.withWatermark("scheduled_time", watermark), window_size),
+            out_dir,
+            checkpoint_dir,
+            drain,
+        )

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import rocksdb_state_store
+
 STATE_SCHEMA = (
     "n_events LONG, sum_value DOUBLE, last_ts TIMESTAMP, "
     "last_type STRING, streak LONG"
@@ -428,14 +430,7 @@ def drain_expired_users_v2(
     :func:`drain_user_activity_v2` (transformWithState column families
     need it; it is the right store at scale regardless)."""
     spark = events.sparkSession
-    key = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, rocksdb)
-    try:
+    with rocksdb_state_store(spark):
         name = f"expire_users_v2_{uuid.uuid4().hex}"
         query = (
             expire_idle_users_v2(events, gap_seconds=gap_seconds)
@@ -448,11 +443,6 @@ def drain_expired_users_v2(
         )
         query.awaitTermination()
         return spark.table(name)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def user_activity_from_staged_v2(
@@ -482,17 +472,9 @@ def drain_user_activity_v2(events: DataFrame, checkpoint_dir: str) -> DataFrame:
     own column family, which the default HDFS-backed provider rejects —
     the RocksDB provider (the right store at scale anyway: disk-spilled
     state, bounded memory, incremental checkpoints) is set for this
-    query and restored afterwards, same discipline as
-    ``streaming_airline_stats_update``."""
+    query by :func:`session.rocksdb_state_store`."""
     spark = events.sparkSession
-    key = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, rocksdb)
-    try:
+    with rocksdb_state_store(spark):
         name = f"user_activity_v2_{uuid.uuid4().hex}"
         query = (
             track_user_activity_v2(events)
@@ -505,8 +487,3 @@ def drain_user_activity_v2(events: DataFrame, checkpoint_dir: str) -> DataFrame:
         )
         query.awaitTermination()
         return spark.table(name)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)

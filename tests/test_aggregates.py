@@ -89,6 +89,14 @@ def test_window_size_is_parameterized(spark):
     assert all((r.window_end - r.window_start).total_seconds() == 3600 for r in out)
 
 
+@pytest.mark.parametrize("batch_fn", [airline_stats, route_stats, hourly_stats])
+def test_batch_stats_is_one_aggregate(spark, batch_fn):
+    """Batch stats are finalize(add): a projection over the partial
+    aggregate, never a second groupBy."""
+    plan = batch_fn(_flights(spark))._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Aggregate [") == 1
+
+
 def test_sketch_union_rollup_merges_registers(spark):
     """DataSketches HLL mergeability: the global estimate from the
     UNION of per-type sketches equals the estimate over raw ids (small

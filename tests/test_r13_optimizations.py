@@ -11,7 +11,8 @@ Covered here:
 - util.spread is a NO-OP again when a known-small input already
   carries an explicit >= target repartition (round-12 ADVICE item 2 —
   the r12 stats gate re-shuffled such frames and could shrink their
-  parallelism);
+  parallelism), but a non-shuffling ``coalesce(>= target)`` root still
+  gets spread (round-13 ADVICE item 1);
 - util.pinned_partitions (the shared elision-guard arithmetic,
   round-12 ADVICE item 4) — and, plan-level, that the three pinned
   self-joins (user_triangles, simhash_near_pairs, prefix_filter_pairs)
@@ -153,6 +154,28 @@ def test_spread_still_spreads_single_split_known_small_input(spark):
     out = spread(one)
     assert out is not one
     assert out.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+
+
+def test_spread_spreads_one_split_scan_under_coalesce_root(spark, tmp_path):
+    # coalesce(n) is a Repartition with shuffle=false: it cannot raise a
+    # one-split scan's partition count, so it is no reason to skip.
+    target = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "one_split")
+    spark.range(1000).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() == 1
+    coalesced = scan.coalesce(target)
+    out = spread(coalesced)
+    assert out is not coalesced
+    assert out.rdd.getNumPartitions() == target
+
+
+def test_spread_keeps_one_split_scan_under_repartition_root(spark, tmp_path):
+    target = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "one_split")
+    spark.range(1000).coalesce(1).write.parquet(path)
+    pre = spark.read.parquet(path).repartition(target)
+    assert spread(pre) is pre
 
 
 # ---------------------------------------------------------------------------

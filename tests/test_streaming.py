@@ -18,6 +18,11 @@ from flight_events_flink_job_spark.operators.aggregates import (
     route_stats,
 )
 from flight_events_flink_job_spark.operators.notifications import delay_notifications
+from flight_events_flink_job_spark.session import (
+    ROCKSDB_PROVIDER,
+    STATE_STORE_PROVIDER_CONF,
+    rocksdb_state_store,
+)
 from flight_events_flink_job_spark.sources.flight_adapter import flights_from_events
 from flight_events_flink_job_spark.streaming.job import (
     merge_airline_stats,
@@ -82,6 +87,46 @@ def test_update_mode_rocksdb_matches_batch(spark, sf_dir, drained, tmp_path):
             "HDFSBackedStateStoreProvider",
         ).endswith("HDFSBackedStateStoreProvider")
     )
+
+
+HDFS_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+)
+
+
+@pytest.fixture
+def provider_conf(spark):
+    """Yield the provider conf key; put its value back afterwards."""
+    prev = spark.conf.get(STATE_STORE_PROVIDER_CONF, None)
+    yield STATE_STORE_PROVIDER_CONF
+    if prev is None:
+        spark.conf.unset(STATE_STORE_PROVIDER_CONF)
+    else:
+        spark.conf.set(STATE_STORE_PROVIDER_CONF, prev)
+
+
+def test_rocksdb_state_store_restores_previous_provider(spark, provider_conf):
+    spark.conf.set(provider_conf, HDFS_PROVIDER)
+    with rocksdb_state_store(spark):
+        assert spark.conf.get(provider_conf) == ROCKSDB_PROVIDER
+    assert spark.conf.get(provider_conf) == HDFS_PROVIDER
+
+
+def test_rocksdb_state_store_restores_after_body_raises(spark, provider_conf):
+    spark.conf.set(provider_conf, HDFS_PROVIDER)
+    with pytest.raises(RuntimeError, match="drain failed"):
+        with rocksdb_state_store(spark):
+            raise RuntimeError("drain failed")
+    assert spark.conf.get(provider_conf) == HDFS_PROVIDER
+
+
+def test_rocksdb_state_store_unsets_a_previously_unset_provider(
+    spark, provider_conf
+):
+    spark.conf.unset(provider_conf)
+    with rocksdb_state_store(spark):
+        assert spark.conf.get(provider_conf) == ROCKSDB_PROVIDER
+    assert spark.conf.get(provider_conf, None) is None
 
 
 def test_stream_parity_notifications(spark, sf_dir, drained):

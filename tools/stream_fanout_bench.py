@@ -50,6 +50,8 @@ def main() -> int:
     os.environ["TZ"] = "UTC"
     time.tzset()
     topology = sys.argv[1]
+    if topology not in ("shared", "separate"):
+        raise SystemExit(f"unknown topology {topology!r}: shared or separate")
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     parts = int(sys.argv[3]) if len(sys.argv) > 3 else 24
     mfpt = int(sys.argv[4]) if len(sys.argv) > 4 else 4
@@ -146,23 +148,6 @@ def main() -> int:
                 ck,
                 max_files_per_trigger=mfpt,
                 await_termination=False,
-            )
-            rows_read = drain_and_count([q])
-        elif topology == "shared-seq":
-            # the pre-round-7 sequential-sink variant, kept measurable
-            from flight_events_flink_job_spark.streaming.job import (
-                make_fanout_batch,
-            )
-
-            reader = spark.readStream.option("maxFilesPerTrigger", mfpt)
-            parsed = parse_flight_events(reader.text(staging))
-            q = (
-                parsed.writeStream.foreachBatch(
-                    make_fanout_batch(wh, parallel_sinks=False)
-                )
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
             )
             rows_read = drain_and_count([q])
         else:
