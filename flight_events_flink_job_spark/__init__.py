@@ -14,8 +14,8 @@ the operators a large-scale training-data pipeline needs:
   functions that Catalyst plans and optimizes;
 - ``operators/dedup.py`` — exact, MinHash+LSH, prefix-filter n-gram
   Jaccard, SimHash, and bucketed embedding-cosine deduplication;
-- ``operators/similarity.py`` — exact broadcast cosine top-k and
-  hyperplane-LSH approximate nearest neighbors;
+- ``operators/similarity.py`` — exact, hyperplane-LSH and IVF top-k
+  nearest neighbors (cosine and MIPS) on one rank skeleton;
 - ``operators/text.py`` / ``props.py`` — per-doc quality stats, term
   frequency, heuristic language ID, content fingerprints, JSON
   property mining;

@@ -107,19 +107,3 @@ def dot_arrow(a: Column, b: Column) -> Column:
         return pd.Series(acc)
 
     return dp(a, b)
-
-
-def sign_bucket(vec: Column, bits: int) -> Column:
-    """Coordinate-sign LSH bucket: an integer built from the signs of
-    the first ``bits`` coordinates.
-
-    A deterministic, engine-portable bucketing (DuckDB twin uses the
-    same ``CASE WHEN vec[i] >= 0`` bits), so bucketed near-dup results
-    are exactly reproducible by the oracle. For production-grade recall
-    use :func:`hyperplane_buckets` (random projections) instead — that
-    one is rows-only checkable.
-    """
-    acc = F.lit(0)
-    for i in range(bits):
-        acc = acc * 2 + F.when(F.element_at(vec, i + 1) >= 0, 1).otherwise(0)
-    return acc

@@ -1,23 +1,32 @@
 """Similarity search over the ``embeddings`` table (ARRAY<FLOAT> dim=64).
 
 Extension surface beyond the reference (SURVEY.md §2.6) — the reference
-has no vector operations at all. Two strategies:
+has no vector operations at all. Every top-k operator has one shape:
+build a SCORED CANDIDATE frame (q_id, n_id, score), then rank it once
+with :func:`_top_k` (per-query ``row_number`` over (score desc, n_id),
+``rank <= k``, 4dp-rounded score). The tiers differ only in how they
+pick candidates:
 
-- :func:`cosine_topk` — exact brute-force top-k for a bounded query set.
-  The query side is broadcast, so the plan is a BroadcastNestedLoopJoin
-  over a single scan of the corpus: O(|Q| * N) work with NO shuffle of
-  the corpus and no CartesianProduct exchange. This is the correct
-  *exact* plan at 100 TB when |Q| is small (the common "embed a prompt,
-  find neighbors" shape).
-- :func:`cosine_topk_lsh` — approximate scale path: random-hyperplane
-  LSH buckets on both sides, candidates only from matching buckets,
-  exact re-rank within. Corpus-side work drops to the matching buckets;
-  recall is tunable via tables x hyperplanes (pytest measures it).
+- exact — :func:`cosine_topk`, :func:`mips_topk`,
+  :func:`hard_negatives`, :func:`hash_embed_search`: the bounded query
+  side is broadcast, so the plan is a BroadcastNestedLoopJoin over a
+  single scan of the corpus: O(|Q| * N) work with NO shuffle of the
+  corpus and no CartesianProduct exchange. The correct *exact* plan at
+  100 TB when |Q| is small (the "embed a prompt, find neighbors" shape).
+- LSH — :func:`cosine_topk_lsh`, :func:`mips_topk_lsh`: random-hyperplane
+  buckets (:func:`hyperplane_buckets`) on both sides, candidates only
+  from matching buckets, exact re-rank within; one pipeline,
+  :func:`_lsh_topk`, serves both measures (MIPS is a norm augmentation,
+  :func:`_augmented`, in front of it). Corpus-side work drops to the
+  matching buckets; recall is tunable via tables x hyperplanes (pytest
+  measures it).
+- IVF — :func:`cosine_topk_ivf`, :func:`cosine_topk_ivf_hier`: corpus
+  vectors sit in their nearest centroid's posting list, queries probe
+  their ``nprobe`` nearest lists, exact re-rank within.
 
-All vector math is double-precision Catalyst higher-order functions
-(functions/vectors.py); cosine is bit-identical to DuckDB's
-``list_cosine_similarity`` on DOUBLE[], making the exact variant fully
-oracle-hashable.
+All vector math is double-precision (functions/vectors.py); cosine is
+bit-identical to DuckDB's ``list_cosine_similarity`` on DOUBLE[], making
+the exact variants fully oracle-hashable.
 """
 
 from __future__ import annotations
@@ -42,6 +51,45 @@ def _prepared(embeddings: DataFrame, prefix: str) -> DataFrame:
     )
 
 
+def _query_side(
+    prep_n: DataFrame, queries: DataFrame | None, num_queries: int
+) -> DataFrame:
+    """(q_id, q_vec): ``queries`` prepared, or by default the first
+    ``num_queries`` vectors of the prepared corpus (n_id < num_queries).
+    Row-wise prep commutes with the id filter, so reading the default
+    query side off the shared corpus frame gives the same values as
+    preparing the filtered table separately."""
+    if queries is not None:
+        return _prepared(queries, "q")
+    return prep_n.filter(F.col("n_id") < num_queries).select(
+        F.col("n_id").alias("q_id"), F.col("n_vec").alias("q_vec")
+    )
+
+
+def _top_k(
+    scored: DataFrame,
+    score: str,
+    k: int,
+    out: str,
+    cols: tuple = ("q_id", "n_id"),
+) -> DataFrame:
+    """The rank tail every top-k operator shares: per ``q_id``, keep the
+    ``k`` rows with the highest ``score`` column (ties broken by n_id
+    for determinism; a k-bounded WindowGroupLimit in the plan), emit
+    ``cols``, the score rounded to 4dp as ``out`` (so the DuckDB twins
+    keep identical boundary pairs) and the bigint ``rank``."""
+    w = Window.partitionBy("q_id").orderBy(F.col(score).desc(), F.col("n_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            *cols,
+            F.round(F.col(score), 4).alias(out),
+            F.col("rank").cast("bigint").alias("rank"),
+        )
+    )
+
+
 def cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame | None = None,
@@ -58,16 +106,10 @@ def cosine_topk(
     ``prepared``: reuse a precomputed ``_prepared(embeddings, "n")``
     frame (r13 — ann_recall_eval shares ONE prepared corpus between
     the exact and LSH tiers instead of each re-running the
-    scan+sanitize+to_double chain; row-wise prep commutes with the
-    default query filter, so the values are unchanged).
+    scan+sanitize+to_double chain).
     """
     c = prepared if prepared is not None else _prepared(embeddings, "n")
-    if queries is None:
-        q = c.filter(F.col("n_id") < num_queries).select(
-            F.col("n_id").alias("q_id"), F.col("n_vec").alias("q_vec")
-        )
-    else:
-        q = _prepared(queries, "q")
+    q = _query_side(c, queries, num_queries)
     scored = (
         c.join(F.broadcast(q))
         .where(F.col("q_id") != F.col("n_id"))
@@ -77,17 +119,7 @@ def cosine_topk(
             cosine_arrow(F.col("q_vec"), F.col("n_vec")).alias("_cos"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("_cos").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "n_id",
-            F.round(F.col("_cos"), 4).alias("cosine"),
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _top_k(scored, "_cos", k, "cosine")
 
 
 def cosine_radius(
@@ -161,7 +193,20 @@ def hyperplane_buckets(
     different BLAS/CPU and silently break the value-exact driver check
     (round-9 ADVICE item 1). Same big-O either way; the accumulation
     costs one extra pass over a (batch x planes) temporary.
+
+    One UDF for every sign-LSH tier: :func:`cosine_topk_lsh` buckets the
+    d-dim vectors, :func:`mips_topk_lsh` the norm-augmented d+1-dim ones
+    (``dim + 1``, seed 77), and :func:`dedup.embedding_neardup_cosine`
+    the raw corpus vectors.
     """
+    return _bucket_udf(num_tables, num_planes, dim, seed, plane_source)(vec_col)
+
+
+def _bucket_udf(
+    num_tables: int, num_planes: int, dim: int, seed: int, plane_source: str
+):
+    """The Arrow pandas UDF behind :func:`hyperplane_buckets` (its
+    ``.func`` runs the same code on a local pandas batch)."""
     if plane_source == "portable":
         planes = portable_planes(num_tables * num_planes, dim)
     else:
@@ -182,7 +227,62 @@ def hyperplane_buckets(
         codes = (bits * weights).sum(axis=2) + offsets
         return pd.Series(codes.tolist())
 
-    return buckets(vec_col)
+    return buckets
+
+
+def _lsh_topk(
+    prep_n: DataFrame,
+    q_prep: DataFrame,
+    bucketed,
+    score,
+    k: int,
+    out: str,
+) -> DataFrame:
+    """The LSH candidate pipeline both LSH tiers share: explode each
+    side's bucket codes, broadcast-join the query buckets onto the
+    corpus buckets, drop self-matches, dedup the candidate pairs, re-join
+    the vectors, score them with ``score(q_vec, n_vec)`` and rank once
+    (:func:`_top_k`).
+
+    ``bucketed(side, prefix)`` returns ``(frame, codes)``: the side frame
+    (possibly with derived columns, e.g. MIPS's ``_aug``) and the
+    ARRAY<BIGINT> bucket-code column over it.
+
+    ``prep_n`` feeds several consumers here — the corpus bucket stage,
+    the re-rank join and (by default) the query side — and each would
+    otherwise re-run the scan + sanitize + to_double chain, so callers
+    hand it in through :func:`checkpoint_small` (r12: one eager
+    localCheckpoint, the cache-the-prepared-corpus move for a
+    multi-pass index build, guide §5; r13: size-gated, so corpus-scale
+    frames fall back to lazy sharing instead of executor-local
+    materialization).
+    """
+
+    def exploded(side: DataFrame, prefix: str) -> DataFrame:
+        frame, codes = bucketed(side, prefix)
+        return frame.select(f"{prefix}_id", F.explode(codes).alias("bucket"))
+
+    # Candidate dedup on IDS ONLY (24 B/row), vectors re-attached
+    # after: carrying the two 512 B vectors through the dedup shuffle
+    # multiplied its volume ~40x and OOM'd a 128 GB heap on the
+    # degenerate-bucket regime (clustered 800k vectors, 64 queries, 32
+    # tables — found by tools/mips_recall.py round 9). The corpus
+    # re-join is a plain equi-join on n_id; the query side re-attaches
+    # from the same broadcast.
+    qb = exploded(q_prep, "q")
+    cands = (
+        exploded(prep_n, "n")
+        .join(F.broadcast(qb), "bucket")
+        .where(F.col("q_id") != F.col("n_id"))
+        .select("q_id", "n_id")
+        .dropDuplicates(["q_id", "n_id"])
+    )
+    scored = (
+        cands.join(prep_n, "n_id")
+        .join(F.broadcast(q_prep), "q_id")
+        .withColumn("_score", score(F.col("q_vec"), F.col("n_vec")))
+    )
+    return _top_k(scored, "_score", k, out)
 
 
 def cosine_topk_lsh(
@@ -204,66 +304,22 @@ def cosine_topk_lsh(
     full corpus scan per query with the matching buckets only.
     ``prepared``: see :func:`cosine_topk`.
     """
-    # r12: prepared corpus checkpointed once for its four consumers
-    # (bucket stage, re-rank join, and the query side's two uses) —
-    # see mips_topk_lsh for the rationale. r13: size-gated
-    # (checkpoint_small) — at corpus scale the full prepared corpus
-    # must not be materialized to executor-local storage.
     prep_n = (
         prepared
         if prepared is not None
         else checkpoint_small(_prepared(embeddings, "n"))
     )
-    if queries is None:
-        q_prep = prep_n.filter(F.col("n_id") < num_queries).select(
-            F.col("n_id").alias("q_id"), F.col("n_vec").alias("q_vec")
-        )
-    else:
-        q_prep = _prepared(queries, "q")
+    q_prep = _query_side(prep_n, queries, num_queries)
 
-    def bucketed(prepared: DataFrame, prefix: str) -> DataFrame:
-        return prepared.select(
-            f"{prefix}_id",
-            f"{prefix}_vec",
-            F.explode(
-                hyperplane_buckets(
-                    F.col(f"{prefix}_vec"),
-                    num_tables,
-                    num_planes,
-                    plane_source=plane_source,
-                )
-            ).alias("bucket"),
+    def bucketed(side: DataFrame, prefix: str):
+        return side, hyperplane_buckets(
+            F.col(f"{prefix}_vec"),
+            num_tables,
+            num_planes,
+            plane_source=plane_source,
         )
 
-    qb = bucketed(q_prep, "q")
-    cb = bucketed(prep_n, "n")
-    # Candidate dedup on IDS ONLY (24 B/row), vectors re-attached
-    # after: carrying the two 512 B vectors through the dedup shuffle
-    # multiplied its volume ~40x and OOM'd a 128 GB heap on the
-    # degenerate-bucket regime (clustered 800k vectors, 64 queries, 32
-    # tables — found by tools/mips_recall.py round 9). The corpus
-    # re-join is a plain equi-join on n_id; the query side re-attaches
-    # from the same broadcast.
-    cands = (
-        cb.select("n_id", "bucket")
-        .join(F.broadcast(qb.select("q_id", "bucket")), "bucket")
-        .where(F.col("q_id") != F.col("n_id"))
-        .select("q_id", "n_id")
-        .dropDuplicates(["q_id", "n_id"])
-    )
-    scored = cands.join(prep_n, "n_id").join(F.broadcast(q_prep), "q_id")
-    w = Window.partitionBy("q_id").orderBy(F.col("_cos").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("_cos", cosine_arrow(F.col("q_vec"), F.col("n_vec")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "n_id",
-            F.round(F.col("_cos"), 4).alias("cosine"),
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _lsh_topk(prep_n, q_prep, bucketed, cosine_arrow, k, "cosine")
 
 
 def ann_recall_eval(
@@ -358,17 +414,7 @@ def mips_topk(
             dot_arrow(F.col("q_vec"), F.col("n_vec")).alias("_dp"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("_dp").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "n_id",
-            F.round(F.col("_dp"), 4).alias("dotp"),
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _top_k(scored, "_dp", k, "dotp")
 
 
 def _augmented(df: DataFrame, prefix: str, max_norm) -> DataFrame:
@@ -684,31 +730,18 @@ def mips_topk_lsh(
     the queries — and the exact dot re-rank uses the ORIGINAL
     d-dim vectors.
 
-    The sign bits here accumulate plane dots dimension-BY-dimension
-    (one numpy elementwise op per dim across the whole batch x all 64
-    planes), the exact sequential order of DuckDB's
-    ``list_dot_product`` — the same discipline
-    :func:`hyperplane_buckets` now uses (round-9 ADVICE item 1). That
-    makes the bucket assignment, hence the WHOLE approximate result,
-    replayable value-exactly by the SQL oracle (the similarity_topk_lsh
-    precedent, plus the augmentation).
+    The sign bits come from :func:`hyperplane_buckets` over the
+    augmented d+1-dim vectors, whose plane dots accumulate
+    dimension-BY-dimension — the exact sequential order of DuckDB's
+    ``list_dot_product`` (round-9 ADVICE item 1). That makes the bucket
+    assignment, hence the WHOLE approximate result, replayable
+    value-exactly by the SQL oracle (the similarity_topk_lsh precedent,
+    plus the augmentation).
     """
-    # r12: the prepared corpus (id + double vector) feeds FOUR
-    # consumers per call — the max-norm aggregate, the corpus bucket
-    # stage, the exact re-rank join, and (by default) the query side —
-    # and each would otherwise re-run the scan + sanitize + to_double
-    # chain. One eager localCheckpoint materializes it once; at scale
-    # this is the standard cache-the-prepared-corpus move for a
-    # multi-pass index build (guide §5). r13: size-gated
-    # (checkpoint_small) — corpus-scale frames fall back to lazy
-    # sharing instead of executor-local materialization.
+    # r12/r13: the gated checkpoint also serves the max-norm aggregate
+    # below, a fourth consumer next to the three in _lsh_topk.
     prep_n = checkpoint_small(_prepared(embeddings, "n"))
-    if queries is None:
-        q_prep = prep_n.filter(F.col("n_id") < num_queries).select(
-            F.col("n_id").alias("q_id"), F.col("n_vec").alias("q_vec")
-        )
-    else:
-        q_prep = _prepared(queries, "q")
+    q_prep = _query_side(prep_n, queries, num_queries)
 
     # Bounded driver collect: ONE scalar (the corpus max norm) — the
     # same sanctioned model-parameter class as the IVF centroid train.
@@ -727,59 +760,17 @@ def mips_topk_lsh(
     # (round-9 ADVICE item 2).
     max_norm = float(raw_norm) or 1.0
 
-    if plane_source == "portable":
-        planes = portable_planes(num_tables * num_planes, dim + 1)
-    else:
-        rng = np.random.default_rng(seed)
-        planes = rng.standard_normal((num_tables * num_planes, dim + 1))
-    weights = 1 << np.arange(num_planes - 1, -1, -1)
-    offsets = np.arange(num_tables) << num_planes
-
-    @pandas_udf("array<bigint>")
-    def buckets(v: pd.Series) -> pd.Series:
-        mat = np.vstack(v.to_numpy())
-        # dim-by-dim accumulation: oracle-exact sign bits (see docstring)
-        acc = np.zeros((len(mat), planes.shape[0]))
-        for i in range(mat.shape[1]):
-            acc += mat[:, i : i + 1] * planes[:, i]
-        bits = (acc >= 0).astype(np.int64)
-        bits = bits.reshape(len(mat), num_tables, num_planes)
-        codes = (bits * weights).sum(axis=2) + offsets
-        return pd.Series(codes.tolist())
-
-    def bucketed(prepared: DataFrame, prefix: str) -> DataFrame:
-        p = _augmented(prepared, prefix, F.lit(max_norm))
-        return p.select(
-            f"{prefix}_id",
-            f"{prefix}_vec",
-            F.explode(buckets(F.col(f"{prefix}_aug"))).alias("bucket"),
+    def bucketed(side: DataFrame, prefix: str):
+        return _augmented(side, prefix, F.lit(max_norm)), hyperplane_buckets(
+            F.col(f"{prefix}_aug"),
+            num_tables,
+            num_planes,
+            dim + 1,
+            seed,
+            plane_source=plane_source,
         )
 
-    qb = bucketed(q_prep, "q")
-    cb = bucketed(prep_n, "n")
-    # ids-only candidate dedup + vector re-join — same scale fix as
-    # cosine_topk_lsh (the wide dedup shuffle OOM'd on degenerate
-    # buckets; see the comment there).
-    cands = (
-        cb.select("n_id", "bucket")
-        .join(F.broadcast(qb.select("q_id", "bucket")), "bucket")
-        .where(F.col("q_id") != F.col("n_id"))
-        .select("q_id", "n_id")
-        .dropDuplicates(["q_id", "n_id"])
-    )
-    scored = cands.join(prep_n, "n_id").join(F.broadcast(q_prep), "q_id")
-    w = Window.partitionBy("q_id").orderBy(F.col("_dp").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("_dp", dot_arrow(F.col("q_vec"), F.col("n_vec")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "n_id",
-            F.round(F.col("_dp"), 4).alias("dotp"),
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _lsh_topk(prep_n, q_prep, bucketed, dot_arrow, k, "dotp")
 
 
 # ---------------------------------------------------------------------------
@@ -952,20 +943,12 @@ def cosine_topk_ivf(
         .withColumn("probes", _ranked_centroids(F.col("q_vec"), cents, nprobe))
         .select("q_id", "q_vec", F.explode("probes").alias("cid"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("_cos").desc(), F.col("n_id"))
-    return (
+    scored = (
         e.join(F.broadcast(q), "cid")
         .where(F.col("q_id") != F.col("n_id"))
         .withColumn("_cos", cosine_arrow(F.col("q_vec"), F.col("n_vec")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "n_id",
-            F.round(F.col("_cos"), 4).alias("cosine"),
-            F.col("rank").cast("bigint").alias("rank"),
-        )
     )
+    return _top_k(scored, "_cos", k, "cosine")
 
 
 # ---------------------------------------------------------------------------
@@ -1205,25 +1188,16 @@ def cosine_topk_ivf_hier(
         "cid", F.try_element_at(_ranked_cells_hier(F.col("n_vec"), mdl, 1), F.lit(1))
     )
     q = (
-        prep.filter(F.col("n_id") < num_queries)
-        .select(F.col("n_id").alias("q_id"), F.col("n_vec").alias("q_vec"))
+        _query_side(prep, None, num_queries)
         .withColumn("probes", _ranked_cells_hier(F.col("q_vec"), mdl, nprobe))
         .select("q_id", "q_vec", F.explode("probes").alias("cid"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("_cos").desc(), F.col("n_id"))
-    return (
+    scored = (
         e.join(F.broadcast(q), "cid")
         .where(F.col("q_id") != F.col("n_id"))
         .withColumn("_cos", cosine_arrow(F.col("q_vec"), F.col("n_vec")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "n_id",
-            F.round(F.col("_cos"), 4).alias("cosine"),
-            F.col("rank").cast("bigint").alias("rank"),
-        )
     )
+    return _top_k(scored, "_cos", k, "cosine")
 
 
 def knn_label_vote(
@@ -1319,17 +1293,7 @@ def hash_embed_search(
             cosine_arrow(F.col("q_vec"), F.col("n_vec")).alias("_cos"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("_cos").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "n_id",
-            F.round(F.col("_cos"), 4).alias("cosine"),
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _top_k(scored, "_cos", k, "cosine")
 
 
 def hard_negatives(
@@ -1376,16 +1340,6 @@ def hard_negatives(
             cosine_arrow(F.col("q_vec"), F.col("n_vec")).alias("_cos"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("_cos").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "q_label",
-            "n_id",
-            "n_label",
-            F.round(F.col("_cos"), 4).alias("cosine"),
-            F.col("rank").cast("bigint").alias("rank"),
-        )
+    return _top_k(
+        scored, "_cos", k, "cosine", cols=("q_id", "q_label", "n_id", "n_label")
     )

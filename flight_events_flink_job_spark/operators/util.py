@@ -55,17 +55,23 @@ def pinned_partitions(sess) -> int:
     return par
 
 
+def _known_size(df: DataFrame) -> int | None:
+    """The optimizer's size estimate of ``df`` in bytes, or None for the
+    unknown-size sentinel: non-file-backed plans (createDataFrame over
+    an RDD, a Kafka source) report ``spark.sql.defaultSizeInBytes``
+    (Long.MaxValue). A stats call that fails raises."""
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return size if 0 <= size < (1 << 50) else None
+
+
 def plan_size(df: DataFrame) -> int | None:
     """The optimizer's size estimate of ``df`` in bytes, or None when it
-    is unknown: non-file-backed plans (createDataFrame over an RDD, a
-    Kafka source) report the ``spark.sql.defaultSizeInBytes`` sentinel
-    (Long.MaxValue), and a stats call that raises says nothing either.
+    is unknown: the unknown-size sentinel, or a stats call that raises.
     Callers treat None as "take the safe plan"."""
     try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        return _known_size(df)
     except Exception:
         return None
-    return size if 0 <= size < (1 << 50) else None
 
 
 # Eager-checkpoint budget for multi-consumer intermediate frames. Local
@@ -97,7 +103,10 @@ def checkpoint_small(df: DataFrame, probe: DataFrame | None = None) -> DataFrame
     plans (non-file-backed: createDataFrame, prior checkpoints)
     checkpoint unconditionally — at the 100 TB design point every
     corpus frame is file-backed, so the unknown case is test/driver
-    scale by construction.
+    scale by construction. A stats call that RAISES says nothing about
+    the size, so the gate fails closed: ``df`` comes back unchanged
+    (lazy sharing) rather than eagerly materializing a frame that may
+    be corpus-scale.
     """
     try:
         budget = int(
@@ -109,7 +118,10 @@ def checkpoint_small(df: DataFrame, probe: DataFrame | None = None) -> DataFrame
         # A malformed budget degrades to the default, not a crash in
         # every gated operator at plan-construction time.
         budget = CHECKPOINT_BUDGET_DEFAULT
-    size = plan_size(probe if probe is not None else df)
+    try:
+        size = _known_size(probe if probe is not None else df)
+    except Exception:
+        return df
     if size is not None and size > budget:
         return df
     return df.localCheckpoint(eager=True)

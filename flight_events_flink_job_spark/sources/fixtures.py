@@ -15,8 +15,6 @@ from pyspark.sql import functions as F
 
 from ..schemas import FIXTURE_TABLES
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 # ---------------------------------------------------------------------------
 # Bronze-boundary ingest contract (round-5 adversarial hardening).
 #
@@ -74,10 +72,6 @@ EMBEDDINGS_VIEW_SQL = (
     " AS FLOAT) FOR x IN embedding] AS embedding, "
     "label FROM read_parquet('{path}')"
 )
-
-
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
 
 
 def fixture_token(sf_dir: str, table: str = "documents") -> tuple:

@@ -12,7 +12,8 @@ shape specialised to MIPS): both sides are the production operators,
 the comparison is two k-row-per-query tables.
 
 Usage: python tools/mips_recall.py [out_json] [fixture_base]
-Reads the run_mips_curve_r9.sh fixtures: uniform at sf40 (800k
+Reads the fixtures tools/scale_bench.py generates (--emb-mode uniform /
+clustered, --tables embeddings): uniform at sf40 (800k
 vectors), clustered at sf10 (200k — the degenerate-bucket regime
 admits ~half the corpus per query, so the exact-side join volume is
 bounded deliberately; wall cost at 800k clustered is in the scale
