@@ -7,15 +7,17 @@ The reference LOG.info's every record at receive / parse / delayed-check
 anti-pattern; the Spark-native equivalent is ``df.observe`` — metrics
 are computed executor-side inside the existing codegen stage (zero
 extra pass, zero shuffle) and surfaced per action (batch
-``Observation``) or per micro-batch (``StreamingQueryProgress
-.observedMetrics``).
+``Observation``) or per micro-batch: the streaming fan-out
+(streaming/job.py) taps every parsed micro-batch as ``parse_metrics``,
+and readers take it straight off the query's progress
+(``query.recentProgress[i].observedMetrics["parse_metrics"]``) — no
+listener to register.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQueryListener
 
 def parse_metrics() -> tuple:
     """Aggregate expressions mirroring what the reference's log lines
@@ -41,27 +43,3 @@ def observe_parse(parsed: DataFrame, observation: Observation | str) -> DataFram
     event's ``observedMetrics[name]``).
     """
     return parsed.observe(observation, *parse_metrics())
-
-
-class LogTapListener(StreamingQueryListener):
-    """Streaming listener that logs observed parse metrics per batch —
-    the greppable operational signal the reference gets from per-record
-    LOG.info, at per-micro-batch cost instead of per-record."""
-
-    def __init__(self, metric_name: str = "parse_metrics") -> None:
-        self.metric_name = metric_name
-        self.history: list[dict] = []
-
-    def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API)
-        pass
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        row = event.progress.observedMetrics.get(self.metric_name)
-        if row is not None:
-            self.history.append(row.asDict())
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass

@@ -61,6 +61,21 @@ BENCH_SKIP = {
 }
 
 
+def _stage_events(
+    spark: SparkSession, sf_dir: str, prefix: str, with_event_id: bool = False
+) -> tuple[str, str, DataFrame]:
+    """Stage the events fixture as 4 parquet parts under a fresh temp
+    dir: (staging dir, checkpoint dir, the staged frame). The columns
+    are (event_id,) user_id, ts, event_type, value."""
+    base = tempfile.mkdtemp(prefix=prefix)
+    cols = ["user_id", "ts", "event_type", "value"]
+    if with_event_id:
+        cols.insert(0, "event_id")
+    ev = load_table(spark, sf_dir, "events").select(*cols).repartition(4)
+    ev.write.mode("overwrite").parquet(f"{base}/in")
+    return f"{base}/in", f"{base}/ckpt", ev
+
+
 @register("streaming_airline_stats", oracle=ORACLES["airline_delay_stats"])
 def q_streaming_airline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch/stream parity, driver-checked: availableNow drain of the
@@ -196,11 +211,7 @@ def q_user_activity_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate-limited micro-batches must equal the batch aggregate — the
     snapshot keeps only the batch-order-independent fields, so the SQL
     oracle is exact (streak semantics are pytest-covered)."""
-    base = tempfile.mkdtemp(prefix="stateful_roundtrip_")
-    staging, ckpt = f"{base}/in", f"{base}/ckpt"
-    load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_type", "value"
-    ).repartition(4).write.mode("overwrite").parquet(staging)
+    staging, ckpt, _ = _stage_events(spark, sf_dir, "stateful_roundtrip_")
     return user_activity_from_staged(spark, staging, ckpt, files_per_trigger=2)
 
 
@@ -216,11 +227,7 @@ def q_user_activity_state_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/stateful.py UserActivityProcessor)."""
     from ..streaming.stateful import user_activity_from_staged_v2
 
-    base = tempfile.mkdtemp(prefix="stateful_v2_roundtrip_")
-    staging, ckpt = f"{base}/in", f"{base}/ckpt"
-    load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_type", "value"
-    ).repartition(4).write.mode("overwrite").parquet(staging)
+    staging, ckpt, _ = _stage_events(spark, sf_dir, "stateful_v2_roundtrip_")
     return user_activity_from_staged_v2(
         spark, staging, ckpt, files_per_trigger=2
     )
@@ -247,11 +254,9 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermarked stream-stream join over micro-batches must equal the
     batch range join exactly (over-wide watermark -> lossless drain;
     see streaming/joins.py determinism contract)."""
-    base = tempfile.mkdtemp(prefix="stream_join_")
-    staging, ckpt = f"{base}/in", f"{base}/ckpt"
-    load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts", "event_type", "value"
-    ).repartition(4).write.mode("overwrite").parquet(staging)
+    staging, ckpt, _ = _stage_events(
+        spark, sf_dir, "stream_join_", with_event_id=True
+    )
     return drain_conversions_from_staged(spark, staging, ckpt)
 
 
@@ -266,12 +271,9 @@ def q_stream_dedup_redelivery(spark: SparkSession, sf_dir: str) -> DataFrame:
     TWICE (redelivery twin-files in different micro-batches), drained
     through dropDuplicatesWithinWatermark -> exactly the batch DISTINCT
     (see streaming/dedup.py determinism contract)."""
-    base = tempfile.mkdtemp(prefix="stream_dedup_")
-    staging, ckpt = f"{base}/in", f"{base}/ckpt"
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts", "event_type", "value"
-    ).repartition(4)
-    ev.write.mode("overwrite").parquet(staging)
+    staging, ckpt, ev = _stage_events(
+        spark, sf_dir, "stream_dedup_", with_event_id=True
+    )
     # Redelivery: a second full copy, as distinct files the rate limit
     # pushes into later micro-batches.
     ev.write.mode("append").parquet(staging)
@@ -284,11 +286,7 @@ def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-checked against the SAME gaps-and-islands oracle as the
     batch user_sessions — batch/stream parity for sessionization
     (complete-mode lossless drain; see streaming/sessions.py)."""
-    base = tempfile.mkdtemp(prefix="stream_sessions_")
-    staging, ckpt = f"{base}/in", f"{base}/ckpt"
-    load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_type", "value"
-    ).repartition(4).write.mode("overwrite").parquet(staging)
+    staging, ckpt, _ = _stage_events(spark, sf_dir, "stream_sessions_")
     return drain_sessions_from_staged(spark, staging, ckpt)
 
 
@@ -299,11 +297,7 @@ def q_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension with NO join state, then the complete-mode lossless drain
     aggregates per (segment, type) — batch/stream parity for the
     enrichment join the reference implies but never implements."""
-    base = tempfile.mkdtemp(prefix="stream_enrich_")
-    staging, ckpt = f"{base}/in", f"{base}/ckpt"
-    load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_type", "value"
-    ).repartition(4).write.mode("overwrite").parquet(staging)
+    staging, ckpt, _ = _stage_events(spark, sf_dir, "stream_enrich_")
     return drain_enriched_from_staged(
         spark, staging, ckpt, load_table(spark, sf_dir, "customer")
     )

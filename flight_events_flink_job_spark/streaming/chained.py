@@ -31,8 +31,12 @@ state-merge order cannot move any digit (the dec_sum rationale).
 
 from __future__ import annotations
 
+import datetime as dt
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .roundtrip import drain, stage_time_ranges, staged_stream
 
 CHAINED_SCHEMA = "user_id long, ts timestamp, event_type string, value double"
 SENTINEL_TYPE = "~watermark-sentinel~"
@@ -75,27 +79,16 @@ def stage_time_ordered(
     spark: SparkSession, events: DataFrame, staging_dir: str, parts: int = 4
 ) -> None:
     """Write ``events`` as ``parts`` contiguous-time-range parquet
-    files in ascending event-time order (sequential commits give the
-    file source ascending modification times), then the watermark
-    sentinel as the final file."""
-    sel = events.select("user_id", "ts", "event_type", "value")
-    lo, hi = sel.agg(F.min("ts"), F.max("ts")).collect()[0]
-    span = (hi - lo) / parts
-    for i in range(parts):
-        lower = lo + span * i
-        upper = lo + span * (i + 1)
-        rng = sel.filter(
-            (F.col("ts") >= F.lit(lower))
-            & ((F.col("ts") < F.lit(upper)) if i < parts - 1 else F.lit(True))
-        )
-        rng.coalesce(1).write.mode("append").parquet(staging_dir)
-    import datetime as dt
-
-    sentinel = spark.createDataFrame(
-        [(int(-1), hi + dt.timedelta(hours=2), SENTINEL_TYPE, float(0.0))],
-        CHAINED_SCHEMA,
+    files in ascending event-time order, then the watermark sentinel
+    (2 hours past the corpus maximum) as the final file."""
+    stage_time_ranges(
+        spark,
+        events,
+        staging_dir,
+        ("user_id", "ts", "event_type", "value"),
+        parts,
+        lambda hi: [(-1, hi + dt.timedelta(hours=2), SENTINEL_TYPE, 0.0)],
     )
-    sentinel.coalesce(1).write.mode("append").parquet(staging_dir)
 
 
 def drain_chained_from_staged(
@@ -108,25 +101,7 @@ def drain_chained_from_staged(
     file per micro-batch (strict event-time replay) and return every
     append-mode emission. The sentinel's windows never finalize, so
     only real rows appear; the filter is belt-and-braces."""
-    stream = (
-        spark.readStream.schema(CHAINED_SCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(staging_dir)
-    )
-    out_dir = f"{checkpoint_dir}_out"
-
-    def append_batch(batch_df: DataFrame, _epoch: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    q = (
-        chained_hourly_rollup(stream)
-        .writeStream.outputMode("append")
-        .foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).filter(
+    stream = staged_stream(spark, CHAINED_SCHEMA, staging_dir, files_per_trigger)
+    return drain(chained_hourly_rollup(stream), checkpoint_dir, "append").filter(
         F.col("event_type") != SENTINEL_TYPE
     )

@@ -23,9 +23,9 @@ exactly one row per distinct event_id — the batch ``DISTINCT``.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
+
+from .roundtrip import drain, staged_stream
 
 
 def dedup_stream(events: DataFrame, key: str, ts_col: str, watermark: str) -> DataFrame:
@@ -44,24 +44,16 @@ def drain_deduped_from_staged(
     files_per_trigger: int = 2,
 ) -> DataFrame:
     """Stream the staged (duplicated) event files in rate-limited
-    micro-batches through the dedup operator; availableNow drain into a
-    memory sink (append — a first occurrence is final when seen)."""
+    micro-batches through the dedup operator and drain them (append —
+    a first occurrence is final when seen)."""
     from .stateful import EVENT_STREAM_SCHEMA
 
-    stream = (
-        spark.readStream.schema("event_id LONG, " + EVENT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(staging_dir)
+    stream = staged_stream(
+        spark, "event_id LONG, " + EVENT_STREAM_SCHEMA, staging_dir,
+        files_per_trigger,
     )
-    name = f"deduped_{uuid.uuid4().hex}"
-    query = (
-        dedup_stream(stream, "event_id", "ts", watermark="60 DAYS")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return drain(
+        dedup_stream(stream, "event_id", "ts", watermark="60 DAYS"),
+        checkpoint_dir,
+        "append",
     )
-    query.awaitTermination()
-    return spark.table(name)

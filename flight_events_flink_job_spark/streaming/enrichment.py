@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .roundtrip import drain, staged_stream
+
 EVENT_ENRICH_SCHEMA = "user_id long, ts timestamp, event_type string, value double"
 
 
@@ -62,23 +64,7 @@ def drain_enriched_from_staged(
 ) -> DataFrame:
     """Drain staged event parts through the stream-static enrichment in
     rate-limited micro-batches and return the final aggregate."""
-    stream = (
-        spark.readStream.schema(EVENT_ENRICH_SCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(staging_dir)
+    stream = staged_stream(
+        spark, EVENT_ENRICH_SCHEMA, staging_dir, files_per_trigger
     )
-    out_dir = f"{checkpoint_dir}_out"
-
-    def overwrite_snapshot(batch_df: DataFrame, _epoch: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out_dir)
-
-    q = (
-        enrich_stream(stream, customer)
-        .writeStream.outputMode("complete")
-        .foreachBatch(overwrite_snapshot)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return drain(enrich_stream(stream, customer), checkpoint_dir, "complete")

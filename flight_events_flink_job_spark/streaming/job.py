@@ -119,19 +119,32 @@ def run_file_stream(
     — the deterministic test/backfill mode. Drop the trigger for a
     continuous tail of an arriving directory (or the Kafka twin).
     """
-    # P8 log taps: per-micro-batch observed metrics instead of the
-    # reference's per-record LOG.info (see observability.py).
-    parsed = observe_parse(
-        parse_flight_events(_text_stream(spark, source_dir, max_files_per_trigger)),
-        "parse_metrics",
+    return _start_fanout(
+        _text_stream(spark, source_dir, max_files_per_trigger),
+        warehouse_dir,
+        checkpoint_dir,
+        available_now=True,
+        await_termination=await_termination,
     )
 
-    query = (
-        parsed.writeStream.foreachBatch(make_fanout_batch(warehouse_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+
+def _start_fanout(
+    raw: DataFrame,
+    warehouse_dir: str,
+    checkpoint_dir: str,
+    available_now: bool,
+    await_termination: bool,
+) -> StreamingQuery:
+    """Parse a raw ``value`` stream, tap it with the P8 parse metrics
+    (see observability.py) and fan out each micro-batch. The file twin
+    drains what is there (``available_now``); Kafka tails the topic."""
+    parsed = observe_parse(parse_flight_events(raw), "parse_metrics")
+    writer = parsed.writeStream.foreachBatch(
+        make_fanout_batch(warehouse_dir)
+    ).option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    query = writer.start()
     if await_termination:
         query.awaitTermination()
     return query
@@ -313,16 +326,13 @@ def run_kafka_stream(
     """
     from ..sources.kafka import DEFAULT_BOOTSTRAP, kafka_events
 
-    raw = kafka_events(spark, bootstrap or DEFAULT_BOOTSTRAP)
-    parsed = observe_parse(parse_flight_events(raw), "parse_metrics")
-    query = (
-        parsed.writeStream.foreachBatch(make_fanout_batch(warehouse_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _start_fanout(
+        kafka_events(spark, bootstrap or DEFAULT_BOOTSTRAP),
+        warehouse_dir,
+        checkpoint_dir,
+        available_now=False,
+        await_termination=await_termination,
     )
-    if await_termination:
-        query.awaitTermination()
-    return query
 
 
 def streaming_airline_stats_watermarked(

@@ -27,10 +27,10 @@ changes resource usage and late-data tolerance, not the join logic.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .roundtrip import drain, staged_stream
 
 
 def interval_join(
@@ -94,29 +94,18 @@ def drain_conversions_from_staged(
 ) -> DataFrame:
     """Run the conversion interval join as a real stream-stream join
     over rate-limited micro-batches of the staged events, drained with
-    availableNow into a memory sink (append mode — inner-join matches
-    are final the moment they are found)."""
+    availableNow (append mode — inner-join matches are final the moment
+    they are found)."""
     from .stateful import EVENT_STREAM_SCHEMA
 
     def side(event_type: str) -> DataFrame:
-        return (
-            spark.readStream.schema(
-                "event_id LONG, " + EVENT_STREAM_SCHEMA
-            )
-            .option("maxFilesPerTrigger", files_per_trigger)
-            .parquet(staging_dir)
-            .where(F.col("event_type") == event_type)
-        )
+        return staged_stream(
+            spark, "event_id LONG, " + EVENT_STREAM_SCHEMA, staging_dir,
+            files_per_trigger,
+        ).where(F.col("event_type") == event_type)
 
-    name = f"conversions_{uuid.uuid4().hex}"
-    query = (
-        signup_purchase_conversions(side("signup"), side("purchase"))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return drain(
+        signup_purchase_conversions(side("signup"), side("purchase")),
+        checkpoint_dir,
+        "append",
     )
-    query.awaitTermination()
-    return spark.table(name)

@@ -28,10 +28,11 @@ steady-state size = rate x interval regardless of stream length.
 from __future__ import annotations
 
 import datetime as dt
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .roundtrip import drain, stage_time_ranges, staged_stream
 
 JOIN_STAGE_SCHEMA = (
     "event_id long, user_id long, ts timestamp, event_type string, value double"
@@ -79,26 +80,17 @@ def stage_join_input(
     """Contiguous-time-range staging (ascending commits) + one sentinel
     per join side at max_ts + 7 hours (past the 6-hour match deadline
     of every real signup)."""
-    sel = events.select("event_id", "user_id", "ts", "event_type", "value")
-    lo, hi = sel.agg(F.min("ts"), F.max("ts")).collect()[0]
-    span = (hi - lo) / parts
-    for i in range(parts):
-        lower = lo + span * i
-        upper_b = lo + span * (i + 1)
-        rng = sel.filter(
-            (F.col("ts") >= F.lit(lower))
-            & ((F.col("ts") < F.lit(upper_b)) if i < parts - 1 else F.lit(True))
-        )
-        rng.coalesce(1).write.mode("append").parquet(staging_dir)
-    far = hi + dt.timedelta(hours=7)
-    sentinels = spark.createDataFrame(
-        [
-            (int(-10), SENTINEL_USER, far, "signup", 0.0),
-            (int(-11), SENTINEL_USER, far, "purchase", 0.0),
+    stage_time_ranges(
+        spark,
+        events,
+        staging_dir,
+        ("event_id", "user_id", "ts", "event_type", "value"),
+        parts,
+        lambda hi: [
+            (-10, SENTINEL_USER, hi + dt.timedelta(hours=7), "signup", 0.0),
+            (-11, SENTINEL_USER, hi + dt.timedelta(hours=7), "purchase", 0.0),
         ],
-        JOIN_STAGE_SCHEMA,
     )
-    sentinels.coalesce(1).write.mode("append").parquet(staging_dir)
 
 
 def drain_left_join_from_staged(
@@ -112,22 +104,12 @@ def drain_left_join_from_staged(
     pair."""
 
     def side(event_type: str) -> DataFrame:
-        return (
-            spark.readStream.schema(JOIN_STAGE_SCHEMA)
-            .option("maxFilesPerTrigger", files_per_trigger)
-            .parquet(staging_dir)
-            .where(F.col("event_type") == event_type)
-        )
+        return staged_stream(
+            spark, JOIN_STAGE_SCHEMA, staging_dir, files_per_trigger
+        ).where(F.col("event_type") == event_type)
 
-    name = f"left_conversions_{uuid.uuid4().hex}"
-    query = (
-        signup_purchase_left_join(side("signup"), side("purchase"))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name).filter(F.col("user_id") != SENTINEL_USER)
+    return drain(
+        signup_purchase_left_join(side("signup"), side("purchase")),
+        checkpoint_dir,
+        "append",
+    ).filter(F.col("user_id") != SENTINEL_USER)

@@ -1,0 +1,99 @@
+"""The plumbing every staged streaming round trip shares.
+
+A round trip stages files, replays them as a rate-limited stream,
+drains that stream with an availableNow trigger and compares the
+result with a batch oracle (the batch/stream parity stance, SURVEY.md
+§7). :func:`staged_stream` is its one file source, :func:`drain` its
+one sink and :func:`stage_time_ranges` its one event-time-ordered
+stager.
+
+The sink follows from the output mode alone (Watermarks in Stream
+Processing Systems, VLDB 2021, PAPERS.md): append emits final rows and
+update emits a changelog, so both append every micro-batch; complete
+emits the whole result table each time, so it overwrites and keeps the
+last snapshot. Every drain writes parquet through ``foreachBatch`` to
+``{checkpoint_dir}_out`` and reads it back under the stream's own
+schema, so the result stays distributed (no driver-side memory sink)
+and the read runs no schema-inference job. Rows persist across drains
+on one checkpoint: a resumed drain returns the earlier drains' rows
+with its own. A micro-batch replayed after a crash appends again; the
+round trips drain once from a fresh checkpoint.
+"""
+
+from __future__ import annotations
+
+import datetime as dt
+from collections.abc import Callable, Sequence
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+
+def staged_stream(
+    spark: SparkSession, schema: str, staging_dir: str, files_per_trigger: int
+) -> DataFrame:
+    """The staged parquet files as a stream of ``files_per_trigger``
+    files per micro-batch, under the declared ``schema``."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", files_per_trigger)
+        .parquet(staging_dir)
+    )
+
+
+def drain(df: DataFrame, checkpoint_dir: str, output_mode: str) -> DataFrame:
+    """Run the streaming frame ``df`` to completion (availableNow) and
+    return what it emitted: every row in append and update mode, the
+    last snapshot in complete mode (see the module docstring)."""
+    spark = df.sparkSession
+    out_dir = f"{checkpoint_dir}_out"
+    write_mode = "overwrite" if output_mode == "complete" else "append"
+
+    def write_batch(batch_df: DataFrame, _epoch: int) -> None:
+        batch_df.write.mode(write_mode).parquet(out_dir)
+
+    (
+        df.writeStream.outputMode(output_mode)
+        .foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    path = spark._jvm.org.apache.hadoop.fs.Path(out_dir)
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
+        # No micro-batch ran (nothing staged): an empty result.
+        return spark.createDataFrame([], df.schema)
+    return spark.read.schema(df.schema).parquet(out_dir)
+
+
+def stage_time_ranges(
+    spark: SparkSession,
+    events: DataFrame,
+    staging_dir: str,
+    cols: Sequence[str],
+    parts: int,
+    sentinels: Callable[[dt.datetime], list[tuple]],
+) -> None:
+    """Write ``events[cols]`` as ``parts`` contiguous ts ranges, one
+    parquet file each in ascending event-time order (sequential commits
+    give the file source ascending modification times, so a 0-delay
+    watermark never classifies a row late), then ``sentinels(max_ts)``
+    as the final file — rows far enough past the corpus to push the
+    watermark beyond every real window or match deadline."""
+    sel = events.select(*cols)
+    lo, hi = sel.agg(F.min("ts"), F.max("ts")).collect()[0]
+    span = (hi - lo) / parts
+    for i in range(parts):
+        rng = sel.filter(
+            (F.col("ts") >= F.lit(lo + span * i))
+            & (
+                (F.col("ts") < F.lit(lo + span * (i + 1)))
+                if i < parts - 1
+                else F.lit(True)
+            )
+        )
+        rng.coalesce(1).write.mode("append").parquet(staging_dir)
+    spark.createDataFrame(sentinels(hi), sel.schema).coalesce(1).write.mode(
+        "append"
+    ).parquet(staging_dir)

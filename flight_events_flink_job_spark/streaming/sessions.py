@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .roundtrip import drain, staged_stream
+
 EVENT_SESSION_SCHEMA = "user_id long, ts timestamp, event_type string, value double"
 
 
@@ -71,27 +73,8 @@ def drain_sessions_from_staged(
 ) -> DataFrame:
     """Drain staged parquet parts through the streaming sessionizer in
     rate-limited micro-batches (availableNow) and return the final
-    session table."""
-    stream = (
-        spark.readStream.schema(EVENT_SESSION_SCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(staging_dir)
+    session table (complete mode: the last snapshot)."""
+    stream = staged_stream(
+        spark, EVENT_SESSION_SCHEMA, staging_dir, files_per_trigger
     )
-    out_dir = f"{checkpoint_dir}_out"
-
-    def overwrite_snapshot(batch_df: DataFrame, _epoch: int) -> None:
-        # Complete mode hands the FULL session table each epoch; the
-        # parquet overwrite keeps the result distributed end to end (no
-        # driver-side collect, unlike a memory sink).
-        batch_df.write.mode("overwrite").parquet(out_dir)
-
-    q = (
-        sessionize_stream(stream, gap)
-        .writeStream.outputMode("complete")
-        .foreachBatch(overwrite_snapshot)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return drain(sessionize_stream(stream, gap), checkpoint_dir, "complete")

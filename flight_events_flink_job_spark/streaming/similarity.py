@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_arrow, to_double
+from .roundtrip import drain, staged_stream
 
 # Staged-parquet twin of the embeddings fixture (post ingest-contract).
 EMB_SCHEMA = "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
@@ -67,25 +68,12 @@ def drain_radius_from_staged(
     files_per_trigger: int = 2,
 ) -> DataFrame:
     """Drain staged embedding parts through the radius alert stream in
-    rate-limited micro-batches (append-mode parquet sink — the exactly-
-    once file-sink path) and return everything emitted."""
-    stream = (
-        spark.readStream.schema(EMB_SCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(staging_dir)
+    rate-limited micro-batches (append mode: each micro-batch's alerts
+    are final when emitted) and return everything emitted."""
+    stream = staged_stream(spark, EMB_SCHEMA, staging_dir, files_per_trigger)
+    return drain(
+        radius_alert_stream(stream, queries, threshold), checkpoint_dir, "append"
     )
-    out_dir = f"{checkpoint_dir}_out"
-    q = (
-        radius_alert_stream(stream, queries, threshold)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir)
 
 
 def drain_ivfpq_queries_from_staged(
@@ -122,11 +110,7 @@ def drain_ivfpq_queries_from_staged(
 
     from ..operators.clustering import ivf_pq_query
 
-    stream = (
-        spark.readStream.schema(EMB_SCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(staging_dir)
-    )
+    stream = staged_stream(spark, EMB_SCHEMA, staging_dir, files_per_trigger)
     out_dir = f"{checkpoint_dir}_out"
 
     def serve(batch_df: DataFrame, batch_id: int) -> None:

@@ -26,10 +26,7 @@ with an empty batch iterator exactly like Flink timers.
 
 from __future__ import annotations
 
-import os
-import sys
-import uuid
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -37,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..session import rocksdb_state_store
+from .roundtrip import drain, staged_stream
 
 STATE_SCHEMA = (
     "n_events LONG, sum_value DOUBLE, last_ts TIMESTAMP, "
@@ -48,24 +46,23 @@ OUTPUT_SCHEMA = (
 )
 
 
-def _update_user(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Transition function: fold this batch's events (in event-time
-    order) into the running per-user state, emit the updated record.
+_NO_ACTIVITY = (0, 0.0, None, None, 0)
+
+
+def _fold_activity(state: tuple, chunks: Iterable[pd.DataFrame]) -> tuple:
+    """Fold one micro-batch of a user's events, in event-time order,
+    into the (n_events, sum_value, last_ts, last_type, streak) state;
+    return the new state.
 
     The whole micro-batch is materialized and concat-sorted BEFORE the
-    fold: applyInPandasWithState may deliver one key's batch as several
+    fold: both state APIs may deliver one key's batch as several
     unordered pandas chunks, and a per-chunk sort would fold chunks in
     arrival order, corrupting the order-dependent streak/last_type
     transition (round-2 ADVICE). State is O(1) per key either way; the
     transient batch materialization is bounded by the micro-batch size.
     """
-    if state.exists:
-        n_events, sum_value, last_ts, last_type, streak = state.get
-    else:
-        n_events, sum_value, last_ts, last_type, streak = 0, 0.0, None, None, 0
-    chunks = [c for c in pdfs if len(c)]
+    n_events, sum_value, last_ts, last_type, streak = state
+    chunks = [c for c in chunks if len(c)]
     if chunks:
         pdf = pd.concat(chunks, ignore_index=True).sort_values(
             "ts", kind="mergesort"
@@ -78,8 +75,13 @@ def _update_user(
         batch_last = pdf["ts"].iloc[-1].to_pydatetime()
         if last_ts is None or batch_last > last_ts:
             last_ts = batch_last
-    state.update((n_events, sum_value, last_ts, last_type, streak))
-    yield pd.DataFrame(
+    return (n_events, sum_value, last_ts, last_type, streak)
+
+
+def _activity_row(key: tuple, state: tuple) -> pd.DataFrame:
+    """The one-row emission for a user's updated activity state."""
+    n_events, sum_value, last_ts, last_type, streak = state
+    return pd.DataFrame(
         {
             "user_id": [key[0]],
             "n_events": [n_events],
@@ -89,6 +91,16 @@ def _update_user(
             "streak": [streak],
         }
     )
+
+
+def _update_user(
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """Transition function: fold this batch's events into the running
+    per-user state, emit the updated record."""
+    new = _fold_activity(state.get if state.exists else _NO_ACTIVITY, pdfs)
+    state.update(new)
+    yield _activity_row(key, new)
 
 
 def track_user_activity(events: DataFrame) -> DataFrame:
@@ -111,20 +123,9 @@ def drain_user_activity(
     events: DataFrame, checkpoint_dir: str
 ) -> DataFrame:
     """Run the stateful tracker over a STREAMING events frame to
-    completion (availableNow) into a memory sink; return ALL update-mode
-    emissions (one row per user per micro-batch the user appeared in)."""
-    name = f"user_activity_{uuid.uuid4().hex}"
-    query = (
-        track_user_activity(events)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return events.sparkSession.table(name)
+    completion (availableNow); return ALL update-mode emissions (one
+    row per user per micro-batch the user appeared in)."""
+    return drain(track_user_activity(events), checkpoint_dir, "update")
 
 
 def final_user_state(updates: DataFrame) -> DataFrame:
@@ -161,10 +162,8 @@ def user_activity_from_staged(
     """File-source twin of the Kafka deployment: stream staged parquet
     parts in rate-limited micro-batches through the stateful tracker,
     then snapshot the final per-user state."""
-    stream = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(staging_dir)
+    stream = staged_stream(
+        spark, EVENT_STREAM_SCHEMA, staging_dir, files_per_trigger
     )
     return final_user_state(drain_user_activity(stream, checkpoint_dir))
 
@@ -175,6 +174,31 @@ def user_activity_from_staged(
 
 EXPIRE_OUTPUT_SCHEMA = "user_id LONG, n_events LONG, expired BOOLEAN"
 EXPIRE_STATE_SCHEMA = "n_events LONG"
+
+
+def _fold_expiry(
+    n_events: int, chunks: Iterable[pd.DataFrame], gap_ms: int
+) -> tuple[int, int | None]:
+    """Count one micro-batch of a user's events into ``n_events``;
+    return the new count and the timer deadline in epoch millis —
+    (max event time in the batch) + gap — or None for an empty batch,
+    which leaves the armed timer as it is."""
+    max_ts = None
+    for c in chunks:
+        if len(c):
+            n_events += len(c)
+            m = c["ts"].max()
+            max_ts = m if max_ts is None else max(max_ts, m)
+    if max_ts is None:
+        return n_events, None
+    return n_events, int(max_ts.timestamp() * 1000) + gap_ms
+
+
+def _expiry_row(key: tuple, n_events: int, expired: bool) -> pd.DataFrame:
+    """A live update (``expired=False``) or the tombstone of a user."""
+    return pd.DataFrame(
+        {"user_id": [key[0]], "n_events": [n_events], "expired": [expired]}
+    )
 
 
 def _make_expire_fn(gap_seconds: int):
@@ -195,25 +219,15 @@ def _make_expire_fn(gap_seconds: int):
         if state.hasTimedOut:
             (n_events,) = state.get
             state.remove()
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n_events], "expired": [True]}
-            )
+            yield _expiry_row(key, n_events, True)
             return
-        n_events = state.get[0] if state.exists else 0
-        max_ts = None
-        for c in pdfs:
-            if len(c):
-                n_events += len(c)
-                m = c["ts"].max()
-                max_ts = m if max_ts is None else max(max_ts, m)
-        state.update((n_events,))
-        if max_ts is not None:
-            state.setTimeoutTimestamp(
-                int(max_ts.timestamp() * 1000) + gap_seconds * 1000
-            )
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n_events], "expired": [False]}
+        n_events, deadline = _fold_expiry(
+            state.get[0] if state.exists else 0, pdfs, gap_seconds * 1000
         )
+        state.update((n_events,))
+        if deadline is not None:
+            state.setTimeoutTimestamp(deadline)
+        yield _expiry_row(key, n_events, False)
 
     return _expire
 
@@ -241,20 +255,13 @@ def expire_idle_users(
 def drain_expired_users(
     events: DataFrame, checkpoint_dir: str, gap_seconds: int = 50
 ) -> DataFrame:
-    """availableNow drain of :func:`expire_idle_users` into a memory
-    sink; returns every emission (live updates + expiry tombstones)."""
-    name = f"expire_users_{uuid.uuid4().hex}"
-    query = (
-        expire_idle_users(events, gap_seconds=gap_seconds)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """availableNow drain of :func:`expire_idle_users`; returns every
+    emission (live updates + expiry tombstones)."""
+    return drain(
+        expire_idle_users(events, gap_seconds=gap_seconds),
+        checkpoint_dir,
+        "update",
     )
-    query.awaitTermination()
-    return events.sparkSession.table(name)
 
 
 # ---------------------------------------------------------------------------
@@ -298,36 +305,11 @@ class UserActivityProcessor(StatefulProcessor):
         self._state = handle.getValueState("activity", STATE_SCHEMA)
 
     def handleInputRows(self, key, rows, timerValues):
-        if self._state.exists():
-            n_events, sum_value, last_ts, last_type, streak = self._state.get()
-        else:
-            n_events, sum_value, last_ts, last_type, streak = 0, 0.0, None, None, 0
-        # Concat-sort the whole batch before folding — same multi-chunk
-        # ordering contract as the v1 _update_user above.
-        chunks = [c for c in rows if len(c)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                "ts", kind="mergesort"
-            )
-            n_events += len(pdf)
-            sum_value += float(pdf["value"].sum())
-            for t in pdf["event_type"]:
-                streak = streak + 1 if t == last_type else 1
-                last_type = t
-            batch_last = pdf["ts"].iloc[-1].to_pydatetime()
-            if last_ts is None or batch_last > last_ts:
-                last_ts = batch_last
-        self._state.update((n_events, sum_value, last_ts, last_type, streak))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n_events],
-                "sum_value": [sum_value],
-                "last_ts": [last_ts],
-                "last_type": [last_type],
-                "streak": [streak],
-            }
+        new = _fold_activity(
+            self._state.get() if self._state.exists() else _NO_ACTIVITY, rows
         )
+        self._state.update(new)
+        yield _activity_row(key, new)
 
     def close(self) -> None:
         pass
@@ -373,30 +355,22 @@ class ExpireIdleUsersProcessor(StatefulProcessor):
         self._state = handle.getValueState("n_events", EXPIRE_STATE_SCHEMA)
 
     def handleInputRows(self, key, rows, timerValues):
-        n_events = self._state.get()[0] if self._state.exists() else 0
-        max_ts = None
-        for c in rows:
-            if len(c):
-                n_events += len(c)
-                m = c["ts"].max()
-                max_ts = m if max_ts is None else max(max_ts, m)
+        n_events, deadline = _fold_expiry(
+            self._state.get()[0] if self._state.exists() else 0,
+            rows,
+            self._gap_ms,
+        )
         self._state.update((n_events,))
-        if max_ts is not None:
+        if deadline is not None:
             for t in self._handle.listTimers():
                 self._handle.deleteTimer(t)
-            self._handle.registerTimer(
-                int(max_ts.timestamp() * 1000) + self._gap_ms
-            )
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n_events], "expired": [False]}
-        )
+            self._handle.registerTimer(deadline)
+        yield _expiry_row(key, n_events, False)
 
     def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
         n_events = self._state.get()[0] if self._state.exists() else 0
         self._state.clear()
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n_events], "expired": [True]}
-        )
+        yield _expiry_row(key, n_events, True)
 
     def close(self) -> None:
         pass
@@ -425,24 +399,16 @@ def expire_idle_users_v2(
 def drain_expired_users_v2(
     events: DataFrame, checkpoint_dir: str, gap_seconds: int = 50
 ) -> DataFrame:
-    """availableNow drain of :func:`expire_idle_users_v2` into a memory
-    sink — RocksDB provider toggled exactly as
-    :func:`drain_user_activity_v2` (transformWithState column families
-    need it; it is the right store at scale regardless)."""
-    spark = events.sparkSession
-    with rocksdb_state_store(spark):
-        name = f"expire_users_v2_{uuid.uuid4().hex}"
-        query = (
-            expire_idle_users_v2(events, gap_seconds=gap_seconds)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+    """availableNow drain of :func:`expire_idle_users_v2` — RocksDB
+    provider set exactly as :func:`drain_user_activity_v2`
+    (transformWithState column families need it; it is the right store
+    at scale regardless)."""
+    with rocksdb_state_store(events.sparkSession):
+        return drain(
+            expire_idle_users_v2(events, gap_seconds=gap_seconds),
+            checkpoint_dir,
+            "update",
         )
-        query.awaitTermination()
-        return spark.table(name)
 
 
 def user_activity_from_staged_v2(
@@ -458,32 +424,18 @@ def user_activity_from_staged_v2(
     Registered as ``user_activity_state_v2`` against the SAME batch
     oracle as the v1 operator — the driver now hard-checks both
     stateful APIs, not just the pytest emission-equality twin."""
-    stream = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(staging_dir)
+    stream = staged_stream(
+        spark, EVENT_STREAM_SCHEMA, staging_dir, files_per_trigger
     )
     return final_user_state(drain_user_activity_v2(stream, checkpoint_dir))
 
 
 def drain_user_activity_v2(events: DataFrame, checkpoint_dir: str) -> DataFrame:
-    """availableNow drain of :func:`track_user_activity_v2` into a
-    memory sink. transformWithState stores each state variable in its
-    own column family, which the default HDFS-backed provider rejects —
-    the RocksDB provider (the right store at scale anyway: disk-spilled
+    """availableNow drain of :func:`track_user_activity_v2`.
+    transformWithState stores each state variable in its own column
+    family, which the default HDFS-backed provider rejects — the
+    RocksDB provider (the right store at scale anyway: disk-spilled
     state, bounded memory, incremental checkpoints) is set for this
     query by :func:`session.rocksdb_state_store`."""
-    spark = events.sparkSession
-    with rocksdb_state_store(spark):
-        name = f"user_activity_v2_{uuid.uuid4().hex}"
-        query = (
-            track_user_activity_v2(events)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        return spark.table(name)
+    with rocksdb_state_store(events.sparkSession):
+        return drain(track_user_activity_v2(events), checkpoint_dir, "update")

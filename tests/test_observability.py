@@ -107,3 +107,43 @@ def test_kafka_option_maps_pin_reference_contract():
         "subscribe": "t",
         "startingOffsets": "earliest",
     }
+
+
+class _StubNotifications:
+    """Stands in for a streaming notifications frame: records the
+    projection and hands out a recording writer."""
+
+    def __init__(self, writer):
+        self.writeStream = writer
+        self.selected = None
+
+    def select(self, *cols):
+        self.selected = cols
+        return self
+
+
+def test_kafka_notification_writer_builds_without_broker(spark):
+    """Build-only (no broker, no connector jar): the notification
+    writer targets the kafka format, and its topic, bootstrap servers
+    and checkpoint location reach the writer's options (KU:30-38)."""
+    from flight_events_flink_job_spark.sources.kafka import (
+        kafka_notification_writer,
+    )
+
+    rec = _RecordingReader()
+    frame = _StubNotifications(rec)
+    assert kafka_notification_writer(frame, "/tmp/notif_ckpt") is rec
+    assert len(frame.selected) == 1
+    assert rec.fmt == "kafka"
+    assert rec.opts == {
+        "kafka.bootstrap.servers": "kafka:9092",
+        "topic": NOTIFICATION_TOPIC,
+        "checkpointLocation": "/tmp/notif_ckpt",
+    }
+    rec2 = _RecordingReader()
+    kafka_notification_writer(
+        _StubNotifications(rec2), "/ck", bootstrap="b:1", topic="t"
+    )
+    assert rec2.opts["topic"] == "t"
+    assert rec2.opts["checkpointLocation"] == "/ck"
+    assert rec2.opts["kafka.bootstrap.servers"] == "b:1"

@@ -1,0 +1,77 @@
+"""The shared round-trip sink (streaming/roundtrip.py) and the per-user
+fold both state APIs share (streaming/stateful.py)."""
+
+from __future__ import annotations
+
+import datetime as dt
+import os
+
+import pandas as pd
+
+from flight_events_flink_job_spark.streaming.roundtrip import drain, staged_stream
+
+SCHEMA = "user_id long, ts timestamp, event_type string, value double"
+
+
+def _stage(spark, staging, batches):
+    """One parquet file per batch, mtimes pinned in batch order."""
+    os.makedirs(staging)
+    for i, rows in enumerate(batches):
+        tmp = f"{staging}_tmp{i}"
+        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(tmp)
+        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
+        dest = f"{staging}/b{i}.parquet"
+        os.rename(f"{tmp}/{part}", dest)
+        os.utime(dest, (1_700_000_000 + i * 60,) * 2)
+
+
+def test_drain_complete_keeps_only_last_snapshot(spark, tmp_path):
+    """Complete mode re-emits the whole table every micro-batch; the
+    drain must return the final snapshot, not every snapshot."""
+    t0 = dt.datetime(2024, 1, 1)
+    staging = str(tmp_path / "in")
+    _stage(
+        spark,
+        staging,
+        [[(1, t0, "a", 1.0), (2, t0, "a", 1.0)], [(1, t0, "b", 1.0)]],
+    )
+    counts = staged_stream(spark, SCHEMA, staging, 1).groupBy("user_id").count()
+    ckpt = str(tmp_path / "ckpt")
+    out = drain(counts, ckpt, "complete")
+    assert sorted(map(tuple, out.collect())) == [(1, 2), (2, 1)]
+    assert out.schema.simpleString() == counts.schema.simpleString()
+    assert len(os.listdir(os.path.join(ckpt, "commits"))) >= 2
+
+
+def test_drain_of_nothing_staged_is_empty(spark, tmp_path):
+    """No micro-batch runs on an empty staging dir: the drain returns
+    an empty frame with the stream's schema, as a memory sink did."""
+    staging = str(tmp_path / "in")
+    os.makedirs(staging)
+    stream = staged_stream(spark, SCHEMA, staging, 1)
+    out = drain(stream, str(tmp_path / "ckpt"), "update")
+    assert out.count() == 0
+    assert out.columns == stream.columns
+
+
+def test_fold_activity_sorts_chunks_before_folding():
+    """Unordered chunks of one micro-batch fold exactly as the
+    event-time-sorted batch does, from an empty or a carried state."""
+    from flight_events_flink_job_spark.streaming.stateful import (
+        _NO_ACTIVITY,
+        _fold_activity,
+    )
+
+    ts = pd.to_datetime(["2024-01-01 00:00:0%d" % s for s in range(4)])
+    pdf = pd.DataFrame(
+        {"ts": ts, "event_type": ["a", "a", "b", "b"], "value": [1.0] * 4}
+    )
+    chunks = [pdf.iloc[2:], pdf.iloc[:0], pdf.iloc[:2]]
+    assert _fold_activity(_NO_ACTIVITY, chunks) == _fold_activity(
+        _NO_ACTIVITY, [pdf]
+    ) == (4, 4.0, ts[3].to_pydatetime(), "b", 2)
+    carried = (2, 1.0, dt.datetime(2023, 1, 1), "b", 5)
+    assert _fold_activity(carried, [pdf.iloc[2:]]) == (
+        4, 3.0, ts[3].to_pydatetime(), "b", 7,
+    )
+    assert _fold_activity(carried, []) == carried

@@ -6,7 +6,11 @@ order-insensitive EXACT values (no rounding — the driver's value-hash is
 type- and value-exact, so this harness must be too; round-1 shipped red
 because the old harness rounded). Usage:
 
-    python tools/parity.py [sf_dir] [query ...]
+    python tools/parity.py [--oddconf] [sf_dir] [query ...]
+
+``--oddconf`` runs the same sweep under an adversarial execution conf —
+5 cores, 7 shuffle partitions, AQE off — to catch partition-count- or
+AQE-dependent nondeterminism the default session cannot show.
 """
 
 from __future__ import annotations
@@ -41,6 +45,12 @@ DUCK_TO_SPARK = {
     "DOUBLE[]": "array<double>",
     "BIGINT[]": "array<bigint>",
     "VARCHAR[]": "array<string>",
+}
+
+ODDCONF_CPUS = 5
+ODDCONF = {
+    "spark.sql.shuffle.partitions": "7",
+    "spark.sql.adaptive.enabled": "false",
 }
 
 
@@ -112,10 +122,16 @@ def main() -> int:
         EVENTS_VIEW_SQL,
     )
 
+    oddconf = "--oddconf" in sys.argv
+    if oddconf:
+        sys.argv.remove("--oddconf")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    spark = get_spark("parity")
+    if oddconf:
+        spark = get_spark("parity", cpus=ODDCONF_CPUS, extra_conf=ODDCONF)
+    else:
+        spark = get_spark("parity")
     con = duckdb.connect()
     # events/embeddings get the bronze-boundary sanitization the engine
     # applies in load_table (identity on driver fixtures) so oracle and
