@@ -84,6 +84,7 @@ from ..operators.vectors_agg import (
     value_anomalies,
 )
 from ..sources.fixtures import load_table
+from . import vector_sql as vs
 from .registry import register
 
 # DuckDB fragment: UTF-8 byte values of `text` as a BIGINT list.
@@ -635,37 +636,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_near_pairs(_docs(spark, sf_dir))
 
 
-def _portable_planes_ctes(num_total: int, dim: int) -> str:
-    """The ``h2s``/``planes`` CTE pair rebuilding
-    similarity.portable_planes from its integer recurrence — five
-    integer ops and one double divide per entry, so every plane-based
-    oracle stays a compact reviewable string instead of embedding tens
-    of KB of float literals (round-10 VERDICT item 8, extended to the
-    whole plane-oracle family in round 12). All intermediates stay
-    under 2^63, so DuckDB BIGINT arithmetic never overflows."""
-    from ..operators.similarity import (
-        PLANE_ADD2,
-        PLANE_MOD1,
-        PLANE_MOD2,
-        PLANE_MUL1,
-        PLANE_MUL2,
-    )
-
-    return f"""h2s AS (
-        SELECT idx,
-               (((idx + 1) * {PLANE_MUL1}) % {PLANE_MOD1}
-                * {PLANE_MUL2} + {PLANE_ADD2}) % {PLANE_MOD2} AS h2
-        FROM range({num_total * dim}) t(idx)
-    ),
-    planes AS (
-        SELECT idx // {dim} AS pid,
-               list(((h2 * h2 % {PLANE_MOD2}) * {PLANE_MUL1} % {PLANE_MOD2}
-                     + h2) % {PLANE_MOD2} / {PLANE_MOD2}.0 * 2.0 - 1.0
-                    ORDER BY idx) AS p
-        FROM h2s GROUP BY pid
-    )"""
-
-
 def _embedding_lsh_oracle(
     threshold: float = 0.4,
     num_tables: int = 8,
@@ -675,46 +645,30 @@ def _embedding_lsh_oracle(
 ) -> str:
     """DuckDB twin of the multi-table hyperplane-LSH near-dup: the SAME
     portable-recurrence plane matrix as similarity.hyperplane_buckets
-    (plane_source="portable"), rebuilt from the integer CTE instead of
-    44 KB of float literals (round-11 VERDICT item 4), then bucket
-    codes, occupancy cap, candidate join, and exact-cosine verify.
-    num_planes=4 here pins the operator's adaptive_planes(N=500) value
-    at the driver's correctness scale (sf0.01)."""
-    return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-    {_portable_planes_ctes(num_tables * num_planes, dim)},
-    bits AS (
-        SELECT e.vec_id, pid // {num_planes} AS tbl, pid % {num_planes} AS j,
-               CASE WHEN list_dot_product(e.v, planes.p) >= 0
-                    THEN 1 ELSE 0 END AS b
-        FROM e CROSS JOIN planes
-    ),
-    codes AS (
-        SELECT vec_id,
-               CAST(sum(b * (1 << ({num_planes} - 1 - j)))
-                    + tbl * {1 << num_planes} AS BIGINT) AS bucket
-        FROM bits GROUP BY vec_id, tbl
-    ),
-    keep AS (
+    (plane_source="portable"), then bucket codes, occupancy cap,
+    candidate join, and exact-cosine verify. num_planes=4 here pins
+    the operator's adaptive_planes(N=500) value at the sf0.01
+    correctness scale."""
+    return vs.query(
+        [
+            vs.E,
+            *vs.planes(num_tables * num_planes, dim),
+            *vs.bucket_codes("codes", "e", "v", num_planes),
+            f"""keep AS (
         SELECT vec_id, bucket FROM (
             SELECT vec_id, bucket,
                    count(*) OVER (PARTITION BY bucket) AS occupancy
             FROM codes
-        ) WHERE occupancy <= {max_bucket}
-    ),
-    cand AS (
-        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+        ) WHERE occupancy <= {max_bucket})""",
+            """cand AS (
+        SELECT DISTINCT a.vec_id AS q_id, b.vec_id AS n_id
         FROM keep a JOIN keep b
-          ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+          ON a.bucket = b.bucket AND a.vec_id < b.vec_id)""",
+            vs.rerank("scored", "list_cosine_similarity", "cos"),
+        ],
+        f"""SELECT q_id AS vec_a, n_id AS vec_b, round(cos, 4) AS cosine
+    FROM scored WHERE round(cos, 4) >= {threshold}""",
     )
-    SELECT vec_a, vec_b, cosine FROM (
-        SELECT c.vec_a, c.vec_b,
-               round(list_cosine_similarity(ea.v, eb.v), 4) AS cosine
-        FROM cand c
-        JOIN e ea ON ea.vec_id = c.vec_a
-        JOIN e eb ON eb.vec_id = c.vec_b
-    ) WHERE cosine >= {threshold}
-    """
 
 
 @register("dedup_embedding_cosine", oracle=_embedding_lsh_oracle())
@@ -817,45 +771,31 @@ def _topk_lsh_oracle(
 ) -> str:
     """DuckDB twin of similarity.cosine_topk_lsh: the SAME
     portable-recurrence plane matrix as hyperplane_buckets
-    (plane_source="portable"), rebuilt from the integer CTE instead of
-    87 KB of literals (round-11 VERDICT item 4), the same bucket
-    codes, candidate equi-join, and exact cosine re-rank. The ANN
-    output is therefore hash-exact, not merely recall-bounded:
-    approximation lives in WHICH candidates the buckets admit, and the
-    oracle replays that choice deterministically."""
-    return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-    {_portable_planes_ctes(num_tables * num_planes, dim)},
-    bits AS (
-        SELECT e.vec_id, pid // {num_planes} AS tbl, pid % {num_planes} AS j,
-               CASE WHEN list_dot_product(e.v, planes.p) >= 0
-                    THEN 1 ELSE 0 END AS b
-        FROM e CROSS JOIN planes
-    ),
-    codes AS (
-        SELECT vec_id,
-               CAST(sum(b * (1 << ({num_planes} - 1 - j)))
-                    + tbl * {1 << num_planes} AS BIGINT) AS bucket
-        FROM bits GROUP BY vec_id, tbl
-    ),
-    cand AS (
-        SELECT DISTINCT qc.vec_id AS q_id, cc.vec_id AS n_id
-        FROM codes qc JOIN codes cc
-          ON qc.bucket = cc.bucket AND qc.vec_id <> cc.vec_id
-        WHERE qc.vec_id < {num_queries}
-    ),
-    scored AS (
-        SELECT c.q_id, c.n_id, list_cosine_similarity(eq.v, en.v) cos
-        FROM cand c
-        JOIN e eq ON eq.vec_id = c.q_id
-        JOIN e en ON en.vec_id = c.n_id
+    (plane_source="portable"), the same bucket codes, candidate
+    equi-join, and exact cosine re-rank. The ANN output is therefore
+    hash-exact, not merely recall-bounded: approximation lives in
+    WHICH candidates the buckets admit, and the oracle replays that
+    choice deterministically."""
+    return vs.query(
+        _cosine_lsh_ctes(num_queries, num_tables, num_planes, dim),
+        vs.cosine_topk(k),
     )
-    SELECT q_id, n_id, round(cos, 4) AS cosine, rank FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, n_id) rank
-        FROM scored
-    ) WHERE rank <= {k}
-    """
+
+
+def _cosine_lsh_ctes(
+    num_queries: int, num_tables: int, num_planes: int, dim: int
+) -> list[str]:
+    """The cosine LSH candidate pipeline shared by similarity_topk_lsh
+    and ann_recall_eval: bucket codes over the raw vectors, candidate
+    pairs of the first ``num_queries`` vectors, exact cosine as
+    ``cos`` in CTE ``scored``."""
+    return [
+        vs.E,
+        *vs.planes(num_tables * num_planes, dim),
+        *vs.bucket_codes("codes", "e", "v", num_planes),
+        vs.lsh_cand("codes", "codes", num_queries),
+        vs.rerank("scored", "list_cosine_similarity", "cos"),
+    ]
 
 
 @register(
@@ -1039,133 +979,68 @@ def q_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_pmi(_docs(spark, sf_dir))
 
 
-def _kmeans_ctes(
-    k: int = 8, iterations: int = 2, stride: int = 7, dim: int = 64
-) -> list[str]:
-    """Shared CTE chain replaying operators/clustering.kmeans_assign in
-    DuckDB: same stride init, per-iteration sequential-fold L2
-    assignment with (d2, cid) tie-break, DECIMAL-mean centroid update —
-    generated per iteration to mirror the Spark loop. The final
-    assignment CTE is ``a{iterations}``; kmeans_clusters and semdedup
-    both build on it."""
-    d2 = (
-        "list_reduce(list_prepend(0.0, "
-        "[(e.v[i]-c.cv[i])*(e.v[i]-c.cv[i]) for i in range(1, {n})]), "
-        "(a,x) -> a+x)".format(n=dim + 1)
-    )
-    ctes = [
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings)",
-        f"""c0 AS (SELECT CAST(vec_id / {stride} AS BIGINT) cid, v AS cv
-            FROM e WHERE vec_id % {stride} = 0 AND vec_id < {stride * k})""",
-    ]
-    for it in range(1, iterations + 1):
-        ctes.append(f"""d{it} AS (
-            SELECT e.vec_id, e.v, c.cid, {d2} AS d2
-            FROM e, c{it - 1} c)""")
-        ctes.append(f"""a{it} AS (
-            SELECT vec_id, v, cid, d2 FROM (
-                SELECT *, row_number() OVER (
-                    PARTITION BY vec_id ORDER BY d2, cid) rn FROM d{it})
-            WHERE rn = 1)""")
-        if it < iterations:
-            ctes.append(f"""c{it} AS (
-            SELECT cid, list(cx ORDER BY dim) cv FROM (
-                SELECT cid, dim,
-                       CAST(sum(CAST(x AS DECIMAL(20,10))) AS DOUBLE)
-                           / count(*) AS cx
-                FROM (SELECT cid, generate_subscripts(v, 1) dim,
-                             unnest(v) x FROM a{it})
-                GROUP BY cid, dim)
-            GROUP BY cid)""")
-    return ctes
-
-
 def _kmeans_oracle(
     k: int = 8, iterations: int = 2, stride: int = 7, dim: int = 64
 ) -> str:
-    joined = ",\n    ".join(_kmeans_ctes(k, iterations, stride, dim))
-    return f"""
-    WITH {joined}
-    SELECT cid AS cluster_id, count(*) AS n_vectors,
+    """Twin of operators/clustering.kmeans_clusters: the Lloyd chain
+    over the full vector, then per-cluster size and DECIMAL inertia."""
+    return vs.query(
+        [vs.E, *vs.lloyd("", dim, k, iterations, stride)],
+        f"""SELECT cid AS cluster_id, count(*) AS n_vectors,
            CAST(round(sum(CAST(d2 AS DECIMAL(27,10))), 4) AS DOUBLE)
                AS inertia
-    FROM a{iterations} GROUP BY cid
-    """
-
-
-def _pq_ctes(
-    s: int,
-    width: int,
-    k: int = 8,
-    iterations: int = 2,
-    stride: int = 7,
-    src: str = "embeddings",
-    vec: str = "CAST(embedding AS DOUBLE[])",
-) -> list[str]:
-    """Per-subspace twin of _kmeans_ctes for PQ: the same stride-init
-    Lloyd chain, run over the s-th contiguous ``width``-dim slice of
-    the vector, CTE names prefixed ``s{s}_`` so the m chains coexist in
-    one WITH clause. Final assignment CTE: ``s{s}_a{iterations}``.
-    ``src``/``vec`` redirect the chain onto a derived vector CTE (the
-    residual table of the IVFADC residual mode) instead of the raw
-    embeddings."""
-    p = f"s{s}_"
-    lo, hi = s * width + 1, (s + 1) * width
-    d2 = (
-        "list_reduce(list_prepend(0.0, "
-        "[(e.v[i]-c.cv[i])*(e.v[i]-c.cv[i]) for i in range(1, {n})]), "
-        "(a,x) -> a+x)".format(n=width + 1)
+    FROM a{iterations} GROUP BY cid""",
     )
-    ctes = [
-        f"{p}e AS (SELECT vec_id, "
-        f"({vec})[{lo}:{hi}] v FROM {src})",
-        f"""{p}c0 AS (SELECT CAST(vec_id / {stride} AS BIGINT) cid, v AS cv
-            FROM {p}e WHERE vec_id % {stride} = 0 AND vec_id < {stride * k})""",
-    ]
-    for it in range(1, iterations + 1):
-        ctes.append(f"""{p}d{it} AS (
-            SELECT e.vec_id, e.v, c.cid, {d2} AS d2
-            FROM {p}e e, {p}c{it - 1} c)""")
-        ctes.append(f"""{p}a{it} AS (
-            SELECT vec_id, v, cid, d2 FROM (
-                SELECT *, row_number() OVER (
-                    PARTITION BY vec_id ORDER BY d2, cid) rn FROM {p}d{it})
-            WHERE rn = 1)""")
-        if it < iterations:
-            ctes.append(f"""{p}c{it} AS (
-            SELECT cid, list(cx ORDER BY dim) cv FROM (
-                SELECT cid, dim,
-                       CAST(sum(CAST(x AS DECIMAL(20,10))) AS DOUBLE)
-                           / count(*) AS cx
-                FROM (SELECT cid, generate_subscripts(v, 1) dim,
-                             unnest(v) x FROM {p}a{it})
-                GROUP BY cid, dim)
-            GROUP BY cid)""")
-    return ctes
 
 
 def _pq_oracle(
     m: int = 4, k: int = 8, iterations: int = 2, stride: int = 7, dim: int = 64
 ) -> str:
-    width = dim // m
-    ctes: list[str] = []
-    for s in range(m):
-        ctes.extend(_pq_ctes(s, width, k, iterations, stride))
-    union = "\n        UNION ALL ".join(
+    """Twin of operators/clustering.pq_encode: the per-subspace Lloyd
+    chains, each vector's code tuple as a string key and its DECIMAL
+    quantization error."""
+    union = "\n UNION ALL ".join(
         f"SELECT vec_id, {s} AS subspace, cid, d2 FROM s{s}_a{iterations}"
         for s in range(m)
     )
-    ctes.append(f"u AS ({union})")
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined}
-    SELECT vec_id,
+    return vs.query(
+        [vs.E, *vs.pq_lloyd(m, dim // m, k, iterations, stride), f"u AS ({union})"],
+        """SELECT vec_id,
            array_to_string(list(CAST(cid AS VARCHAR) ORDER BY subspace), '-')
                AS code_key,
            CAST(round(sum(CAST(d2 AS DECIMAL(27,10))), 4) AS DOUBLE)
                AS q_error
-    FROM u GROUP BY vec_id
-    """
+    FROM u GROUP BY vec_id""",
+    )
+
+
+def _adc_oracle(
+    coarse: list[str],
+    m: int,
+    k_codes: int,
+    iterations: int,
+    pq_stride: int,
+    dim: int,
+    num_queries: int,
+    k: int,
+) -> str:
+    """The PQ scoring every raw-vector ADC oracle shares: the
+    per-subspace Lloyd chains and the ADC tail for the first
+    ``num_queries`` vectors, gated by the ``cand`` CTE of ``coarse``
+    when there is one (IVF routing), else over the whole corpus."""
+    width = dim // m
+    ctes, select = vs.adc(m, width, iterations, k, "qs", cand=bool(coarse))
+    return vs.query(
+        [
+            vs.E,
+            *coarse,
+            *vs.pq_lloyd(m, width, k_codes, iterations, pq_stride),
+            f"qs AS (SELECT vec_id AS q_id, v AS qv FROM e "
+            f"WHERE vec_id < {num_queries})",
+            *ctes,
+        ],
+        select,
+    )
 
 
 def _pq_topk_oracle(
@@ -1181,50 +1056,7 @@ def _pq_topk_oracle(
     (codes from a{iterations}, codebook from c{iterations-1}), the ADC
     distance table (query slice vs codeword, same sequential fold), a
     DECIMAL sum across subspaces, and the (adc, n_id) rank."""
-    width = dim // m
-    ctes: list[str] = []
-    for s in range(m):
-        ctes.extend(_pq_ctes(s, width, k_codes, iterations, stride))
-    d2q = (
-        "list_reduce(list_prepend(0.0, "
-        "[(q.qv[i]-c.cv[i])*(q.qv[i]-c.cv[i]) for i in range(1, {n})]), "
-        "(a,x) -> a+x)".format(n=width + 1)
-    )
-    for s in range(m):
-        lo, hi = s * width + 1, (s + 1) * width
-        ctes.append(
-            f"""q{s} AS (SELECT vec_id AS q_id,
-                (CAST(embedding AS DOUBLE[]))[{lo}:{hi}] qv
-                FROM embeddings WHERE vec_id < {num_queries})"""
-        )
-        ctes.append(
-            f"""dt{s} AS (SELECT q.q_id, c.cid, {d2q} AS d2
-                FROM q{s} q, s{s}_c{iterations - 1} c)"""
-        )
-    union = "\n        UNION ALL ".join(
-        f"""SELECT a.vec_id, d.q_id, d.d2
-            FROM s{s}_a{iterations} a JOIN dt{s} d ON a.cid = d.cid"""
-        for s in range(m)
-    )
-    ctes.append(f"parts AS ({union})")
-    ctes.append(
-        """adc AS (
-        SELECT q_id, vec_id,
-               sum(CAST(d2 AS DECIMAL(27,10))) AS adc_dec
-        FROM parts WHERE q_id <> vec_id GROUP BY q_id, vec_id)"""
-    )
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined}
-    SELECT q_id, vec_id AS n_id,
-           CAST(round(adc_dec, 4) AS DOUBLE) AS adc_d2,
-           CAST(rank AS BIGINT) AS rank
-    FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY adc_dec, vec_id) AS rank
-        FROM adc)
-    WHERE rank <= {k}
-    """
+    return _adc_oracle([], m, k_codes, iterations, stride, dim, num_queries, k)
 
 
 def _ivf_pq_topk_oracle(
@@ -1238,95 +1070,14 @@ def _ivf_pq_topk_oracle(
     ivf_stride: int = 61,
     nprobe: int = 4,
 ) -> str:
-    """Twin of operators/clustering.ivf_pq_topk: the IVF coarse chain
-    (assignment + nprobe probe lists, same CTEs as the
-    similarity_topk_ivf oracle, iv_-prefixed), the (q_id, vec_id)
-    candidate gate, the per-subspace PQ Lloyd chains and ADC distance
-    tables of _pq_topk_oracle, with the gate applied INSIDE the parts
-    union so only probed-cell candidates reach the DECIMAL sum."""
-    width = dim // m
-    ctes: list[str] = []
-    d2iv = (
-        "list_reduce(list_prepend(0.0, "
-        "[(e.v[i]-c.cv[i])*(e.v[i]-c.cv[i]) for i in range(1, {n})]), "
-        "(a,x) -> a+x)".format(n=dim + 1)
+    """Twin of operators/clustering.ivf_pq_topk: the flat IVF coarse
+    chain (assignment + nprobe probe lists) gates the (q_id, n_id)
+    candidates, and the gate applies INSIDE the ADC parts union so
+    only probed-cell candidates reach the DECIMAL sum."""
+    return _adc_oracle(
+        vs.ivf(ivf_stride, dim, num_queries, nprobe),
+        m, k_codes, iterations, pq_stride, dim, num_queries, k,
     )
-    ctes.append(
-        "iv_e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings)"
-    )
-    # effective stride mirrors ivf_centroids' cap-widening (round-7
-    # ADVICE item 2): past the 4096-centroid cap the Spark side widens
-    # the nominal stride to ceil((max_id+1)/4096), so the oracle must too
-    ctes.append(
-        f"iv_s AS (SELECT GREATEST({ivf_stride}, "
-        f"CAST(ceil((max(vec_id) + 1) / 4096.0) AS BIGINT)) AS st FROM iv_e)"
-    )
-    ctes.append(
-        "iv_c AS (SELECT vec_id AS cid, v AS cv FROM iv_e "
-        "WHERE vec_id % (SELECT st FROM iv_s) = 0)"
-    )
-    ctes.append(
-        f"iv_d AS (SELECT e.vec_id, c.cid, {d2iv} AS d2 FROM iv_e e, iv_c c)"
-    )
-    ctes.append(
-        "iv_r AS (SELECT vec_id, cid, row_number() OVER ("
-        "PARTITION BY vec_id ORDER BY d2, cid) rn FROM iv_d)"
-    )
-    ctes.append("iv_assign AS (SELECT vec_id, cid FROM iv_r WHERE rn = 1)")
-    ctes.append(
-        f"iv_probes AS (SELECT vec_id AS q_id, cid FROM iv_r "
-        f"WHERE vec_id < {num_queries} AND rn <= {nprobe})"
-    )
-    ctes.append(
-        """cand AS (
-        SELECT p.q_id, a.vec_id
-        FROM iv_probes p JOIN iv_assign a ON p.cid = a.cid
-        WHERE a.vec_id <> p.q_id)"""
-    )
-    for s in range(m):
-        ctes.extend(_pq_ctes(s, width, k_codes, iterations, pq_stride))
-    d2q = (
-        "list_reduce(list_prepend(0.0, "
-        "[(q.qv[i]-c.cv[i])*(q.qv[i]-c.cv[i]) for i in range(1, {n})]), "
-        "(a,x) -> a+x)".format(n=width + 1)
-    )
-    for s in range(m):
-        lo, hi = s * width + 1, (s + 1) * width
-        ctes.append(
-            f"""q{s} AS (SELECT vec_id AS q_id,
-                (CAST(embedding AS DOUBLE[]))[{lo}:{hi}] qv
-                FROM embeddings WHERE vec_id < {num_queries})"""
-        )
-        ctes.append(
-            f"""dt{s} AS (SELECT q.q_id, c.cid, {d2q} AS d2
-                FROM q{s} q, s{s}_c{iterations - 1} c)"""
-        )
-    union = "\n        UNION ALL ".join(
-        f"""SELECT a.vec_id, d.q_id, d.d2
-            FROM s{s}_a{iterations} a
-            JOIN dt{s} d ON a.cid = d.cid
-            JOIN cand g ON g.vec_id = a.vec_id AND g.q_id = d.q_id"""
-        for s in range(m)
-    )
-    ctes.append(f"parts AS ({union})")
-    ctes.append(
-        """adc AS (
-        SELECT q_id, vec_id,
-               sum(CAST(d2 AS DECIMAL(27,10))) AS adc_dec
-        FROM parts GROUP BY q_id, vec_id)"""
-    )
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined}
-    SELECT q_id, vec_id AS n_id,
-           CAST(round(adc_dec, 4) AS DOUBLE) AS adc_d2,
-           CAST(rank AS BIGINT) AS rank
-    FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY adc_dec, vec_id) AS rank
-        FROM adc)
-    WHERE rank <= {k}
-    """
 
 
 def _ivf_pq_topk_residual_oracle(
@@ -1341,107 +1092,33 @@ def _ivf_pq_topk_residual_oracle(
     nprobe: int = 4,
 ) -> str:
     """Twin of operators/clustering.ivf_pq_topk(residuals=True) — the
-    full IVFADC of Jégou 2011 §IV: the IVF coarse chain of
-    _ivf_pq_topk_oracle, then the PQ Lloyd chains run over the
-    RESIDUAL table (v − coarse centroid, one exact list-comprehension
-    subtraction), the per-(query, probed-cell) residual distance
-    tables, and the DECIMAL ADC sum keyed on the candidate's cell."""
+    full IVFADC of Jégou 2011 §IV: the flat IVF coarse chain, then the
+    PQ Lloyd chains run over the RESIDUAL table (v − coarse centroid,
+    one exact list-comprehension subtraction), the per-(query,
+    probed-cell) residual distance tables, and the DECIMAL ADC sum
+    keyed on the candidate's cell."""
     width = dim // m
-    ctes: list[str] = []
-    d2iv = (
-        "list_reduce(list_prepend(0.0, "
-        "[(e.v[i]-c.cv[i])*(e.v[i]-c.cv[i]) for i in range(1, {n})]), "
-        "(a,x) -> a+x)".format(n=dim + 1)
-    )
     sub = "[e.v[i] - c.cv[i] for i in range(1, %d)]" % (dim + 1)
-    ctes.append(
-        "iv_e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings)"
-    )
-    ctes.append(
-        f"iv_s AS (SELECT GREATEST({ivf_stride}, "
-        f"CAST(ceil((max(vec_id) + 1) / 4096.0) AS BIGINT)) AS st FROM iv_e)"
-    )
-    ctes.append(
-        "iv_c AS (SELECT vec_id AS cid, v AS cv FROM iv_e "
-        "WHERE vec_id % (SELECT st FROM iv_s) = 0)"
-    )
-    ctes.append(
-        f"iv_d AS (SELECT e.vec_id, c.cid, {d2iv} AS d2 FROM iv_e e, iv_c c)"
-    )
-    ctes.append(
-        "iv_r AS (SELECT vec_id, cid, row_number() OVER ("
-        "PARTITION BY vec_id ORDER BY d2, cid) rn FROM iv_d)"
-    )
-    ctes.append("iv_assign AS (SELECT vec_id, cid FROM iv_r WHERE rn = 1)")
-    ctes.append(
-        f"iv_probes AS (SELECT vec_id AS q_id, cid FROM iv_r "
-        f"WHERE vec_id < {num_queries} AND rn <= {nprobe})"
-    )
-    ctes.append(
-        """cand AS (
-        SELECT p.q_id, a.vec_id, a.cid AS cell
-        FROM iv_probes p JOIN iv_assign a ON p.cid = a.cid
-        WHERE a.vec_id <> p.q_id)"""
-    )
-    ctes.append(
-        f"""res AS (SELECT a.vec_id, {sub} AS rv
+    ctes, select = vs.adc(m, width, iterations, k, "qres", cand=True, cell=True)
+    return vs.query(
+        [
+            vs.E,
+            *vs.ivf(ivf_stride, dim, num_queries, nprobe),
+            f"""res AS (SELECT a.vec_id, {sub} AS rv
         FROM iv_assign a
-        JOIN iv_e e ON e.vec_id = a.vec_id
-        JOIN iv_c c ON c.cid = a.cid)"""
-    )
-    for s in range(m):
-        ctes.extend(
-            _pq_ctes(
-                s, width, k_codes, iterations, pq_stride, src="res", vec="rv"
-            )
-        )
-    ctes.append(
-        f"""qres AS (SELECT p.q_id, p.cid AS cell, {sub} AS rv
+        JOIN e ON e.vec_id = a.vec_id
+        JOIN iv_c c ON c.cid = a.cid)""",
+            *vs.pq_lloyd(
+                m, width, k_codes, iterations, pq_stride, src="res", vec="rv"
+            ),
+            f"""qres AS (SELECT p.q_id, p.cid AS cell, {sub} AS qv
         FROM iv_probes p
-        JOIN iv_e e ON e.vec_id = p.q_id
-        JOIN iv_c c ON c.cid = p.cid)"""
+        JOIN e ON e.vec_id = p.q_id
+        JOIN iv_c c ON c.cid = p.cid)""",
+            *ctes,
+        ],
+        select,
     )
-    d2q = (
-        "list_reduce(list_prepend(0.0, "
-        "[(q.qv[i]-c.cv[i])*(q.qv[i]-c.cv[i]) for i in range(1, {n})]), "
-        "(a,x) -> a+x)".format(n=width + 1)
-    )
-    for s in range(m):
-        lo, hi = s * width + 1, (s + 1) * width
-        ctes.append(
-            f"qr{s} AS (SELECT q_id, cell, rv[{lo}:{hi}] qv FROM qres)"
-        )
-        ctes.append(
-            f"""dt{s} AS (SELECT q.q_id, q.cell, c.cid, {d2q} AS d2
-                FROM qr{s} q, s{s}_c{iterations - 1} c)"""
-        )
-    union = "\n        UNION ALL ".join(
-        f"""SELECT a.vec_id, g.q_id, d.d2
-            FROM s{s}_a{iterations} a
-            JOIN cand g ON g.vec_id = a.vec_id
-            JOIN dt{s} d ON d.cid = a.cid AND d.q_id = g.q_id
-                        AND d.cell = g.cell"""
-        for s in range(m)
-    )
-    ctes.append(f"parts AS ({union})")
-    ctes.append(
-        """adc AS (
-        SELECT q_id, vec_id,
-               sum(CAST(d2 AS DECIMAL(27,10))) AS adc_dec
-        FROM parts GROUP BY q_id, vec_id)"""
-    )
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined}
-    SELECT q_id, vec_id AS n_id,
-           CAST(round(adc_dec, 4) AS DOUBLE) AS adc_d2,
-           CAST(rank AS BIGINT) AS rank
-    FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY adc_dec, vec_id) AS rank
-        FROM adc)
-    WHERE rank <= {k}
-    """
 
 
 def _semdedup_oracle(
@@ -1451,36 +1128,13 @@ def _semdedup_oracle(
     dim: int = 64,
     threshold: float = 0.4,
 ) -> str:
-    """Twin of operators/clustering.semdedup: the kmeans_assign CTE
-    chain, then the drop verdict — x is dropped iff a same-cluster y
-    with keep-precedence (farther from centroid, ties lower vec_id) is
-    >= threshold cosine-similar. ``list_cosine_similarity`` on
-    DOUBLE[] reproduces the Spark fold bit-exactly (functions/
-    vectors.py), so the threshold cut agrees across engines."""
-    ctes = _kmeans_ctes(k, iterations, stride, dim)
-    a = f"a{iterations}"
-    ctes.append(f"""dropped AS (
-        SELECT DISTINCT x.vec_id
-        FROM {a} x JOIN {a} y
-          ON x.cid = y.cid AND x.vec_id != y.vec_id
-         AND (y.d2 > x.d2 OR (y.d2 = x.d2 AND y.vec_id < x.vec_id))
-         AND (CASE WHEN list_dot_product(x.v, x.v) = 0
-                     OR list_dot_product(y.v, y.v) = 0 THEN 0.0
-                   ELSE list_cosine_similarity(x.v, y.v) END)
-             >= {threshold})""")
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined}
-    SELECT a.cid AS cluster_id,
-           count(*) AS n_vectors,
-           CAST(sum(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_dropped,
-           count(*) - CAST(sum(CASE WHEN d.vec_id IS NOT NULL
-                                    THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_kept
-    FROM {a} a LEFT JOIN dropped d ON a.vec_id = d.vec_id
-    GROUP BY a.cid
-    """
+    """Twin of operators/clustering.semdedup: the kmeans_assign Lloyd
+    chain, then the SemDedup drop verdict per k-means cluster."""
+    return vs.semdedup(
+        [vs.E, *vs.lloyd("", dim, k, iterations, stride)],
+        f"a{iterations}",
+        threshold,
+    )
 
 
 @register("kmeans_clusters", oracle=_kmeans_oracle())
@@ -1511,52 +1165,13 @@ def _semdedup_scaled_oracle(
     dim: int = 64,
 ) -> str:
     """Twin of operators/clustering.semdedup_scaled: stride-sampled
-    driver-held centroids (the similarity_topk_ivf assignment CTEs),
-    the keep-precedence occupancy cap, then the semdedup drop verdict
+    collected centroids (the flat IVF assignment), the
+    keep-precedence occupancy cap, then the semdedup drop verdict
     restricted to each cluster's top-``max_bucket`` precedence
     members."""
-    d2 = (
-        "list_reduce(list_prepend(0.0, "
-        "[(e.v[i]-c.cv[i])*(e.v[i]-c.cv[i]) for i in range(1, {n})]), "
-        "(a,x) -> a+x)".format(n=dim + 1)
+    return vs.semdedup(
+        [vs.E, *vs.ivf(target_occupancy, dim)], "iv_assign", threshold, max_bucket
     )
-    return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-    -- effective stride mirrors ivf_centroids' cap-widening (round-7
-    -- ADVICE item 2): past the 4096-centroid cap the Spark side widens
-    -- the nominal stride to ceil((max_id+1)/4096), so the oracle must too
-    eff AS (SELECT GREATEST({target_occupancy},
-                CAST(ceil((max(vec_id) + 1) / 4096.0) AS BIGINT)) AS st FROM e),
-    c AS (SELECT vec_id AS cid, v AS cv FROM e
-          WHERE vec_id % (SELECT st FROM eff) = 0),
-    d AS (SELECT e.vec_id, e.v, c.cid, {d2} AS d2 FROM e, c),
-    a AS (SELECT vec_id, v, cid, d2 FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY vec_id ORDER BY d2, cid) rn FROM d)
-          WHERE rn = 1),
-    droppers AS (SELECT * FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY cid ORDER BY d2 DESC, vec_id) pr FROM a)
-          WHERE pr <= {max_bucket}),
-    dropped AS (
-        SELECT DISTINCT x.vec_id
-        FROM a x JOIN droppers y
-          ON x.cid = y.cid AND x.vec_id != y.vec_id
-         AND (y.d2 > x.d2 OR (y.d2 = x.d2 AND y.vec_id < x.vec_id))
-         AND (CASE WHEN list_dot_product(x.v, x.v) = 0
-                     OR list_dot_product(y.v, y.v) = 0 THEN 0.0
-                   ELSE list_cosine_similarity(x.v, y.v) END)
-             >= {threshold})
-    SELECT a.cid AS cluster_id,
-           count(*) AS n_vectors,
-           CAST(sum(CASE WHEN dr.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_dropped,
-           count(*) - CAST(sum(CASE WHEN dr.vec_id IS NOT NULL
-                                    THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_kept
-    FROM a LEFT JOIN dropped dr ON a.vec_id = dr.vec_id
-    GROUP BY a.cid
-    """
 
 
 @register("semdedup_scaled", oracle=_semdedup_scaled_oracle())
@@ -1582,8 +1197,8 @@ def _hier_ctes(
     num_queries: int = 16,
     nprobe: int = 4,
 ) -> list[str]:
-    """CTE chain replaying BOTH levels of the hierarchical coarse
-    quantizer (operators/similarity.ivf_model_hier +
+    """CTE chain over ``e`` replaying BOTH levels of the hierarchical
+    coarse quantizer (operators/similarity.ivf_model_hier +
     _ranked_cells_hier) end to end:
 
     - ``h_p``: the sizing arithmetic — effective occupancy target
@@ -1598,17 +1213,8 @@ def _hier_ctes(
       shard (ties by cell id);
     - ``h_probes``: query routing — top-``nprobe`` shards by (d2, sid),
       then top-``nprobe`` cells by (d2, cell) from those shards' union.
-
-    Every distance is the sequential left-to-right fold, bit-identical
-    to the Arrow path's dim-by-dim accumulation.
     """
-    fold = (
-        "list_reduce(list_prepend(0.0, "
-        "[({a}.v[i]-{c}.{cv}[i])*({a}.v[i]-{c}.{cv}[i]) "
-        "for i in range(1, %d)]), (acc,x) -> acc+x)" % (dim + 1)
-    )
     return [
-        "h_e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings)",
         f"""h_p AS (SELECT
             GREATEST({target}, CAST(ceil((max(vec_id) + 1) / {max_cells}.0)
                                AS BIGINT)) AS t_eff,
@@ -1616,41 +1222,39 @@ def _hier_ctes(
                 CAST(ceil(sqrt(LEAST(
                     CAST(ceil((max(vec_id) + 1) / {target}.0) AS BIGINT),
                     {max_cells}))) AS BIGINT)))) AS BIGINT) AS l1_stride
-            FROM h_e)""",
-        "h_l1 AS (SELECT vec_id AS sid, v AS sv FROM h_e "
+            FROM e)""",
+        "h_l1 AS (SELECT vec_id AS sid, v AS sv FROM e "
         "WHERE vec_id % (SELECT l1_stride FROM h_p) = 0)",
         f"""h_sd AS (SELECT e.vec_id, e.v, c.sid,
-            {fold.format(a='e', c='c', cv='sv')} AS d2
-            FROM h_e e, h_l1 c)""",
-        """h_sa AS (SELECT vec_id, v, sid FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY vec_id ORDER BY d2, sid) rn FROM h_sd)
-            WHERE rn = 1)""",
+            {vs.l2('e.v', 'c.sv', dim)} AS d2
+            FROM e, h_l1 c)""",
+        "h_sa AS ("
+        + vs.top_rows("h_sd", "vec_id", "d2, sid", 1, "vec_id, v, sid")
+        + ")",
         """h_cells AS (SELECT sid, vec_id AS cell, v AS cv FROM (
             SELECT *, row_number() OVER (
                 PARTITION BY sid ORDER BY vec_id) mrn FROM h_sa)
             WHERE (mrn - 1) % (SELECT t_eff FROM h_p) = 0)""",
         f"""h_cd AS (SELECT a.vec_id, a.v, c.cell,
-            {fold.format(a='a', c='c', cv='cv')} AS d2
+            {vs.l2('a.v', 'c.cv', dim)} AS d2
             FROM h_sa a JOIN h_cells c ON a.sid = c.sid)""",
-        """h_ca AS (SELECT vec_id, v, cell, d2 FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY vec_id ORDER BY d2, cell) rn FROM h_cd)
-            WHERE rn = 1)""",
-        f"""h_qsr AS (SELECT vec_id AS q_id, sid FROM (
-            SELECT vec_id, sid, row_number() OVER (
-                PARTITION BY vec_id ORDER BY d2, sid) rn FROM h_sd
-            WHERE vec_id < {num_queries})
-            WHERE rn <= {nprobe})""",
+        "h_ca AS ("
+        + vs.top_rows("h_cd", "vec_id", "d2, cell", 1, "vec_id, v, cell, d2")
+        + ")",
+        "h_qsr AS ("
+        + vs.top_rows(
+            f"h_sd WHERE vec_id < {num_queries}", "vec_id", "d2, sid", nprobe,
+            "vec_id AS q_id, sid",
+        )
+        + ")",
         f"""h_qc AS (SELECT q.q_id, c.cell,
-            {fold.format(a='e', c='c', cv='cv')} AS d2
+            {vs.l2('e.v', 'c.cv', dim)} AS d2
             FROM h_qsr q
-            JOIN h_e e ON e.vec_id = q.q_id
+            JOIN e ON e.vec_id = q.q_id
             JOIN h_cells c ON c.sid = q.sid)""",
-        f"""h_probes AS (SELECT q_id, cell FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY q_id ORDER BY d2, cell) rn FROM h_qc)
-            WHERE rn <= {nprobe})""",
+        "h_probes AS ("
+        + vs.top_rows("h_qc", "q_id", "d2, cell", nprobe, "q_id, cell")
+        + ")",
     ]
 
 
@@ -1660,28 +1264,15 @@ def _topk_ivf_hier_oracle(
     """Twin of operators/similarity.cosine_topk_ivf_hier: the two-level
     quantizer CTEs, the probed-cell candidate gate, exact cosine
     re-rank with (cos DESC, n_id) ties."""
-    ctes = _hier_ctes(target=target, num_queries=num_queries, nprobe=nprobe)
-    ctes.append(
-        """cand AS (SELECT p.q_id, a.vec_id AS n_id
-        FROM h_probes p JOIN h_ca a ON p.cell = a.cell
-        WHERE a.vec_id <> p.q_id)"""
+    return vs.query(
+        [
+            vs.E,
+            *_hier_ctes(target=target, num_queries=num_queries, nprobe=nprobe),
+            vs.gate("h_probes", "h_ca", "cell"),
+            vs.rerank("scored", "list_cosine_similarity", "cos"),
+        ],
+        vs.cosine_topk(k),
     )
-    ctes.append(
-        """scored AS (SELECT q_id, n_id,
-            list_cosine_similarity(qe.v, ne.v) AS cos
-        FROM cand
-        JOIN h_e qe ON qe.vec_id = q_id
-        JOIN h_e ne ON ne.vec_id = n_id)"""
-    )
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined}
-    SELECT q_id, n_id, round(cos, 4) AS cosine, rank FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
-        FROM scored
-    ) WHERE rank <= {k}
-    """
 
 
 def _ivf_pq_topk_hier_oracle(
@@ -1697,61 +1288,14 @@ def _ivf_pq_topk_hier_oracle(
 ) -> str:
     """Twin of operators/clustering.ivf_pq_topk with ``hier_model``:
     the two-level quantizer CTEs provide the candidate gate, the PQ
-    Lloyd chains and broadcast ADC tables of _pq_topk_oracle score it,
-    DECIMAL cross-subspace sums and (adc, n_id) rank as ever."""
-    width = dim // m
-    ctes = _hier_ctes(
+    Lloyd chains and ADC tail of pq_topk score it."""
+    coarse = _hier_ctes(
         target=target, dim=dim, num_queries=num_queries, nprobe=nprobe
     )
-    ctes.append(
-        """cand AS (SELECT p.q_id, a.vec_id
-        FROM h_probes p JOIN h_ca a ON p.cell = a.cell
-        WHERE a.vec_id <> p.q_id)"""
+    return _adc_oracle(
+        [*coarse, vs.gate("h_probes", "h_ca", "cell")],
+        m, k_codes, iterations, pq_stride, dim, num_queries, k,
     )
-    for s in range(m):
-        ctes.extend(_pq_ctes(s, width, k_codes, iterations, pq_stride))
-    d2q = (
-        "list_reduce(list_prepend(0.0, "
-        "[(q.qv[i]-c.cv[i])*(q.qv[i]-c.cv[i]) for i in range(1, {n})]), "
-        "(a,x) -> a+x)".format(n=width + 1)
-    )
-    for s in range(m):
-        lo, hi = s * width + 1, (s + 1) * width
-        ctes.append(
-            f"""q{s} AS (SELECT vec_id AS q_id,
-                (CAST(embedding AS DOUBLE[]))[{lo}:{hi}] qv
-                FROM embeddings WHERE vec_id < {num_queries})"""
-        )
-        ctes.append(
-            f"""dt{s} AS (SELECT q.q_id, c.cid, {d2q} AS d2
-                FROM q{s} q, s{s}_c{iterations - 1} c)"""
-        )
-    union = "\n        UNION ALL ".join(
-        f"""SELECT a.vec_id, d.q_id, d.d2
-            FROM s{s}_a{iterations} a
-            JOIN dt{s} d ON a.cid = d.cid
-            JOIN cand g ON g.vec_id = a.vec_id AND g.q_id = d.q_id"""
-        for s in range(m)
-    )
-    ctes.append(f"parts AS ({union})")
-    ctes.append(
-        """adc AS (
-        SELECT q_id, vec_id,
-               sum(CAST(d2 AS DECIMAL(27,10))) AS adc_dec
-        FROM parts GROUP BY q_id, vec_id)"""
-    )
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined}
-    SELECT q_id, vec_id AS n_id,
-           CAST(round(adc_dec, 4) AS DOUBLE) AS adc_d2,
-           CAST(rank AS BIGINT) AS rank
-    FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY adc_dec, vec_id) AS rank
-        FROM adc)
-    WHERE rank <= {k}
-    """
 
 
 def _semdedup_hier_oracle(
@@ -1760,39 +1304,17 @@ def _semdedup_hier_oracle(
     """Twin of operators/clustering.semdedup_scaled with ``hier_model``:
     the two-level cell assignment (h_ca carries the exact-fold d2 to
     the OWN cell centroid — the keep-precedence key), then the capped
-    drop verdict of _semdedup_scaled_oracle on the cell id."""
-    ctes = _hier_ctes(target=target)
-    ctes.append("a AS (SELECT vec_id, v, cell AS cid, d2 FROM h_ca)")
-    ctes.append(
-        f"""droppers AS (SELECT * FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY cid ORDER BY d2 DESC, vec_id) pr FROM a)
-          WHERE pr <= {max_bucket})"""
+    drop verdict of semdedup_scaled on the cell id."""
+    return vs.semdedup(
+        [
+            vs.E,
+            *_hier_ctes(target=target),
+            "a AS (SELECT vec_id, v, cell AS cid, d2 FROM h_ca)",
+        ],
+        "a",
+        threshold,
+        max_bucket,
     )
-    ctes.append(
-        f"""dropped AS (
-        SELECT DISTINCT x.vec_id
-        FROM a x JOIN droppers y
-          ON x.cid = y.cid AND x.vec_id != y.vec_id
-         AND (y.d2 > x.d2 OR (y.d2 = x.d2 AND y.vec_id < x.vec_id))
-         AND (CASE WHEN list_dot_product(x.v, x.v) = 0
-                     OR list_dot_product(y.v, y.v) = 0 THEN 0.0
-                   ELSE list_cosine_similarity(x.v, y.v) END)
-             >= {threshold})"""
-    )
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined}
-    SELECT a.cid AS cluster_id,
-           count(*) AS n_vectors,
-           CAST(sum(CASE WHEN dr.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_dropped,
-           count(*) - CAST(sum(CASE WHEN dr.vec_id IS NOT NULL
-                                    THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_kept
-    FROM a LEFT JOIN dropped dr ON a.vec_id = dr.vec_id
-    GROUP BY a.cid
-    """
 
 
 # Trained two-level quantizer models cached per corpus (train once,
@@ -3113,12 +2635,15 @@ def q_ivf_pq_topk_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cluster_sample_oracle(
-    per_cluster: int = 10, k: int = 8, iterations: int = 2, stride: int = 7
+    per_cluster: int = 10,
+    k: int = 8,
+    iterations: int = 2,
+    stride: int = 7,
+    dim: int = 64,
 ) -> str:
-    joined = ",\n    ".join(_kmeans_ctes(k, iterations, stride))
-    return f"""
-    WITH {joined}
-    SELECT cid AS cluster_id,
+    return vs.query(
+        [vs.E, *vs.lloyd("", dim, k, iterations, stride)],
+        f"""SELECT cid AS cluster_id,
            CAST(rk AS BIGINT) AS sample_rank,
            vec_id, label
     FROM (
@@ -3127,8 +2652,8 @@ def _cluster_sample_oracle(
                    PARTITION BY a.cid
                    ORDER BY md5(CAST(a.vec_id AS VARCHAR)), a.vec_id) AS rk
         FROM a{iterations} a JOIN embeddings e2 ON a.vec_id = e2.vec_id)
-    WHERE rk <= {per_cluster}
-    """
+    WHERE rk <= {per_cluster}""",
+    )
 
 
 @register("cluster_balanced_sample", oracle=_cluster_sample_oracle())
@@ -3418,88 +2943,47 @@ def _mips_lsh_oracle(
     the planes themselves are REBUILT here from the integer recurrence
     of similarity.portable_planes (round-10 VERDICT item 8: the
     previous numpy-seeded draw shipped 45 KB of float literals into
-    the oracle; the recurrence is five integer ops and one double
-    divide, so the CTE below is ~1 KB and regeneration-proof)."""
-    from ..operators.similarity import (
-        PLANE_ADD2,
-        PLANE_MOD1,
-        PLANE_MOD2,
-        PLANE_MUL1,
-        PLANE_MUL2,
+    the oracle)."""
+    return _mips_lsh_sql(k, num_queries, dim, num_planes, num_tables * num_planes)
+
+
+def _mips_lsh_sql(
+    k: int,
+    num_queries: int,
+    dim: int,
+    num_planes: int | str,
+    pool: int,
+    params: tuple[str, ...] = (),
+    limit: str | None = None,
+) -> str:
+    """The MIPS LSH pipeline of the three mips_topk_lsh oracles: the
+    augmentation, ``pool`` portable planes over dim + 1 (cut to
+    ``limit`` planes when the ``params`` CTEs derive the plane count
+    ``nb``), corpus codes on ``av``, query codes on ``aq``, and the
+    exact inner-product top-k."""
+    return vs.query(
+        [
+            vs.E,
+            *vs.MIPS_AUGMENT,
+            *params,
+            *vs.planes(pool, dim + 1, limit),
+            *vs.bucket_codes("ccodes", "aug", "av", num_planes),
+            *vs.bucket_codes("qcodes", "aug", "aq", num_planes, num_queries),
+            vs.lsh_cand("qcodes", "ccodes", num_queries),
+            vs.rerank("scored", "list_dot_product", "dp"),
+        ],
+        vs.topk("scored", "dp DESC", k, "q_id, n_id, round(dp, 4) AS dotp, rank"),
     )
 
-    d1 = dim + 1
-    # collapse indentation: the whole point of the recurrence is an
-    # oracle that stays a compact, reviewable string (< 2 KB)
-    import re as _re
 
-    return _re.sub(r"\n +", "\n ", f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-    m AS (SELECT sqrt(max(list_dot_product(v, v))) AS mx FROM e),
-    u AS (SELECT vec_id, v, [x / m.mx FOR x IN v] AS uu
-          FROM e CROSS JOIN m),
-    aug AS (
-        SELECT vec_id, v,
-               list_append(uu, sqrt(greatest(0.0,
-                   1.0 - list_dot_product(uu, uu)))) AS av,
-               list_append(uu, 0.0) AS aq
-        FROM u
-    ),
-    h2s AS (
-        SELECT idx,
-               (((idx + 1) * {PLANE_MUL1}) % {PLANE_MOD1}
-                * {PLANE_MUL2} + {PLANE_ADD2}) % {PLANE_MOD2} AS h2
-        FROM range({num_tables * num_planes * d1}) t(idx)
-    ),
-    planes AS (
-        SELECT idx // {d1} AS pid,
-               list(((h2 * h2 % {PLANE_MOD2}) * {PLANE_MUL1} % {PLANE_MOD2}
-                     + h2) % {PLANE_MOD2} / {PLANE_MOD2}.0 * 2.0 - 1.0
-                    ORDER BY idx) AS p
-        FROM h2s GROUP BY pid
-    ),
-    cb AS (
-        SELECT aug.vec_id, pid // {num_planes} AS tbl, pid % {num_planes} AS j,
-               CASE WHEN list_dot_product(aug.av, planes.p) >= 0
-                    THEN 1 ELSE 0 END AS b
-        FROM aug CROSS JOIN planes
-    ),
-    qb AS (
-        SELECT aug.vec_id, pid // {num_planes} AS tbl, pid % {num_planes} AS j,
-               CASE WHEN list_dot_product(aug.aq, planes.p) >= 0
-                    THEN 1 ELSE 0 END AS b
-        FROM aug CROSS JOIN planes
-        WHERE aug.vec_id < {num_queries}
-    ),
-    ccodes AS (
-        SELECT vec_id,
-               CAST(sum(b * (1 << ({num_planes} - 1 - j)))
-                    + tbl * {1 << num_planes} AS BIGINT) AS bucket
-        FROM cb GROUP BY vec_id, tbl
-    ),
-    qcodes AS (
-        SELECT vec_id,
-               CAST(sum(b * (1 << ({num_planes} - 1 - j)))
-                    + tbl * {1 << num_planes} AS BIGINT) AS bucket
-        FROM qb GROUP BY vec_id, tbl
-    ),
-    cand AS (
-        SELECT DISTINCT qc.vec_id AS q_id, cc.vec_id AS n_id
-        FROM qcodes qc JOIN ccodes cc
-          ON qc.bucket = cc.bucket AND qc.vec_id <> cc.vec_id
-    ),
-    scored AS (
-        SELECT c.q_id, c.n_id, list_dot_product(eq.v, en.v) dp
-        FROM cand c
-        JOIN e eq ON eq.vec_id = c.q_id
-        JOIN e en ON en.vec_id = c.n_id
-    )
-    SELECT q_id, n_id, round(dp, 4) AS dotp, rank FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY dp DESC, n_id) rank
-        FROM scored
-    ) WHERE rank <= {k}
-    """)
+def _planes_for_corpus(target_bucket: int) -> str:
+    """``pb`` (nb): similarity.lsh_planes_for_corpus from COUNT(*) —
+    n <= target ? 4 : clamp(ceil(log2(n / target)), 4, 16)."""
+    return f"""pb AS (
+        SELECT CASE WHEN n <= {target_bucket} THEN 4
+               ELSE GREATEST(4, LEAST(16, CAST(ceil(
+                    log2(n / {target_bucket}.0)) AS BIGINT))) END AS nb
+        FROM (SELECT count(*) AS n FROM e))"""
 
 
 @register("mips_topk_lsh", oracle=_mips_lsh_oracle())
@@ -3588,62 +3072,17 @@ def _ann_recall_oracle(
     dim: int = 64,
 ) -> str:
     """DuckDB twin of similarity.ann_recall_eval: the exact top-k CTE
-    and the FULL deterministic LSH replay (same portable-recurrence
-    planes as _topk_lsh_oracle — integer CTE, no literals, round-11
-    VERDICT item 4), left-joined per (q_id, n_id); recall is exact
-    small-int division (BIGINT/BIGINT -> DOUBLE in both engines).
-    Indentation collapsed like _mips_lsh_oracle: the point of the
-    recurrence is an oracle that stays a compact string (< 2 KB)."""
-    import re as _re
-
-    return _re.sub(r"\n +", "\n ", f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-    {_portable_planes_ctes(num_tables * num_planes, dim)},
-    bits AS (
-        SELECT e.vec_id, pid // {num_planes} AS tbl, pid % {num_planes} AS j,
-               CASE WHEN list_dot_product(e.v, planes.p) >= 0
-                    THEN 1 ELSE 0 END AS b
-        FROM e CROSS JOIN planes
-    ),
-    codes AS (
-        SELECT vec_id,
-               CAST(sum(b * (1 << ({num_planes} - 1 - j)))
-                    + tbl * {1 << num_planes} AS BIGINT) AS bucket
-        FROM bits GROUP BY vec_id, tbl
-    ),
-    cand AS (
-        SELECT DISTINCT qc.vec_id AS q_id, cc.vec_id AS n_id
-        FROM codes qc JOIN codes cc
-          ON qc.bucket = cc.bucket AND qc.vec_id <> cc.vec_id
-        WHERE qc.vec_id < {num_queries}
-    ),
-    lsh_scored AS (
-        SELECT c.q_id, c.n_id, list_cosine_similarity(eq.v, en.v) cos
-        FROM cand c
-        JOIN e eq ON eq.vec_id = c.q_id
-        JOIN e en ON en.vec_id = c.n_id
-    ),
-    approx AS (
-        SELECT q_id, n_id FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY q_id ORDER BY cos DESC, n_id) rank
-            FROM lsh_scored
-        ) WHERE rank <= {k}
-    ),
-    exact_scored AS (
-        SELECT q.vec_id q_id, c.vec_id n_id,
-               list_cosine_similarity(q.v, c.v) cos
-        FROM e q JOIN e c ON q.vec_id <> c.vec_id
-        WHERE q.vec_id < {num_queries}
-    ),
-    exact AS (
-        SELECT q_id, n_id FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY q_id ORDER BY cos DESC, n_id) rank
-            FROM exact_scored
-        ) WHERE rank <= {k}
-    )
-    SELECT ex.q_id,
+    and the FULL deterministic LSH replay of similarity_topk_lsh,
+    left-joined per (q_id, n_id); recall is exact small-int division
+    (BIGINT/BIGINT -> DOUBLE in both engines)."""
+    return vs.query(
+        [
+            *_cosine_lsh_ctes(num_queries, num_tables, num_planes, dim),
+            f"approx AS ({vs.topk('scored', 'cos DESC', k, 'q_id, n_id')})",
+            vs.exact("exact_scored", "list_cosine_similarity", "cos", num_queries),
+            f"exact AS ({vs.topk('exact_scored', 'cos DESC', k, 'q_id, n_id')})",
+        ],
+        """SELECT ex.q_id,
            count(*) AS n_exact,
            CAST(sum(CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_hit,
@@ -3651,8 +3090,8 @@ def _ann_recall_oracle(
                 AS BIGINT) / count(*) AS recall
     FROM exact ex
     LEFT JOIN approx a ON a.q_id = ex.q_id AND a.n_id = ex.n_id
-    GROUP BY ex.q_id
-    """)
+    GROUP BY ex.q_id""",
+    )
 
 
 @register("ann_recall_eval", oracle=_ann_recall_oracle())
@@ -3737,97 +3176,23 @@ def _mips_lsh_oracle_derived(
     x 16 planes) and filtered to nt*nb because DuckDB's range() takes
     only constants; 66k generator rows cost nothing. Everything
     downstream (augmentation, recurrence planes, codes, candidate
-    join, exact re-rank) matches _mips_lsh_oracle."""
-    from ..operators.similarity import (
-        PLANE_ADD2,
-        PLANE_MOD1,
-        PLANE_MOD2,
-        PLANE_MUL1,
-        PLANE_MUL2,
-    )
-
-    d1 = dim + 1
-    import re as _re
-
-    return _re.sub(r"\n +", "\n ", f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-    params AS (
+    join, exact re-rank) is the shared _mips_lsh_sql pipeline."""
+    return _mips_lsh_sql(
+        k,
+        num_queries,
+        dim,
+        "nb",
+        64 * 16,
+        (
+            _planes_for_corpus(target_bucket),
+            f"""params AS (
         SELECT nb, GREATEST(4, LEAST(64, CAST(ceil(
                    ln(1.0 - {recall}) / ln(1.0 - pow({agree_p}, nb)))
                    AS BIGINT))) AS nt
-        FROM (
-            SELECT CASE WHEN n <= {target_bucket} THEN 4
-                   ELSE GREATEST(4, LEAST(16, CAST(ceil(
-                        log2(n / {target_bucket}.0)) AS BIGINT))) END AS nb
-            FROM (SELECT count(*) AS n FROM e)
-        )
-    ),
-    m AS (SELECT sqrt(max(list_dot_product(v, v))) AS mx FROM e),
-    u AS (SELECT vec_id, v, [x / m.mx FOR x IN v] AS uu
-          FROM e CROSS JOIN m),
-    aug AS (
-        SELECT vec_id, v,
-               list_append(uu, sqrt(greatest(0.0,
-                   1.0 - list_dot_product(uu, uu)))) AS av,
-               list_append(uu, 0.0) AS aq
-        FROM u
-    ),
-    h2s AS (
-        SELECT idx,
-               (((idx + 1) * {PLANE_MUL1}) % {PLANE_MOD1}
-                * {PLANE_MUL2} + {PLANE_ADD2}) % {PLANE_MOD2} AS h2
-        FROM range({64 * 16 * d1}) t(idx)
-        WHERE idx < (SELECT nt * nb * {d1} FROM params)
-    ),
-    planes AS (
-        SELECT idx // {d1} AS pid,
-               list(((h2 * h2 % {PLANE_MOD2}) * {PLANE_MUL1} % {PLANE_MOD2}
-                     + h2) % {PLANE_MOD2} / {PLANE_MOD2}.0 * 2.0 - 1.0
-                    ORDER BY idx) AS p
-        FROM h2s GROUP BY pid
-    ),
-    cb AS (
-        SELECT aug.vec_id, pid // nb AS tbl, pid % nb AS j,
-               CASE WHEN list_dot_product(aug.av, planes.p) >= 0
-                    THEN 1 ELSE 0 END AS b
-        FROM aug CROSS JOIN planes CROSS JOIN params
-    ),
-    qb AS (
-        SELECT aug.vec_id, pid // nb AS tbl, pid % nb AS j,
-               CASE WHEN list_dot_product(aug.aq, planes.p) >= 0
-                    THEN 1 ELSE 0 END AS b
-        FROM aug CROSS JOIN planes CROSS JOIN params
-        WHERE aug.vec_id < {num_queries}
-    ),
-    ccodes AS (
-        SELECT vec_id,
-               CAST(sum(b * (1 << (nb - 1 - j)))
-                    + tbl * (1 << nb) AS BIGINT) AS bucket
-        FROM cb CROSS JOIN params GROUP BY vec_id, tbl, nb
-    ),
-    qcodes AS (
-        SELECT vec_id,
-               CAST(sum(b * (1 << (nb - 1 - j)))
-                    + tbl * (1 << nb) AS BIGINT) AS bucket
-        FROM qb CROSS JOIN params GROUP BY vec_id, tbl, nb
-    ),
-    cand AS (
-        SELECT DISTINCT qc.vec_id AS q_id, cc.vec_id AS n_id
-        FROM qcodes qc JOIN ccodes cc
-          ON qc.bucket = cc.bucket AND qc.vec_id <> cc.vec_id
-    ),
-    scored AS (
-        SELECT c.q_id, c.n_id, list_dot_product(eq.v, en.v) dp
-        FROM cand c
-        JOIN e eq ON eq.vec_id = c.q_id
-        JOIN e en ON en.vec_id = c.n_id
+        FROM pb)""",
+        ),
+        limit="(SELECT nt * nb FROM params)",
     )
-    SELECT q_id, n_id, round(dp, 4) AS dotp, rank FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY dp DESC, n_id) rank
-        FROM scored
-    ) WHERE rank <= {k}
-    """)
 
 
 @register(
@@ -3882,40 +3247,18 @@ def _mips_lsh_oracle_paired(
     the derivation: the T-step margins at both fixtures are >= 5e-4
     (numpy dry run, bench/plane_audit_r12.json round) while acos/avg
     cross-engine noise is ~1e-15, so the scan cannot flip; everything
-    downstream matches _mips_lsh_oracle_derived."""
-    from ..operators.similarity import (
-        PLANE_ADD2,
-        PLANE_MOD1,
-        PLANE_MOD2,
-        PLANE_MUL1,
-        PLANE_MUL2,
-    )
-
-    d1 = dim + 1
-    import re as _re
-
-    return _re.sub(r"\n +", "\n ", f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-    pb AS (
-        SELECT CASE WHEN n <= {target_bucket} THEN 4
-               ELSE GREATEST(4, LEAST(16, CAST(ceil(
-                    log2(n / {target_bucket}.0)) AS BIGINT))) END AS nb
-        FROM (SELECT count(*) AS n FROM e)
-    ),
-    m AS (SELECT sqrt(max(list_dot_product(v, v))) AS mx FROM e),
-    xs AS (
-        SELECT q.vec_id q_id, c.vec_id n_id, list_dot_product(q.v, c.v) dp
-        FROM e q JOIN e c ON q.vec_id <> c.vec_id
-        WHERE q.vec_id < {num_queries}
-    ),
-    tp AS (
-        SELECT q_id, round(dp, 4) AS dotp FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY q_id ORDER BY dp DESC, n_id) rk
-            FROM xs
-        ) WHERE rk <= {k}
-    ),
-    pairp AS (
+    downstream is the shared _mips_lsh_sql pipeline."""
+    return _mips_lsh_sql(
+        k,
+        num_queries,
+        dim,
+        "nb",
+        64 * 16,
+        (
+            _planes_for_corpus(target_bucket),
+            vs.exact("xs", "list_dot_product", "dp", num_queries),
+            f"tp AS ({vs.topk('xs', 'dp DESC', k, 'q_id, round(dp, 4) AS dotp')})",
+            f"""pairp AS (
         SELECT least(0.99, greatest(0.01,
                    1.0 - acos(least(1.0, greatest(-1.0,
                        tp.dotp / (m.mx * qn.qnorm)))) / pi())) AS p
@@ -3923,85 +3266,20 @@ def _mips_lsh_oracle_paired(
         JOIN (SELECT vec_id, sqrt(list_dot_product(v, v)) qnorm
               FROM e WHERE vec_id < {num_queries}) qn
           ON qn.vec_id = tp.q_id
-        CROSS JOIN m
-    ),
-    ts AS (
+        CROSS JOIN m)""",
+            """ts AS (
         SELECT tt.t AS cand_t,
                avg(1.0 - pow(1.0 - pow(p, nb), tt.t)) AS rec
         FROM pairp CROSS JOIN range(4, 65) tt(t) CROSS JOIN pb
-        GROUP BY tt.t
-    ),
-    params AS (
+        GROUP BY tt.t)""",
+            f"""params AS (
         SELECT nb, COALESCE(
             (SELECT min(cand_t) FROM ts WHERE rec >= {recall}),
             64) AS nt
-        FROM pb
-    ),
-    u AS (SELECT vec_id, v, [x / m.mx FOR x IN v] AS uu
-          FROM e CROSS JOIN m),
-    aug AS (
-        SELECT vec_id, v,
-               list_append(uu, sqrt(greatest(0.0,
-                   1.0 - list_dot_product(uu, uu)))) AS av,
-               list_append(uu, 0.0) AS aq
-        FROM u
-    ),
-    h2s AS (
-        SELECT idx,
-               (((idx + 1) * {PLANE_MUL1}) % {PLANE_MOD1}
-                * {PLANE_MUL2} + {PLANE_ADD2}) % {PLANE_MOD2} AS h2
-        FROM range({64 * 16 * d1}) t(idx)
-        WHERE idx < (SELECT nt * nb * {d1} FROM params)
-    ),
-    planes AS (
-        SELECT idx // {d1} AS pid,
-               list(((h2 * h2 % {PLANE_MOD2}) * {PLANE_MUL1} % {PLANE_MOD2}
-                     + h2) % {PLANE_MOD2} / {PLANE_MOD2}.0 * 2.0 - 1.0
-                    ORDER BY idx) AS p
-        FROM h2s GROUP BY pid
-    ),
-    cb AS (
-        SELECT aug.vec_id, pid // nb AS tbl, pid % nb AS j,
-               CASE WHEN list_dot_product(aug.av, planes.p) >= 0
-                    THEN 1 ELSE 0 END AS b
-        FROM aug CROSS JOIN planes CROSS JOIN params
-    ),
-    qb AS (
-        SELECT aug.vec_id, pid // nb AS tbl, pid % nb AS j,
-               CASE WHEN list_dot_product(aug.aq, planes.p) >= 0
-                    THEN 1 ELSE 0 END AS b
-        FROM aug CROSS JOIN planes CROSS JOIN params
-        WHERE aug.vec_id < {num_queries}
-    ),
-    ccodes AS (
-        SELECT vec_id,
-               CAST(sum(b * (1 << (nb - 1 - j)))
-                    + tbl * (1 << nb) AS BIGINT) AS bucket
-        FROM cb CROSS JOIN params GROUP BY vec_id, tbl, nb
-    ),
-    qcodes AS (
-        SELECT vec_id,
-               CAST(sum(b * (1 << (nb - 1 - j)))
-                    + tbl * (1 << nb) AS BIGINT) AS bucket
-        FROM qb CROSS JOIN params GROUP BY vec_id, tbl, nb
-    ),
-    cand AS (
-        SELECT DISTINCT qc.vec_id AS q_id, cc.vec_id AS n_id
-        FROM qcodes qc JOIN ccodes cc
-          ON qc.bucket = cc.bucket AND qc.vec_id <> cc.vec_id
-    ),
-    scored AS (
-        SELECT c.q_id, c.n_id, list_dot_product(eq.v, en.v) dp
-        FROM cand c
-        JOIN e eq ON eq.vec_id = c.q_id
-        JOIN e en ON en.vec_id = c.n_id
+        FROM pb)""",
+        ),
+        limit="(SELECT nt * nb FROM params)",
     )
-    SELECT q_id, n_id, round(dp, 4) AS dotp, rank FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY dp DESC, n_id) rank
-        FROM scored
-    ) WHERE rank <= {k}
-    """)
 
 
 # Pair-derived (B, T) configs cached per corpus: the exact-pair

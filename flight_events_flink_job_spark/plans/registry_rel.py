@@ -58,6 +58,7 @@ from ..operators.relational import (
 from ..operators.similarity import cosine_topk_ivf
 from ..sources.fixtures import load_table
 from ..sources.flight_adapter import FLIGHTS_CTE
+from . import vector_sql as vs
 from .registry import ORACLES, register
 
 
@@ -466,48 +467,14 @@ _IVF_MODELS: dict[tuple, list] = {}
 
 @register(
     "similarity_topk_ivf",
-    oracle="""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-    -- effective stride mirrors ivf_centroids' cap-widening (round-7
-    -- ADVICE item 2): past the 4096-centroid cap the Spark side widens
-    -- the nominal stride to ceil((max_id+1)/4096), so the oracle must too
-    eff AS (SELECT GREATEST(61, CAST(ceil((max(vec_id) + 1) / 4096.0)
-                                 AS BIGINT)) AS st FROM e),
-    c AS (SELECT vec_id AS cid, v AS cv FROM e
-          WHERE vec_id % (SELECT st FROM eff) = 0),
-    d AS (
-        SELECT e.vec_id, c.cid,
-               list_reduce(list_prepend(0.0,
-                   [(e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i])
-                    for i in range(1, 65)]),
-                   (a, x) -> a + x) AS d2
-        FROM e, c
+    oracle=vs.query(
+        [
+            vs.E,
+            *vs.ivf(61, 64, num_queries=16, nprobe=4),
+            vs.rerank("scored", "list_cosine_similarity", "cos"),
+        ],
+        vs.cosine_topk(10),
     ),
-    ranked AS (
-        SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-        FROM d
-    ),
-    assign AS (SELECT vec_id, cid FROM ranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS q_id, cid FROM ranked
-               WHERE vec_id < 16 AND rn <= 4),
-    cand AS (
-        SELECT p.q_id, a.vec_id AS n_id
-        FROM probes p JOIN assign a ON p.cid = a.cid
-        WHERE a.vec_id <> p.q_id
-    ),
-    scored AS (
-        SELECT q_id, n_id, list_cosine_similarity(qe.v, ne.v) AS cos
-        FROM cand
-        JOIN e qe ON qe.vec_id = q_id
-        JOIN e ne ON ne.vec_id = n_id
-    )
-    SELECT q_id, n_id, round(cos, 4) AS cosine, rank FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
-        FROM scored
-    ) WHERE rank <= 10
-    """,
 )
 def q_similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: narrow centroid assignment, nprobe=4 posting-list probe,

@@ -36,9 +36,9 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .roundtrip import EVENT_STREAM_SCHEMA as CHAINED_SCHEMA
 from .roundtrip import drain, stage_time_ranges, staged_stream
 
-CHAINED_SCHEMA = "user_id long, ts timestamp, event_type string, value double"
 SENTINEL_TYPE = "~watermark-sentinel~"
 
 

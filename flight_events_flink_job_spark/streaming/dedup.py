@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .roundtrip import drain, staged_stream
+from .roundtrip import KEYED_EVENT_SCHEMA, drain, staged_stream
 
 
 def dedup_stream(events: DataFrame, key: str, ts_col: str, watermark: str) -> DataFrame:
@@ -46,12 +46,7 @@ def drain_deduped_from_staged(
     """Stream the staged (duplicated) event files in rate-limited
     micro-batches through the dedup operator and drain them (append —
     a first occurrence is final when seen)."""
-    from .stateful import EVENT_STREAM_SCHEMA
-
-    stream = staged_stream(
-        spark, "event_id LONG, " + EVENT_STREAM_SCHEMA, staging_dir,
-        files_per_trigger,
-    )
+    stream = staged_stream(spark, KEYED_EVENT_SCHEMA, staging_dir, files_per_trigger)
     return drain(
         dedup_stream(stream, "event_id", "ts", watermark="60 DAYS"),
         checkpoint_dir,

@@ -21,9 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .roundtrip import drain, staged_stream
-
-EVENT_ENRICH_SCHEMA = "user_id long, ts timestamp, event_type string, value double"
+from .roundtrip import EVENT_STREAM_SCHEMA, drain, staged_stream
 
 
 def enrich_stream(stream: DataFrame, customer: DataFrame) -> DataFrame:
@@ -65,6 +63,6 @@ def drain_enriched_from_staged(
     """Drain staged event parts through the stream-static enrichment in
     rate-limited micro-batches and return the final aggregate."""
     stream = staged_stream(
-        spark, EVENT_ENRICH_SCHEMA, staging_dir, files_per_trigger
+        spark, EVENT_STREAM_SCHEMA, staging_dir, files_per_trigger
     )
     return drain(enrich_stream(stream, customer), checkpoint_dir, "complete")

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .roundtrip import drain, staged_stream
+from .roundtrip import KEYED_EVENT_SCHEMA, drain, staged_stream
 
 
 def interval_join(
@@ -96,12 +96,9 @@ def drain_conversions_from_staged(
     over rate-limited micro-batches of the staged events, drained with
     availableNow (append mode — inner-join matches are final the moment
     they are found)."""
-    from .stateful import EVENT_STREAM_SCHEMA
-
     def side(event_type: str) -> DataFrame:
         return staged_stream(
-            spark, "event_id LONG, " + EVENT_STREAM_SCHEMA, staging_dir,
-            files_per_trigger,
+            spark, KEYED_EVENT_SCHEMA, staging_dir, files_per_trigger
         ).where(F.col("event_type") == event_type)
 
     return drain(

@@ -32,11 +32,8 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .roundtrip import drain, stage_time_ranges, staged_stream
+from .roundtrip import KEYED_EVENT_SCHEMA, drain, stage_time_ranges, staged_stream
 
-JOIN_STAGE_SCHEMA = (
-    "event_id long, user_id long, ts timestamp, event_type string, value double"
-)
 SENTINEL_USER = -1
 
 
@@ -105,7 +102,7 @@ def drain_left_join_from_staged(
 
     def side(event_type: str) -> DataFrame:
         return staged_stream(
-            spark, JOIN_STAGE_SCHEMA, staging_dir, files_per_trigger
+            spark, KEYED_EVENT_SCHEMA, staging_dir, files_per_trigger
         ).where(F.col("event_type") == event_type)
 
     return drain(

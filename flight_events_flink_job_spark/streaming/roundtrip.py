@@ -27,6 +27,12 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# The staged event rows the event round trips stream (the events
+# fixture's columns); the keyed round trips stage event_id in front.
+EVENT_STREAM_SCHEMA = "user_id LONG, ts TIMESTAMP, event_type STRING, value DOUBLE"
+KEYED_EVENT_SCHEMA = "event_id LONG, " + EVENT_STREAM_SCHEMA
 
 
 def staged_stream(
@@ -60,11 +66,17 @@ def drain(df: DataFrame, checkpoint_dir: str, output_mode: str) -> DataFrame:
         .start()
         .awaitTermination()
     )
+    return read_back(spark, out_dir, df.schema)
+
+
+def read_back(spark: SparkSession, out_dir: str, schema: StructType) -> DataFrame:
+    """The parquet a drain wrote to ``out_dir``, read under its declared
+    ``schema`` (no footer-inference job); an empty frame of ``schema``
+    when no micro-batch ran (nothing staged)."""
     path = spark._jvm.org.apache.hadoop.fs.Path(out_dir)
     if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
-        # No micro-batch ran (nothing staged): an empty result.
-        return spark.createDataFrame([], df.schema)
-    return spark.read.schema(df.schema).parquet(out_dir)
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(out_dir)
 
 
 def stage_time_ranges(

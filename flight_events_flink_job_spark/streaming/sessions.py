@@ -27,9 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .roundtrip import drain, staged_stream
-
-EVENT_SESSION_SCHEMA = "user_id long, ts timestamp, event_type string, value double"
+from .roundtrip import EVENT_STREAM_SCHEMA, drain, staged_stream
 
 
 def sessionize_stream(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
@@ -75,6 +73,6 @@ def drain_sessions_from_staged(
     rate-limited micro-batches (availableNow) and return the final
     session table (complete mode: the last snapshot)."""
     stream = staged_stream(
-        spark, EVENT_SESSION_SCHEMA, staging_dir, files_per_trigger
+        spark, EVENT_STREAM_SCHEMA, staging_dir, files_per_trigger
     )
     return drain(sessionize_stream(stream, gap), checkpoint_dir, "complete")

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_arrow, to_double
-from .roundtrip import drain, staged_stream
+from .roundtrip import drain, read_back, staged_stream
 
 # Staged-parquet twin of the embeddings fixture (post ingest-contract).
 EMB_SCHEMA = "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
@@ -105,6 +105,10 @@ def drain_ivfpq_queries_from_staged(
     ``batch_hook(batch_id, seconds)`` (optional) observes per-batch
     wall times — the soak tool uses it to prove the no-rebuild claim
     (bench/stream_ivfpq_soak_r12.json).
+
+    The answers are read back like every drain's
+    (:func:`roundtrip.read_back`): under the serve frame's schema, and
+    as an empty frame of it when nothing was staged.
     """
     import time as _time
 
@@ -112,6 +116,10 @@ def drain_ivfpq_queries_from_staged(
 
     stream = staged_stream(spark, EMB_SCHEMA, staging_dir, files_per_trigger)
     out_dir = f"{checkpoint_dir}_out"
+    # the serve frame's schema, from analysing its plan over no queries
+    schema = ivf_pq_query(
+        index, spark.createDataFrame([], EMB_SCHEMA), k=k, nprobe=nprobe
+    ).schema
 
     def serve(batch_df: DataFrame, batch_id: int) -> None:
         t0 = _time.monotonic()
@@ -128,4 +136,4 @@ def drain_ivfpq_queries_from_staged(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return read_back(spark, out_dir, schema)

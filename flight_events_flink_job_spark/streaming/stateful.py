@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..session import rocksdb_state_store
-from .roundtrip import drain, staged_stream
+from .roundtrip import EVENT_STREAM_SCHEMA, drain, staged_stream
 
 STATE_SCHEMA = (
     "n_events LONG, sum_value DOUBLE, last_ts TIMESTAMP, "
@@ -114,9 +114,6 @@ def track_user_activity(events: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-EVENT_STREAM_SCHEMA = "user_id LONG, ts TIMESTAMP, event_type STRING, value DOUBLE"
 
 
 def drain_user_activity(

@@ -7,6 +7,7 @@ import duckdb
 import pytest
 
 from flight_events_flink_job_spark.plans import ORACLES, QUERIES
+from flight_events_flink_job_spark.plans import vector_sql as vs
 from flight_events_flink_job_spark.schemas import FIXTURE_TABLES
 
 import sys
@@ -30,19 +31,24 @@ def test_oracle_stride_widening_matches_ivf_centroids():
     """Round-7 ADVICE item 2: the IVF-family oracles hard-coded
     ``vec_id % stride = 0`` while the Spark side widens the stride to
     ceil((max_id+1)/4096) past the centroid cap. The oracles now
-    compute the effective stride in SQL; this pins the SQL arithmetic
-    to the exact Python widening across the cap boundary (including
-    the first widened value and deep past it)."""
+    compute the effective stride in SQL; this runs the very CTE they
+    embed (vector_sql.effective_stride) and pins it to the exact
+    Python widening across the cap boundary (including the first
+    widened value and deep past it)."""
     con = duckdb.connect()
     for nominal in (61, 64):
         cap = 4096
         for max_id in (499, 1999, nominal * cap - 1, nominal * cap,
                        nominal * cap + 1, 799_999, 10_000_000):
             python_stride = max(nominal, -(-(max_id + 1) // cap))
-            (sql_stride,) = con.execute(
-                f"SELECT GREATEST({nominal}, "
-                f"CAST(ceil(({max_id} + 1) / {cap}.0) AS BIGINT))"
-            ).fetchone()
+            sql = vs.query(
+                [
+                    f"e AS (SELECT CAST({max_id} AS BIGINT) AS vec_id)",
+                    vs.effective_stride(nominal),
+                ],
+                "SELECT st FROM iv_s",
+            )
+            (sql_stride,) = con.execute(sql).fetchone()
             assert sql_stride == python_stride, (nominal, max_id)
 
 

@@ -75,3 +75,35 @@ def test_fold_activity_sorts_chunks_before_folding():
         4, 3.0, ts[3].to_pydatetime(), "b", 7,
     )
     assert _fold_activity(carried, []) == carried
+
+
+def test_ivfpq_serving_of_nothing_staged_is_empty(spark, tmp_path):
+    """The IVF-PQ serving drain reads back through the shared
+    read-back: no micro-batch runs on an empty staging dir, and it
+    returns an empty frame of the serve frame's schema instead of
+    failing on the missing output path."""
+    from flight_events_flink_job_spark.operators.clustering import ivf_pq_index
+    from flight_events_flink_job_spark.streaming.similarity import (
+        EMB_SCHEMA,
+        drain_ivfpq_queries_from_staged,
+    )
+
+    rows = [(i, [float((i * 7 + d) % 5) for d in range(8)], 0) for i in range(64)]
+    idx = ivf_pq_index(
+        spark.createDataFrame(rows, EMB_SCHEMA), ivf_stride=8, m=2, dim=8
+    )
+    staging = str(tmp_path / "in")
+    os.makedirs(staging)
+    try:
+        out = drain_ivfpq_queries_from_staged(
+            spark, staging, str(tmp_path / "ckpt"), idx
+        )
+        assert out.count() == 0
+        assert out.dtypes == [
+            ("q_id", "bigint"),
+            ("n_id", "bigint"),
+            ("adc_d2", "double"),
+            ("rank", "bigint"),
+        ]
+    finally:
+        idx.unpersist()

@@ -449,9 +449,10 @@ def test_mips_derived_config_artifact_meets_slo():
 def test_portable_planes_match_recurrence_and_duckdb():
     """The plane matrix both engines derive must be BIT-identical:
     numpy vectorized (the Spark UDF closure) vs a scalar replay of the
-    documented recurrence vs DuckDB running the oracle CTE's exact
-    expression (round-10 VERDICT item 8 — the 45 KB literal block is
-    replaced by this shared integer-hash derivation)."""
+    documented recurrence vs DuckDB running the plane CTEs of
+    plans/vector_sql that the oracles embed (round-10 VERDICT item 8 —
+    the 45 KB literal block is replaced by this shared integer-hash
+    derivation)."""
     import duckdb
     import numpy as np
 
@@ -463,6 +464,7 @@ def test_portable_planes_match_recurrence_and_duckdb():
         PLANE_MUL2,
         portable_planes,
     )
+    from flight_events_flink_job_spark.plans import vector_sql as vs
 
     num, dim = 32, 65
     mat = portable_planes(num, dim)
@@ -474,22 +476,14 @@ def test_portable_planes_match_recurrence_and_duckdb():
         h2 = ((idx * PLANE_MUL1) % PLANE_MOD1 * PLANE_MUL2 + PLANE_ADD2) % PLANE_MOD2
         h4 = ((h2 * h2 % PLANE_MOD2) * PLANE_MUL1 % PLANE_MOD2 + h2) % PLANE_MOD2
         assert mat[p, i] == h4 / PLANE_MOD2 * 2.0 - 1.0
-    # DuckDB replay of the oracle CTE expression
-    sql = f"""
-    WITH h2s AS (
-        SELECT idx,
-               (((idx + 1) * {PLANE_MUL1}) % {PLANE_MOD1}
-                * {PLANE_MUL2} + {PLANE_ADD2}) % {PLANE_MOD2} AS h2
-        FROM range({num * dim}) t(idx)
-    )
-    SELECT idx // {dim} AS pid,
-           list(((h2 * h2 % {PLANE_MOD2}) * {PLANE_MUL1} % {PLANE_MOD2}
-                 + h2) % {PLANE_MOD2} / {PLANE_MOD2}.0 * 2.0 - 1.0
-                ORDER BY idx) AS p
-    FROM h2s GROUP BY pid ORDER BY pid
-    """
-    duck = np.array([r[1] for r in duckdb.sql(sql).fetchall()])
-    assert (duck == mat).all()
+    # DuckDB running the plane CTEs every plane oracle embeds, whole
+    # and cut to its first planes as the derived-(B, T) oracles do
+    for limit, rows in ((None, num), ("(SELECT 5)", 5)):
+        sql = vs.query(
+            vs.planes(num, dim, limit), "SELECT pid, p FROM planes ORDER BY pid"
+        )
+        duck = np.array([r[1] for r in duckdb.sql(sql).fetchall()])
+        assert (duck == mat[:rows]).all()
     # basic isotropy sanity: entries span [-1, 1) with near-zero mean
     assert -1.0 <= mat.min() and mat.max() < 1.0
     assert abs(mat.mean()) < 0.05
@@ -503,7 +497,9 @@ def test_hyperplane_buckets_spark_func_and_numpy_agree(spark, dim, plane_source)
     result equals the UDF's ``.func`` on the same pandas batch, that
     equals a plain-numpy reference built from the plane matrix with the
     same left-to-right per-dimension summation, and every table-t code
-    lies in [t << P, (t+1) << P)."""
+    lies in [t << P, (t+1) << P). For portable planes the bucket-code
+    CTEs the LSH oracles embed (plans/vector_sql) give the same codes
+    in DuckDB."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
@@ -563,6 +559,25 @@ def test_hyperplane_buckets_spark_func_and_numpy_agree(spark, dim, plane_source)
     assert got == ref
     all_set = (1 << num_planes) - 1
     assert got[0] == [(t << num_planes) + all_set for t in range(num_tables)]
+    if plane_source == "portable":
+        import duckdb
+
+        from flight_events_flink_job_spark.plans import vector_sql as vs
+
+        con = duckdb.connect()
+        con.execute("CREATE TABLE vecs (vec_id BIGINT, v DOUBLE[])")
+        con.executemany(
+            "INSERT INTO vecs VALUES (?, ?)", list(enumerate(batch))
+        )
+        sql = vs.query(
+            [
+                *vs.planes(num_tables * num_planes, dim),
+                *vs.bucket_codes("codes", "vecs", "v", num_planes),
+            ],
+            "SELECT vec_id, list(bucket ORDER BY bucket) FROM codes "
+            "GROUP BY vec_id ORDER BY vec_id",
+        )
+        assert [list(r[1]) for r in con.execute(sql).fetchall()] == got
     for codes in got:
         assert len(codes) == num_tables
         for t, c in enumerate(codes):

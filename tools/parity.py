@@ -10,7 +10,11 @@ because the old harness rounded). Usage:
 
 ``--oddconf`` runs the same sweep under an adversarial execution conf —
 5 cores, 7 shuffle partitions, AQE off — to catch partition-count- or
-AQE-dependent nondeterminism the default session cannot show.
+AQE-dependent nondeterminism the default session cannot show. Building
+a query re-applies the engine conf (``register`` calls
+``ensure_engine_conf``, which turns AQE on), so the odd conf is set
+again after each build and checked before the compare action; eager
+build-time jobs still run under the engine conf.
 """
 
 from __future__ import annotations
@@ -145,16 +149,26 @@ def main() -> int:
                 f"CREATE OR REPLACE VIEW {t} AS {body.format(path=path)}"
             )
 
+    def build(fn):
+        df = fn(spark, sf_dir)
+        if oddconf:
+            for key, value in ODDCONF.items():
+                spark.conf.set(key, value)
+            aqe = spark.conf.get("spark.sql.adaptive.enabled")
+            if aqe != "false":
+                raise RuntimeError(f"odd conf lost: AQE enabled={aqe}")
+        return df
+
     failed = []
     for name, fn in QUERIES.items():
         if only and name not in only:
             continue
         if name not in ORACLES:
-            n = QUERIES[name](spark, sf_dir).count()
+            n = build(fn).count()
             print(f"{name:32s} rows-only: {n} rows")
             continue
         try:
-            sdf = fn(spark, sf_dir)
+            sdf = build(fn)
             rel = con.sql(ORACLES[name])
             errors = compare(name, sdf, rel)
         except Exception as exc:  # keep sweeping — mirror the driver's
