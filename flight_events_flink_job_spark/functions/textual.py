@@ -43,7 +43,10 @@ def token_set_key(text: Column) -> Column:
 
 
 def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (default trigrams).
+    """Distinct word n-gram shingles (default trigrams) as one array
+    per row — the tests' brute-force reference for the operators'
+    shingle sets (operators/dedup.exploded_shingles, which the
+    operators use instead).
 
     DuckDB twin (1-based list indexing vs Spark's 0-based arrays):
     ``list_distinct([ts[i]||' '||ts[i+1]||' '||ts[i+2]
@@ -63,7 +66,9 @@ def word_shingles(text: Column, n: int = 3) -> Column:
 
 
 def jaccard(a: Column, b: Column) -> Column:
-    """Exact Jaccard of two array-of-string *sets* (already distinct).
+    """Exact Jaccard of two array-of-string *sets* (already distinct),
+    spelled with the materialized union — the tests' brute-force
+    reference for the operators' verify tier (operators/dedup._jaccard).
 
     Integer-ratio double division — bit-identical across engines.
     DuckDB twin: ``len(list_intersect(a,b)) * 1.0 /

@@ -20,10 +20,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.textual import jaccard, token_set_key
+from ..functions.textual import POLY_MOD, poly_hash_arrow, token_set_key
 from ..functions.vectors import cosine_arrow, to_double
 from .util import checkpoint_small, pinned_partitions, plan_size, spread, spread_by
 
@@ -104,18 +104,28 @@ def exploded_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     toks = spread_by(docs, "doc_id").select(
         "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "tok")
     )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", k).over(w) for k in range(1, n)]
-    last = F.lead("tok", n - 1).over(w)
     return (
-        toks.select(
-            "doc_id",
-            F.concat_ws(" ", *parts).alias("shingle"),
-            last.alias("_last"),
-        )
+        _lead_ngrams(toks, n, "doc_id", name="shingle")
         .filter(F.col("_last").isNotNull())
         .select("doc_id", "shingle")
         .distinct()
+    )
+
+
+def _lead_ngrams(
+    toks: DataFrame, n: int, *keep: str, name: str = "gram"
+) -> DataFrame:
+    """``keep`` columns of a position-exploded (doc_id, pos, tok) token
+    frame, plus the word ``n``-gram starting at each position as
+    ``name`` and its last token as ``_last`` — NULL on the final n-1
+    positions of a document, where the gram is cut short. Both ride
+    ONE window over (doc_id, pos); callers filter or mask on ``_last``."""
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    parts = [F.col("tok")] + [F.lead("tok", k).over(w) for k in range(1, n)]
+    return toks.select(
+        *keep,
+        F.concat_ws(" ", *parts).alias(name),
+        F.lead("tok", n - 1).over(w).alias("_last"),
     )
 
 
@@ -213,13 +223,10 @@ def lsh_candidate_pairs(
 
 
 def verify_jaccard(pairs: DataFrame, shingles: DataFrame, threshold: float) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs (two doc_id joins).
+    """Exact-Jaccard verification of candidate pairs (two doc_id joins,
+    scored by :func:`_jaccard`).
 
-    r13: the Jaccard builds ONE set per pair — |A∪B| = |A|+|B|−|A∩B|
-    on distinct-element arrays, so array_union's second hash-set build
-    + array materialization is replaced by two size() lookups — the
-    same integers, hence bit-identical division (the DuckDB twin is
-    unchanged). MEASURED NEGATIVE (recorded): eagerly checkpointing
+    MEASURED NEGATIVE (recorded): eagerly checkpointing
     the shingle-set frame for the two pair sides was interleave-A/B'd
     neutral-to-worse on all three consumers (ngram 2.83 vs 2.93 s,
     near_minhash 1.62 vs 1.69 s, incremental 1.69 vs 1.73 s at sf0.1)
@@ -234,18 +241,24 @@ def verify_jaccard(pairs: DataFrame, shingles: DataFrame, threshold: float) -> D
     sb = ss.select(
         F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sb")
     )
-    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
-    union = F.size(F.col("sa")) + F.size(F.col("sb")) - inter
     return (
         pairs.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(inter.cast("double") / union.cast("double"), 4),
-        )
+        .withColumn("jaccard", _jaccard(F.col("sa"), F.col("sb")))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
+
+
+def _jaccard(a: Column, b: Column) -> Column:
+    """Exact Jaccard of two distinct-element shingle arrays, rounded to
+    4dp: |A∩B| / (|A|+|B|−|A∩B|). r13: the union size comes from two
+    size() lookups, so each pair builds ONE hash set — the same
+    integers as materializing the union, hence bit-identical division.
+    The DuckDB twin is ``registry_ext.jaccard_edges``."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(a) + F.size(b) - inter
+    return F.round(inter.cast("double") / union.cast("double"), 4)
 
 
 def dedup_near_minhash(
@@ -452,37 +465,56 @@ def dedup_ngram_jaccard(
       super-linear at the sf1→2 leg (alpha ~1.27) — run it on samples
       to audit the linear tier, not on the full corpus.
     """
+    return verify_jaccard(*pair_prelude(docs, threshold, n, candidates), threshold)
+
+
+def pair_prelude(
+    docs: DataFrame,
+    threshold: float = 0.7,
+    n: int = 3,
+    candidates: str = "auto",
+) -> tuple[DataFrame, DataFrame]:
+    """``(candidate_pairs, shingle_sets)`` of the trigram near-dup
+    family: the corpus-determined half of :func:`dedup_ngram_jaccard`,
+    in exactly the form :func:`incremental_neardup` accepts as its
+    ``prelude``. ``candidates`` picks the tier as documented there;
+    ``"auto"`` is ``"linear"`` whenever :func:`lsh_bands_for_threshold`
+    fits the band budget.
+
+    The band budget is checked BEFORE any eager work (round-12 ADVICE
+    item 3): an explicit ``"linear"`` at a too-low threshold raises
+    without first paying a corpus-scale checkpoint job. r12: candidate
+    generation (both LSH and prefix legs) and the shingle sets each
+    re-derived the shingle prelude — one eager localCheckpoint shares
+    it; r13: size-gated (checkpoint_small — see dedup_near_minhash).
+    """
     if candidates == "auto":
         candidates = (
             "linear" if lsh_bands_for_threshold(threshold) is not None else "exact"
         )
-    # Validate the band budget BEFORE any eager work (round-12 ADVICE
-    # item 3): an explicit candidates="linear" at a too-low threshold
-    # must raise without first paying a corpus-scale checkpoint job.
-    bands = None
-    if candidates != "exact":
-        bands = lsh_bands_for_threshold(threshold)
-        if bands is None:
-            raise ValueError(
-                f"threshold={threshold} needs more LSH bands than the "
-                "budget allows for a <=1.25% boundary-miss — use the "
-                "theorem-complete exact tier (dedup_ngram_jaccard "
-                "candidates='exact') at thresholds this low"
-            )
-    # r12: candidate generation (both LSH and prefix legs) and the
-    # verify tier each re-derived the shingle prelude — up to three
-    # scans+windows per call. One eager localCheckpoint shares it.
-    # r13: size-gated (checkpoint_small) — see dedup_near_minhash.
+    bands = None if candidates == "exact" else _budget_bands(threshold)
     exploded = checkpoint_small(exploded_shingles(docs, n))
-    if candidates == "exact":
+    if bands is None:
         pairs = prefix_filter_pairs(exploded, threshold)
     else:
         pairs = linear_candidate_pairs(
             docs, threshold, n, bands=bands, exploded=exploded
         )
-    return verify_jaccard(
-        pairs, shingle_sets(docs, n, exploded=exploded), threshold
-    )
+    return pairs, shingle_sets(docs, n, exploded=exploded)
+
+
+def _budget_bands(threshold: float) -> int:
+    """:func:`lsh_bands_for_threshold`, or the ValueError that sends a
+    too-low threshold to the theorem-complete exact tier."""
+    bands = lsh_bands_for_threshold(threshold)
+    if bands is None:
+        raise ValueError(
+            f"threshold={threshold} needs more LSH bands than the "
+            "budget allows for a <=1.25% boundary-miss — use the "
+            "theorem-complete exact tier (dedup_ngram_jaccard "
+            "candidates='exact') at thresholds this low"
+        )
+    return bands
 
 
 def linear_candidate_pairs(
@@ -526,14 +558,7 @@ def linear_candidate_pairs(
     scale curves in BASELINE.md §4 put both at alpha <= ~1.
     """
     if bands is None:
-        bands = lsh_bands_for_threshold(threshold)
-        if bands is None:
-            raise ValueError(
-                f"threshold={threshold} needs more LSH bands than the "
-                "budget allows for a <=1.25% boundary-miss — use the "
-                "theorem-complete exact tier (dedup_ngram_jaccard "
-                "candidates='exact') at thresholds this low"
-            )
+        bands = _budget_bands(threshold)
     if num_hashes is None:
         num_hashes = 4 * bands
     if exploded is None:
@@ -595,8 +620,8 @@ def incremental_neardup(
     n_chars). Incoming docs too short to shingle (< n tokens) can
     match nothing and are always admitted.
 
-    ``prelude``: optional pre-computed ``(candidate_pairs,
-    shingle_sets)`` over the SAME union corpus — the expensive,
+    ``prelude``: optional pre-computed :func:`pair_prelude` output
+    over the SAME union corpus — the expensive,
     corpus-determined subtrees a caller evaluating several queries per
     session persists once and reuses (round-10 VERDICT item 6; the
     registry does this via plans/registry_ext._inc_neardup_prelude,
@@ -619,19 +644,7 @@ def incremental_neardup(
                 "prelude already fixes the candidate tier it was built "
                 f"with (got candidates={candidates!r})"
             )
-        pairs, sets = prelude
-    else:
-        if candidates == "auto":
-            candidates = (
-                "linear"
-                if lsh_bands_for_threshold(threshold) is not None
-                else "exact"
-            )
-        if candidates == "exact":
-            pairs = prefix_filter_pairs(exploded_shingles(docs, n), threshold)
-        else:
-            pairs = linear_candidate_pairs(docs, threshold, n)
-        sets = shingle_sets(docs, n)
+    pairs, sets = prelude or pair_prelude(docs, threshold, n, candidates)
     inc_a = incoming.select(
         F.col("doc_id").alias("doc_a"), F.lit(True).alias("a_inc")
     )
@@ -746,7 +759,7 @@ def incremental_neardup_keyed(
             ),
             "inc_id",
         )
-        .withColumn("jaccard", F.round(jaccard(F.col("sa"), F.col("sb")), 4))
+        .withColumn("jaccard", _jaccard(F.col("sa"), F.col("sb")))
         .filter(F.col("jaccard") >= threshold)
         .select(F.col("inc_id").alias("doc_id"))
     )
@@ -1291,32 +1304,21 @@ def neardup_components(
     themselves) and the cluster size. Downstream keep-one-per-cluster
     is then a trivial ``filter(doc_id == component)``.
 
-    ``pair_source`` picks the candidate generator feeding the exact
-    Jaccard verify: ``"auto"`` (default) resolves to ``"linear"`` when
-    :func:`lsh_bands_for_threshold` can hit the boundary-miss target
-    at this threshold and ``"exact"`` otherwise (same rule as
-    :func:`dedup_ngram_jaccard`). ``"linear"`` (the 100 TB path) uses
-    :func:`linear_candidate_pairs` — LSH ∪ df-capped prefix filter
-    with threshold-derived band count, measured linear in corpus
-    size; ``"exact"`` uses the theorem-complete prefix filter
-    (:func:`dedup_ngram_jaccard`) — the audit tier, super-linear
+    The pairs are :func:`dedup_ngram_jaccard` with ``pair_source`` as
+    its candidate tier: ``"auto"`` (default) resolves to ``"linear"``
+    when :func:`lsh_bands_for_threshold` can hit the boundary-miss
+    target at this threshold and ``"exact"`` otherwise. ``"linear"``
+    (the 100 TB path) uses :func:`linear_candidate_pairs` — LSH ∪
+    df-capped prefix filter with threshold-derived band count,
+    measured linear in corpus size; ``"exact"`` uses the
+    theorem-complete prefix filter — the audit tier, super-linear
     candidate growth at scale (BASELINE.md §4e, the round-5 verdict's
     one named scale defect — hence no longer the default). Both verify
     candidates with exact set Jaccard, so the pairs that exist are
     identical; they differ only in whether a both-generators-miss pair
     (never observed on any fixture) could be dropped.
     """
-    if pair_source == "auto":
-        pair_source = (
-            "linear" if lsh_bands_for_threshold(threshold) is not None else "exact"
-        )
-    if pair_source == "exact":
-        pairs = dedup_ngram_jaccard(docs, threshold, n, candidates="exact")
-    else:
-        sh = shingle_sets(docs, n)
-        pairs = verify_jaccard(
-            linear_candidate_pairs(docs, threshold, n), sh, threshold
-        )
+    pairs = dedup_ngram_jaccard(docs, threshold, n, candidates=pair_source)
     comp = connected_components(pairs.select("doc_a", "doc_b"))
     return (
         docs.select("doc_id")
@@ -1374,6 +1376,31 @@ def neardup_dedup_corpus(
 SRC_MINHASH_K = 32
 
 
+def _portable_minhash(shingles: DataFrame, key: str, num_hashes: int) -> DataFrame:
+    """(``key``, m0..m{K-1}): the PORTABLE K-permutation MinHash of each
+    ``key``'s (key, shingle) rows — the poly-hash of each shingle, then
+    one affine re-hash per slot, ``(h*(2i+3) + 7i+1) % P``, min per key.
+    Every slot is plain integer math, so the DuckDB twin
+    (``registry_ext._minhash_sigs``) replays it exactly."""
+    hashed = shingles.select(key, poly_hash_arrow(F.col("shingle")).alias("h"))
+    mins = [
+        F.min((F.col("h") * (2 * i + 3) + (7 * i + 1)) % POLY_MOD).alias(f"m{i}")
+        for i in range(num_hashes)
+    ]
+    return hashed.groupBy(key).agg(*mins)
+
+
+def _slot_agreement(num_hashes: int) -> Column:
+    """BIGINT count of slots where the ``a`` and ``b`` signatures agree."""
+    return sum(
+        (
+            F.when(F.col(f"a.m{i}") == F.col(f"b.m{i}"), 1).otherwise(0)
+            for i in range(num_hashes)
+        ),
+        F.lit(0),
+    ).cast("bigint")
+
+
 def source_overlap_minhash(
     docs: DataFrame, num_hashes: int = SRC_MINHASH_K, n: int = 3
 ) -> DataFrame:
@@ -1401,8 +1428,6 @@ def source_overlap_minhash(
     source-frequency, fine at audit scale; the 100 TB path trusts the
     signatures and drops that tier).
     """
-    from ..functions.textual import POLY_MOD, poly_hash_arrow
-
     # r12: four consumers (signatures, sizes, both sides of the exact
     # intersection self-join) re-derived this frame per branch — one
     # eager localCheckpoint materializes it once (measured ~4.4 s →
@@ -1418,14 +1443,7 @@ def source_overlap_minhash(
         .distinct(),
         probe=exploded,
     )
-    hashed = src_shingles.select(
-        "source", poly_hash_arrow(F.col("shingle")).alias("h")
-    )
-    mins = [
-        F.min((F.col("h") * (2 * i + 3) + (7 * i + 1)) % POLY_MOD).alias(f"m{i}")
-        for i in range(num_hashes)
-    ]
-    sigs = hashed.groupBy("source").agg(*mins)
+    sigs = _portable_minhash(src_shingles, "source", num_hashes)
     sizes = src_shingles.groupBy("source").agg(F.count("*").alias("sz"))
     inter = (
         src_shingles.alias("ia")
@@ -1439,20 +1457,13 @@ def source_overlap_minhash(
         )
         .agg(F.count("*").alias("n_inter"))
     )
-    agree = sum(
-        (
-            F.when(F.col(f"a.m{i}") == F.col(f"b.m{i}"), 1).otherwise(0)
-            for i in range(num_hashes)
-        ),
-        F.lit(0),
-    )
     pairs = (
         sigs.alias("a")
         .join(F.broadcast(sigs.alias("b")), F.col("a.source") < F.col("b.source"))
         .select(
             F.col("a.source").alias("src_a"),
             F.col("b.source").alias("src_b"),
-            agree.cast("bigint").alias("n_agree"),
+            _slot_agreement(num_hashes).alias("n_agree"),
         )
     )
     n_inter = F.coalesce(F.col("n_inter"), F.lit(0))
@@ -1614,15 +1625,8 @@ def exact_substring_strip(
     toks = spread_by(docs, "doc_id").select(
         "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "tok")
     )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", k).over(w) for k in range(1, n)]
     grams = (
-        toks.select(
-            "doc_id",
-            "pos",
-            F.concat_ws(" ", *parts).alias("gram"),
-            F.lead("tok", n - 1).over(w).alias("_last"),
-        )
+        _lead_ngrams(toks, n, "doc_id", "pos")
         .filter(F.col("_last").isNotNull())
         .select("doc_id", "pos", "gram")
     )
@@ -1708,53 +1712,34 @@ def minhash_calibration(
     The exact tier rides :func:`shingle_sets` arrays on the SAME
     id-successor join — per-pair intersection work, linear in pairs.
     """
-    from ..functions.textual import POLY_MOD, poly_hash_arrow
-
     # r12: the estimator tier and the exact tier each re-derived the
     # shingle prelude — one eager localCheckpoint shares it. r13:
     # size-gated (corpus-scale stream; see dedup_near_minhash).
     sh = checkpoint_small(exploded_shingles(docs, n))
-    hashed = sh.select(
-        "doc_id", poly_hash_arrow(F.col("shingle")).alias("h")
-    )
-    mins = [
-        F.min((F.col("h") * (2 * i + 3) + (7 * i + 1)) % POLY_MOD).alias(f"m{i}")
-        for i in range(num_hashes)
-    ]
     # r12: sigs and the shingle sets below each feed an id-successor
     # SELF-join whose two sides re-shuffle on different keys (doc_id+1
     # vs doc_id), so exchange reuse cannot deduplicate them and each
     # subtree would compute twice. Both frames are doc-count-sized
     # (one row per doc) — checkpoint once, join the materialized rows.
-    sigs = hashed.groupBy("doc_id").agg(*mins).localCheckpoint(eager=True)
-    agree = sum(
-        (
-            F.when(F.col(f"a.m{i}") == F.col(f"b.m{i}"), 1).otherwise(0)
-            for i in range(num_hashes)
-        ),
-        F.lit(0),
-    )
+    sigs = _portable_minhash(sh, "doc_id", num_hashes).localCheckpoint(eager=True)
     pairs = (
         sigs.alias("a")
         .join(sigs.alias("b"), F.col("a.doc_id") + 1 == F.col("b.doc_id"))
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            agree.cast("bigint").alias("n_agree"),
+            _slot_agreement(num_hashes).alias("n_agree"),
         )
     )
     ss = shingle_sets(docs, n, exploded=sh).localCheckpoint(eager=True)
-    # r13: |A∪B| = |A|+|B|−|A∩B| on distinct arrays — same integers,
-    # bit-identical division, one hash-set build per pair instead of
-    # two (see verify_jaccard).
-    inter = F.size(F.array_intersect("x.shingles", "y.shingles"))
-    union = F.size("x.shingles") + F.size("y.shingles") - inter
     exact = (
         ss.alias("x")
         .join(ss.alias("y"), F.col("x.doc_id") + 1 == F.col("y.doc_id"))
         .select(
             F.col("x.doc_id").alias("doc_a"),
-            F.round(inter * F.lit(1.0) / union, 4).alias("exact_jaccard"),
+            _jaccard(F.col("x.shingles"), F.col("y.shingles")).alias(
+                "exact_jaccard"
+            ),
         )
     )
     return pairs.join(exact, "doc_a").select(

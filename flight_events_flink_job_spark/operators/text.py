@@ -25,7 +25,6 @@ from ..functions.textual import (
     poly_hash,
     token_set_key,
     tokens,
-    word_shingles,
 )
 
 ROUND_DP = 4
@@ -370,18 +369,15 @@ def text_repetition(docs: DataFrame, n: int = 3) -> DataFrame:
     a join, 3.9 s; this form ~1 s at sf0.1. Columns: (doc_id, n_grams,
     n_dup_grams, dup_gram_frac, dup_token_frac), 4dp.
     """
-    from pyspark.sql import Window
+    from .dedup import _lead_ngrams
 
     toks = docs.select(
         "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "tok")
     )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", k).over(w) for k in range(1, n)]
-    last = F.lead("tok", n - 1).over(w)
-    rows = toks.select(
+    rows = _lead_ngrams(toks, n, "doc_id", "tok").select(
         "doc_id",
         "tok",
-        F.when(last.isNotNull(), F.concat_ws(" ", *parts)).alias("gram"),
+        F.when(F.col("_last").isNotNull(), F.col("gram")).alias("gram"),
     )
     agg = rows.groupBy("doc_id").agg(
         F.count("tok").alias("n_tokens"),
@@ -795,15 +791,14 @@ def top_ngrams_per_lang(docs: DataFrame, n: int = 2, k: int = 5) -> DataFrame:
     """
     from pyspark.sql import Window
 
+    from .dedup import _lead_ngrams
+
     toks = docs.select(
         "doc_id", "lang", F.posexplode(tokens(F.col("text"))).alias("pos", "tok")
     )
-    w0 = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(w0) for j in range(1, n)]
-    last = F.lead("tok", n - 1).over(w0)
-    grams = toks.select(
-        "lang", F.concat_ws(" ", *parts).alias("ngram"), last.alias("_last")
-    ).filter(F.col("_last").isNotNull())
+    grams = _lead_ngrams(toks, n, "lang", name="ngram").filter(
+        F.col("_last").isNotNull()
+    )
     counted = grams.groupBy("lang", "ngram").agg(
         F.count("*").alias("n_occurrences")
     )

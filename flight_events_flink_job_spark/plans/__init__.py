@@ -14,7 +14,8 @@ from .registry_stream import BENCH_SKIP  # noqa: F401
 # every query whose CODE PATH the round-13 optimizations touch —
 # directly (gated checkpoints, verify-tier rewrite, prepared-corpus
 # sharing, the simhash stats gate, the pinned_partitions refactor) or
-# transitively (the neardup component family rides verify_jaccard;
+# transitively (the neardup component family rides verify_jaccard,
+# now through dedup_ngram_jaccard's one pair_prelude;
 # knn_label_vote/similarity_topk ride cosine_topk's query-side
 # derivation; semdedup_hier/ivf_pq_topk_hier ride ivf_model_hier) —
 # grouped by last driver-green round as the window test requires, and

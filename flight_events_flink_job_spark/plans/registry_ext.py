@@ -83,7 +83,7 @@ from ..operators.vectors_agg import (
     quantize_embeddings,
     value_anomalies,
 )
-from ..sources.fixtures import load_table
+from ..sources.fixtures import fixture_token, load_table
 from . import vector_sql as vs
 from .registry import register
 
@@ -122,8 +122,8 @@ _CENTROID_HALF_UP = (
 )
 
 # DuckDB prelude: distinct word-trigram shingle sets per document
-# (1-based list indexing). The Spark twin is functions/textual.py
-# word_shingles — keep in lockstep.
+# (1-based list indexing). The Spark twin is operators/dedup.py
+# exploded_shingles (+ shingle_sets) — keep in lockstep.
 SHINGLES_CTE = """
 toks AS (SELECT doc_id, string_split(text, ' ') ts FROM documents),
 sh AS (
@@ -134,16 +134,93 @@ sh AS (
 )
 """
 
-# Exact all-pairs trigram-Jaccard (oracle side only — DuckDB at oracle
-# scale can afford the quadratic join the Spark plan must avoid).
-_PAIRS_SQL = """
-WITH {cte}
-SELECT * FROM (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           round(len(list_intersect(a.sg, b.sg)) * 1.0
-                 / len(list_distinct(list_concat(a.sg, b.sg))), 4) AS jaccard
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-) WHERE jaccard >= {threshold}
+
+def jaccard_edges(threshold: float) -> str:
+    """CTEs over ``sh`` ending in ``pairs(doc_a, doc_b, jaccard)``: every
+    document pair (doc_a < doc_b) whose trigram Jaccard
+    ``round(i*1.0 / (|A|+|B|-i), 4)`` is >= ``threshold`` — the exact
+    edge set every near-dup oracle replays (twin of dedup._jaccard).
+    ``i`` counts the shared distinct shingles through an equi-join on
+    the unnested shingle, so only pairs sharing a shingle are scored;
+    that loses nothing, because J >= t > 0 implies a shared shingle
+    (an all-pairs cross join costs minutes at sf0.001)."""
+    return f"""
+sx AS (SELECT doc_id, unnest(sg) AS s FROM sh),
+sz AS (SELECT doc_id, len(sg) AS n FROM sh),
+shared AS (
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
+    FROM sx a JOIN sx b ON a.s = b.s AND a.doc_id < b.doc_id
+    GROUP BY 1, 2
+),
+pairs AS (
+    SELECT * FROM (
+        SELECT p.doc_a, p.doc_b,
+               round(p.i * 1.0 / (za.n + zb.n - p.i), 4) AS jaccard
+        FROM shared p JOIN sz za ON za.doc_id = p.doc_a
+                      JOIN sz zb ON zb.doc_id = p.doc_b
+    ) WHERE jaccard >= {threshold}
+)
+"""
+
+
+# The incremental_neardup verdict over ``pairs``: the lower half of the
+# corpus by doc_id is the ingested index, the upper half the incoming
+# batch, and an incoming doc is rejected iff it is the doc_b of an
+# edge. Pairs are doc_a < doc_b, so that one rule covers an edge to an
+# index doc (doc_a < half) and an edge to a lower-id batch doc.
+INC_REJECTED_CTE = """
+split AS (SELECT (max(doc_id) + 1) // 2 AS half FROM documents),
+rejected AS (
+    SELECT DISTINCT doc_b AS doc_id FROM pairs
+    WHERE doc_b >= (SELECT half FROM split)
+)
+"""
+
+
+def poly_hash(s: str, base: int = 31, mod: int = 1000000007) -> str:
+    """DuckDB twin of functions/textual.poly_hash over the string
+    expression ``s``: the codepoint fold from 0, left to right —
+    ``(a, c) -> (a * 31 + c) % 1000000007`` at the defaults."""
+    return (
+        f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
+        f"[CAST(unicode({s}[i]) AS BIGINT) for i in range(1, len({s})+1)]), "
+        f"(a, c) -> (a * {base} + c) % {mod})"
+    )
+
+
+def _minhash_sigs(key: str, src: str, k: int) -> str:
+    """``sigs`` CTE: the DuckDB twin of dedup._portable_minhash over the
+    (``key``, s) rows of ``src`` — poly-hash, K affine re-hashes, the
+    min of each per key."""
+    mins = ",\n               ".join(
+        f"min((h * {2 * i + 3} + {7 * i + 1}) % 1000000007) AS m{i}"
+        for i in range(k)
+    )
+    return f"""sigs AS (
+        SELECT {key},
+               {mins}
+        FROM (SELECT {key}, {poly_hash('s')} AS h FROM {src})
+        GROUP BY {key}
+    )"""
+
+
+def _slot_agreement(k: int) -> str:
+    """BIGINT count of the K slots where signatures ``a`` and ``b``
+    agree (twin of dedup._slot_agreement)."""
+    agree = " + ".join(
+        f"CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END" for i in range(k)
+    )
+    return f"CAST({agree} AS BIGINT)"
+
+
+def _pairs_oracle(threshold: float) -> str:
+    """The exact trigram-Jaccard pair set (oracle side only: the Spark
+    plan must generate candidates, DuckDB at oracle scale can score
+    every shingle-sharing pair)."""
+    return f"""
+WITH {SHINGLES_CTE.strip()},
+{jaccard_edges(threshold).strip()}
+SELECT doc_a, doc_b, jaccard FROM pairs
 """
 
 
@@ -179,7 +256,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_near_minhash",
-    oracle=_PAIRS_SQL.format(cte=SHINGLES_CTE, threshold=0.8),
+    oracle=_pairs_oracle(0.8),
 )
 def q_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(64) + LSH(16 bands) candidates, exact-Jaccard verified
@@ -188,28 +265,14 @@ def q_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_near_minhash(_docs(spark, sf_dir))
 
 
-_J = (
-    "round(len(list_intersect({a}.sg, {b}.sg)) * 1.0"
-    " / len(list_distinct(list_concat({a}.sg, {b}.sg))), 4)"
-)
-
 _INC_NEARDUP_SQL = f"""
-WITH {{cte}},
-split AS (SELECT (max(doc_id) + 1) // 2 AS half FROM documents),
-ex AS (SELECT * FROM sh WHERE doc_id < (SELECT half FROM split)),
-inc AS (SELECT * FROM sh WHERE doc_id >= (SELECT half FROM split)),
-rej_cross AS (
-    SELECT DISTINCT i.doc_id FROM inc i JOIN ex e
-    ON {_J.format(a='i', b='e')} >= {{threshold}}),
-rej_batch AS (
-    SELECT DISTINCT b.doc_id FROM inc a JOIN inc b
-    ON a.doc_id < b.doc_id
-   AND {_J.format(a='a', b='b')} >= {{threshold}})
+WITH {SHINGLES_CTE.strip()},
+{jaccard_edges(0.7).strip()},
+{INC_REJECTED_CTE.strip()}
 SELECT d.doc_id, d.lang, d.source, d.n_chars
 FROM documents d
 WHERE d.doc_id >= (SELECT half FROM split)
-  AND d.doc_id NOT IN (SELECT doc_id FROM rej_cross)
-  AND d.doc_id NOT IN (SELECT doc_id FROM rej_batch)
+  AND d.doc_id NOT IN (SELECT doc_id FROM rejected)
 """
 
 
@@ -230,12 +293,12 @@ def _inc_neardup_prelude(
 ) -> tuple[DataFrame, DataFrame]:
     from pyspark import StorageLevel
 
-    from ..operators.dedup import linear_candidate_pairs, shingle_sets
+    from ..operators.dedup import pair_prelude
 
     key = (
         spark.sparkContext.applicationId,
         sf_dir,
-        _fixture_token(sf_dir),
+        fixture_token(sf_dir),
         threshold,
         n,
     )
@@ -247,18 +310,16 @@ def _inc_neardup_prelude(
                 except Exception:
                     pass  # the old frames' session may be gone
         docs = _docs(spark, sf_dir).select("doc_id", "text")
-        _INC_NEARDUP_PRELUDE[key] = (
-            linear_candidate_pairs(docs, threshold, n).persist(
-                StorageLevel.MEMORY_AND_DISK
-            ),
-            shingle_sets(docs, n).persist(StorageLevel.MEMORY_AND_DISK),
+        _INC_NEARDUP_PRELUDE[key] = tuple(
+            frame.persist(StorageLevel.MEMORY_AND_DISK)
+            for frame in pair_prelude(docs, threshold, n)
         )
     return _INC_NEARDUP_PRELUDE[key]
 
 
 @register(
     "incremental_neardup",
-    oracle=_INC_NEARDUP_SQL.format(cte=SHINGLES_CTE, threshold=0.7),
+    oracle=_INC_NEARDUP_SQL,
 )
 def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental NEAR-dedup (the fuzzy sibling of incremental_dedup):
@@ -286,7 +347,7 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_ngram_jaccard",
-    oracle=_PAIRS_SQL.format(cte=SHINGLES_CTE, threshold=0.7),
+    oracle=_pairs_oracle(0.7),
 )
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trigram-Jaccard >= 0.7: linear candidate union (LSH ∪ df-capped
@@ -329,20 +390,16 @@ def q_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repeated_passages(_docs(spark, sf_dir))
 
 
-# Recursive connected-components prelude over the exact all-pairs
-# trigram-Jaccard edge set (threshold 0.7) — shared by the
-# neardup_components oracle and the cluster-histogram rollup over it.
+# Recursive connected-components labeling over the exact
+# trigram-Jaccard edge set (threshold 0.7), ending in
+# labeled(doc_id, component, n_members) — every document with its
+# cluster representative (min reachable doc_id; singletons label
+# themselves) and cluster size. Shared by the neardup_components,
+# neardup_dedup_corpus and neardup_cluster_histogram oracles.
 _NEARDUP_CC_PRELUDE = f"""
     WITH RECURSIVE
-    {SHINGLES_CTE.strip().rstrip()},
-    pairs AS (
-        SELECT doc_a, doc_b FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   round(len(list_intersect(a.sg, b.sg)) * 1.0
-                         / len(list_distinct(list_concat(a.sg, b.sg))), 4) AS jaccard
-            FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        ) WHERE jaccard >= 0.7
-    ),
+    {SHINGLES_CTE.strip()},
+    {jaccard_edges(0.7).strip()},
     edges AS (
         SELECT doc_a AS s, doc_b AS d FROM pairs
         UNION ALL
@@ -353,7 +410,14 @@ _NEARDUP_CC_PRELUDE = f"""
         UNION
         SELECT e.d, w.label FROM walk w JOIN edges e ON e.s = w.node
     ),
-    comp AS (SELECT node, MIN(label) AS component FROM walk GROUP BY node)
+    comp AS (SELECT node, MIN(label) AS component FROM walk GROUP BY node),
+    labeled AS (
+        SELECT d.doc_id,
+               COALESCE(c.component, d.doc_id) AS component,
+               count(*) OVER (
+                   PARTITION BY COALESCE(c.component, d.doc_id)) AS n_members
+        FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
+    )
 """
 
 
@@ -373,23 +437,13 @@ _NEARDUP_CC_PRELUDE = f"""
 _NEARDUP_COMPONENTS: dict[tuple, DataFrame] = {}
 
 
-def _fixture_token(sf_dir: str, table: str = "documents") -> tuple:
-    """Snapshot identity of a fixture table — canonical implementation
-    moved to sources.fixtures.fixture_token in round 12 (so non-plans
-    modules can key on it without a circular import); this alias keeps
-    the established registry-side name."""
-    from ..sources.fixtures import fixture_token
-
-    return fixture_token(sf_dir, table)
-
-
 def _neardup_components_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     key = (
         spark.sparkContext.applicationId,
         sf_dir,
-        _fixture_token(sf_dir),
+        fixture_token(sf_dir),
     )
     if key not in _NEARDUP_COMPONENTS:
         for old in list(_NEARDUP_COMPONENTS):
@@ -407,11 +461,7 @@ def _neardup_components_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     "neardup_components",
     oracle=f"""
     {_NEARDUP_CC_PRELUDE.strip()}
-    SELECT d.doc_id,
-           COALESCE(c.component, d.doc_id) AS component,
-           count(*) OVER (
-               PARTITION BY COALESCE(c.component, d.doc_id)) AS n_members
-    FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
+    SELECT doc_id, component, n_members FROM labeled
     """,
 )
 def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -430,39 +480,11 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "neardup_dedup_corpus",
     oracle=f"""
-    WITH RECURSIVE
-    {{cte}},
-    pairs AS (
-        SELECT doc_a, doc_b FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   round(len(list_intersect(a.sg, b.sg)) * 1.0
-                         / len(list_distinct(list_concat(a.sg, b.sg))), 4)
-                       AS jaccard
-            FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        ) WHERE jaccard >= 0.7
-    ),
-    edges AS (
-        SELECT doc_a AS s, doc_b AS d FROM pairs
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs
-    ),
-    walk(node, label) AS (
-        SELECT s, s FROM edges
-        UNION
-        SELECT e.d, w.label FROM walk w JOIN edges e ON e.s = w.node
-    ),
-    comp AS (SELECT node, MIN(label) AS component FROM walk GROUP BY node),
-    labeled AS (
-        SELECT d.doc_id,
-               COALESCE(c.component, d.doc_id) AS component,
-               count(*) OVER (
-                   PARTITION BY COALESCE(c.component, d.doc_id)) AS n_members
-        FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
-    )
+    {_NEARDUP_CC_PRELUDE.strip()}
     SELECT d.doc_id, d.lang, d.source, d.n_chars, l.n_members
     FROM labeled l JOIN documents d ON d.doc_id = l.doc_id
     WHERE l.doc_id = l.component
-    """.format(cte=SHINGLES_CTE.strip().rstrip()),
+    """,
 )
 def q_neardup_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end fuzzy dedup: the surviving corpus after keep-one-per-
@@ -517,29 +539,13 @@ def _source_overlap_oracle(k: int = 32) -> str:
     """DuckDB twin of operators/dedup.source_overlap_minhash: the same
     poly-hash + K affine re-hashes, per-source signature mins, pairwise
     slot agreement, and the exact shingle-set Jaccard tier."""
-    mins = ",\n               ".join(
-        f"min((h * {2 * i + 3} + {7 * i + 1}) % 1000000007) AS m{i}"
-        for i in range(k)
-    )
-    agree = " + ".join(
-        f"CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END" for i in range(k)
-    )
     return f"""
     WITH {SHINGLES_CTE.strip()},
     srcsh AS (
         SELECT DISTINCT d.source, unnest(sg) AS s
         FROM sh JOIN documents d USING (doc_id)
     ),
-    hashed AS (
-        SELECT source,
-               list_reduce(list_prepend(CAST(0 AS BIGINT),
-                   [CAST(unicode(s[i]) AS BIGINT) for i in range(1, len(s)+1)]),
-                   (a, c) -> (a * 31 + c) % 1000000007) AS h
-        FROM srcsh
-    ),
-    sigs AS (SELECT source,
-               {mins}
-             FROM hashed GROUP BY source),
+    {_minhash_sigs("source", "srcsh", k)},
     sizes AS (SELECT source, count(*) AS sz FROM srcsh GROUP BY source),
     inter AS (
         SELECT ia.source AS src_a, ib.source AS src_b, count(*) AS n_inter
@@ -548,7 +554,7 @@ def _source_overlap_oracle(k: int = 32) -> str:
     ),
     pairs AS (
         SELECT a.source AS src_a, b.source AS src_b,
-               CAST({agree} AS BIGINT) AS n_agree
+               {_slot_agreement(k)} AS n_agree
         FROM sigs a JOIN sigs b ON a.source < b.source
     )
     SELECT p.src_a, p.src_b, p.n_agree,
@@ -579,19 +585,14 @@ def q_source_overlap_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mod 998244353 << 30); counter_j = sum over tokens of ±1 by bit j;
 # fingerprint bit j set iff counter_j > 0. Keep in lockstep with
 # _TOKEN_HASH / _COUNTERS / _SIMHASH in dedup.py.
-SIMHASH_FP_CTE = """
+SIMHASH_FP_CTE = f"""
 tok AS (
   SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
   FROM documents
 ),
 th AS (
   SELECT doc_id,
-    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        [CAST(unicode(t[i]) AS BIGINT) for i in range(1, len(t)+1)]),
-        (a, c) -> (a * 31 + c) % 1000000007)
-    | (list_reduce(list_prepend(CAST(0 AS BIGINT),
-        [CAST(unicode(t[i]) AS BIGINT) for i in range(1, len(t)+1)]),
-        (a, c) -> (a * 131 + c) % 998244353) << 30) AS h
+    {poly_hash("t")} | ({poly_hash("t", 131, 998244353)} << 30) AS h
   FROM tok
 ),
 cnt AS (
@@ -1328,7 +1329,7 @@ _HIER_MODELS: dict[tuple, tuple] = {}
 def _hier_model(spark: SparkSession, sf_dir: str, target: int) -> tuple:
     from ..operators.similarity import ivf_model_hier
 
-    key = (sf_dir, target, _fixture_token(sf_dir, "embeddings"))
+    key = (sf_dir, target, fixture_token(sf_dir, "embeddings"))
     if key not in _HIER_MODELS:
         _HIER_MODELS[key] = ivf_model_hier(
             _embs(spark, sf_dir), target_occupancy=target
@@ -1670,10 +1671,7 @@ def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {SHINGLES_CTE}
     SELECT doc_id,
-        list_min(list_transform(sg, s -> list_reduce(
-            list_prepend(CAST(0 AS BIGINT),
-                [CAST(unicode(s[i]) AS BIGINT) for i in range(1, len(s)+1)]),
-            (a, c) -> (a * 31 + c) % 1000000007))) AS fingerprint,
+        list_min(list_transform(sg, s -> {poly_hash("s")})) AS fingerprint,
         CAST(len(sg) AS BIGINT) AS n_shingles
     FROM sh
     """,
@@ -2550,7 +2548,7 @@ def _coarse_model(spark: SparkSession, sf_dir: str, stride: int) -> list:
 
     # fixture token in the key: in-place parquet regeneration retrains
     # (round-11 VERDICT item 8 — driver-held centroids are data-derived)
-    key = (sf_dir, stride, _fixture_token(sf_dir, "embeddings"))
+    key = (sf_dir, stride, fixture_token(sf_dir, "embeddings"))
     if key not in _COARSE_MODELS:
         _COARSE_MODELS[key] = ivf_centroids(_embs(spark, sf_dir), stride=stride)
     return _COARSE_MODELS[key]
@@ -2575,7 +2573,7 @@ def _ivfpq_index_cached(spark: SparkSession, sf_dir: str, variant: str):
     key = (
         spark.sparkContext.applicationId,
         sf_dir,
-        _fixture_token(sf_dir, "embeddings"),
+        fixture_token(sf_dir, "embeddings"),
         variant,
     )
     if key not in _IVFPQ_INDEXES:
@@ -2814,28 +2812,12 @@ def _minhash_calibration_oracle(k: int = 64) -> str:
     """DuckDB twin of operators/dedup.minhash_calibration: the portable
     poly-hash + K affine re-hashes per DOCUMENT, slot agreement on the
     (doc_id, doc_id+1) pair frame, exact set Jaccard beside it."""
-    mins = ",\n               ".join(
-        f"min((h * {2 * i + 3} + {7 * i + 1}) % 1000000007) AS m{i}"
-        for i in range(k)
-    )
-    agree_sum = " + ".join(
-        f"CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END" for i in range(k)
-    )
     return f"""
     WITH {SHINGLES_CTE.strip()},
-    hashed AS (
-        SELECT doc_id,
-               list_reduce(list_prepend(CAST(0 AS BIGINT),
-                   [CAST(unicode(s[i]) AS BIGINT) for i in range(1, len(s)+1)]),
-                   (a, c) -> (a * 31 + c) % 1000000007) AS h
-        FROM (SELECT doc_id, unnest(sg) AS s FROM sh)
-    ),
-    sigs AS (SELECT doc_id,
-               {mins}
-             FROM hashed GROUP BY doc_id),
+    {_minhash_sigs("doc_id", "(SELECT doc_id, unnest(sg) AS s FROM sh)", k)},
     agr AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               CAST({agree_sum} AS BIGINT) AS n_agree
+               {_slot_agreement(k)} AS n_agree
         FROM sigs a JOIN sigs b ON a.doc_id + 1 = b.doc_id
     ),
     ex AS (
@@ -2868,12 +2850,8 @@ def q_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     "neardup_cluster_histogram",
     oracle=f"""
     {_NEARDUP_CC_PRELUDE.strip()},
-    members AS (
-        SELECT COALESCE(c.component, d.doc_id) AS component
-        FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
-    ),
     csz AS (SELECT component, count(*) AS cluster_size
-            FROM members GROUP BY component)
+            FROM labeled GROUP BY component)
     SELECT cluster_size,
            CAST(count(*) AS BIGINT) AS n_clusters,
            CAST(cluster_size * count(*) AS BIGINT) AS n_docs
@@ -3301,7 +3279,7 @@ def _mips_paired_config(
         plane_agree_p_sample,
     )
 
-    key = (sf_dir, _fixture_token(sf_dir, "embeddings"), recall)
+    key = (sf_dir, fixture_token(sf_dir, "embeddings"), recall)
     if key not in _MIPS_PAIR_CONFIGS:
         embs = _embs(spark, sf_dir)
         # Bounded driver scalars: corpus row count + the ≤ 160-float

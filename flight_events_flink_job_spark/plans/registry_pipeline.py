@@ -37,6 +37,7 @@ from ..operators.pipeline import (
 )
 from ..sources.fixtures import load_table
 from .registry import register
+from .registry_ext import poly_hash
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,7 +325,7 @@ def q_source_quality_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dsir_importance",
-    oracle="""
+    oracle=f"""
     WITH t AS (SELECT doc_id, lang, string_split(text, ' ') ts
                FROM documents),
     g0 AS (
@@ -336,11 +337,7 @@ def q_source_quality_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM t WHERE len(ts) >= 2
     ),
     g AS (
-        SELECT doc_id, lang,
-               list_reduce(list_prepend(CAST(0 AS BIGINT),
-                   [CAST(unicode(gram[i]) AS BIGINT)
-                    for i in range(1, len(gram)+1)]),
-                   (a, c) -> (a * 31 + c) % 1000000007) % 1024 AS bkt
+        SELECT doc_id, lang, {poly_hash("gram")} % 1024 AS bkt
         FROM g0
     ),
     cs AS (SELECT bkt, count(*) AS ns FROM g GROUP BY bkt),

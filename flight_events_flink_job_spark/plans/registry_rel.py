@@ -56,7 +56,7 @@ from ..operators.relational import (
     VALUE_BANDS,
 )
 from ..operators.similarity import cosine_topk_ivf
-from ..sources.fixtures import load_table
+from ..sources.fixtures import fixture_token, load_table
 from ..sources.flight_adapter import FLIGHTS_CTE
 from . import vector_sql as vs
 from .registry import ORACLES, register
@@ -484,10 +484,8 @@ def q_similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifecycle)."""
     from ..operators.similarity import ivf_centroids
 
-    from .registry_ext import _fixture_token
-
     embs = load_table(spark, sf_dir, "embeddings")
-    key = (sf_dir, _fixture_token(sf_dir, "embeddings"))
+    key = (sf_dir, fixture_token(sf_dir, "embeddings"))
     if key not in _IVF_MODELS:
         _IVF_MODELS[key] = ivf_centroids(embs)
     return cosine_topk_ivf(embs, centroids=_IVF_MODELS[key])

@@ -622,6 +622,7 @@ def test_ivfpq_registry_cache_is_per_fixture_token(spark, sf_dir):
     variants of one corpus concurrently, and key on the fixture
     snapshot token so an in-place regeneration rebuilds."""
     from flight_events_flink_job_spark.plans import registry_ext as rx
+    from flight_events_flink_job_spark.sources.fixtures import fixture_token
 
     i1 = rx._ivfpq_index_cached(spark, sf_dir, "residual")
     i2 = rx._ivfpq_index_cached(spark, sf_dir, "residual")
@@ -633,7 +634,7 @@ def test_ivfpq_registry_cache_is_per_fixture_token(spark, sf_dir):
     assert len(live) >= 2
     # key carries the fixture token (position 2): a moved token is a miss
     key = next(k for k in rx._IVFPQ_INDEXES if k[3] == "residual")
-    assert key[2] == rx._fixture_token(sf_dir, "embeddings")
+    assert key[2] == fixture_token(sf_dir, "embeddings")
 
 
 def test_ivfpq_index_split_artifact():

@@ -879,21 +879,21 @@ def test_fixture_token_invalidates_on_regen(tmp_path):
     import shutil
     import time as _time
 
-    from flight_events_flink_job_spark.plans.registry_ext import _fixture_token
+    from flight_events_flink_job_spark.sources.fixtures import fixture_token
 
     src = "/root/testdata/sf0.001/documents.parquet"
     dst_dir = tmp_path / "sf"
     dst_dir.mkdir()
     dst = dst_dir / "documents.parquet"
     shutil.copyfile(src, dst)
-    t1 = _fixture_token(str(dst_dir))
+    t1 = fixture_token(str(dst_dir))
     assert t1 != (None, None)
     # same-size rewrite with a bumped mtime (the nastiest regen case:
     # byte length unchanged)
     _time.sleep(0.01)
     data = dst.read_bytes()
     dst.write_bytes(data)
-    t2 = _fixture_token(str(dst_dir))
+    t2 = fixture_token(str(dst_dir))
     assert t2 != t1, "same-size in-place regen must move the token"
     # missing table degrades to a sentinel, never throws
-    assert _fixture_token(str(tmp_path / "nope")) == (None, None)
+    assert fixture_token(str(tmp_path / "nope")) == (None, None)

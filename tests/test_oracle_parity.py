@@ -52,6 +52,78 @@ def test_oracle_stride_widening_matches_ivf_centroids():
             assert sql_stride == python_stride, (nominal, max_id)
 
 
+def test_oracle_neardup_edge_set_matches_all_pairs_reference():
+    """The near-dup oracles score pairs through
+    registry_ext.jaccard_edges (a shared-shingle equi-join) and reject
+    incoming docs through registry_ext.INC_REJECTED_CTE. This pins both
+    to the all-pairs ``list_intersect`` forms they replaced, on a
+    hand-built corpus holding every corner: a doc under 3 tokens, a
+    trigram repeated inside a doc, identical docs, disjoint docs, a
+    pair at exactly J = 0.7 (7 of 10 shingles) and non-ASCII tokens."""
+    from flight_events_flink_job_spark.plans import registry_ext as rx
+
+    t = [f"t{i}" for i in range(12)]
+    docs = [
+        (1, "a b"),
+        (2, "x y z x y z x y z q"),
+        (3, "the quick brown fox jumps over the lazy dog"),
+        (4, "the quick brown fox jumps over the lazy dog"),
+        (5, "p1 p2 p3 p4"),
+        (6, "q1 q2 q3 q4"),
+        (7, " ".join(t[:9])),
+        (8, " ".join(t)),
+        (9, "naïve café résumé über straße"),
+        (10, "naïve café résumé über straße 東京"),
+        (11, "x y z x y z q"),
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE raw_docs (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO raw_docs VALUES (?, ?)", docs)
+    con.execute("CREATE VIEW documents AS SELECT * FROM raw_docs")
+    sh = rx.SHINGLES_CTE.strip()
+    ref_j = (
+        "round(len(list_intersect({a}.sg, {b}.sg)) * 1.0"
+        " / len(list_distinct(list_concat({a}.sg, {b}.sg))), 4)"
+    )
+    expected = {
+        0.7: [(2, 11, 1.0), (3, 4, 1.0), (7, 8, 0.7), (9, 10, 0.75)],
+        0.8: [(2, 11, 1.0), (3, 4, 1.0)],
+    }
+    for threshold, want in expected.items():
+        got = con.sql(
+            f"WITH {sh}, {rx.jaccard_edges(threshold).strip()} "
+            "SELECT doc_a, doc_b, jaccard FROM pairs"
+        ).fetchall()
+        ref = con.sql(
+            f"WITH {sh} SELECT * FROM ("
+            f" SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,"
+            f" {ref_j.format(a='a', b='b')} AS jaccard"
+            " FROM sh a JOIN sh b ON a.doc_id < b.doc_id"
+            f") WHERE jaccard >= {threshold}"
+        ).fetchall()
+        assert sorted(got) == sorted(ref) == want, threshold
+
+    rejected = con.sql(
+        f"WITH {sh}, {rx.jaccard_edges(0.7).strip()},"
+        f" {rx.INC_REJECTED_CTE.strip()} SELECT doc_id FROM rejected"
+    ).fetchall()
+    ref_rejected = con.sql(
+        f"""WITH {sh},
+        split AS (SELECT (max(doc_id) + 1) // 2 AS half FROM documents),
+        ex AS (SELECT * FROM sh WHERE doc_id < (SELECT half FROM split)),
+        inc AS (SELECT * FROM sh WHERE doc_id >= (SELECT half FROM split)),
+        rej_cross AS (
+            SELECT DISTINCT i.doc_id FROM inc i JOIN ex e
+            ON {ref_j.format(a='i', b='e')} >= 0.7),
+        rej_batch AS (
+            SELECT DISTINCT b.doc_id FROM inc a JOIN inc b
+            ON a.doc_id < b.doc_id AND {ref_j.format(a='a', b='b')} >= 0.7)
+        SELECT doc_id FROM rej_cross UNION SELECT doc_id FROM rej_batch"""
+    ).fetchall()
+    # 11 is rejected by an index doc (2), 8 and 10 by a lower batch doc
+    assert sorted(rejected) == sorted(ref_rejected) == [(8,), (10,), (11,)]
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, sf_dir, duck, name):
     df = QUERIES[name](spark, sf_dir)
