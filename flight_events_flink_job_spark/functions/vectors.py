@@ -31,6 +31,16 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
+def sq_l2(a: Column, b: Column) -> Column:
+    """Left-to-right double squared-L2 distance of two ARRAY<DOUBLE>
+    columns. DuckDB twin: ``plans/vector_sql.l2``."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
 def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 

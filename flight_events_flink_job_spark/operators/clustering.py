@@ -1,4 +1,5 @@
-"""Bounded-iteration Lloyd k-means over the ``embeddings`` table.
+"""Bounded-iteration Lloyd k-means over the ``embeddings`` table, and
+the PQ / IVF-PQ / SemDedup operators built on it.
 
 Extension surface (SURVEY.md §2.6): the clustering step of an
 embedding-pipeline (corpus topic bucketing, IVF index training,
@@ -8,9 +9,20 @@ model-ish operators:
 - ``dedup.connected_components`` — iterative, no model, hash joins;
 - ``similarity.cosine_topk_ivf`` — a driver-held CAPPED centroid model
   (the module's one sanctioned collect);
-- this operator — iterative AND model-free on the driver: centroids
-  live in a k-row DataFrame that is broadcast per iteration, so NOTHING
-  is ever collected and the plan is one lazy chain.
+- this module's Lloyd tier (:func:`kmeans_assign` and everything on
+  it: ``kmeans_clusters``, ``semdedup``, ``cluster_balanced_sample``,
+  the PQ codebooks) — iterative AND model-free on the driver:
+  centroids live in a k-row DataFrame that is broadcast per iteration,
+  so NOTHING is ever collected and the plan is one lazy chain. The
+  IVF-routed tier (``ivf_pq_index``, ``semdedup_scaled``) instead
+  routes on the driver-held coarse model of ``similarity`` (one
+  router, ``similarity._coarse_router``).
+
+One implementation per step: one Lloyd chain (:func:`_lloyd`) trains
+k-means (whole vectors) and PQ (m slices, :func:`_slices`); one ADC
+tail (:func:`_adc_topk`) scores ``pq_topk`` and ``ivf_pq_query``; one
+per-cluster verdict (:func:`_semdedup_verdicts`) serves ``semdedup``
+and ``semdedup_scaled``.
 
 Scale shape per iteration: assignment is a broadcast nested-loop join
 of the k-row centroid table onto one linear scan of the vectors
@@ -23,22 +35,26 @@ unbounded-convergence variant belongs to the CC-style loop with a
 per-round driver boolean).
 
 Engine-portability (what makes the oracle hash-exact): squared-L2 is a
-sequential left fold over dimensions (Catalyst ``aggregate`` over
-``zip_with`` here, ``list_reduce`` over a comprehension in DuckDB —
-the same bit-exact pairing the IVF oracle uses); centroid means
-accumulate in DECIMAL (exact, associative) with ONE double division at
-the edge; assignment ties break by (d2, cid) row_number on both sides;
-inertia sums d2 in DECIMAL. Arrow swap-in note: at production scale the
-per-row fold would move into a pandas_udf matmul like
+sequential left fold over dimensions (``functions.vectors.sq_l2``
+here, ``vector_sql.l2`` in DuckDB — the same bit-exact pairing the IVF
+oracle uses); centroid means accumulate in DECIMAL (exact,
+associative) with ONE double division at the edge; assignment ties
+break by (d2, cid) row_number on both sides; inertia sums d2 in
+DECIMAL. Arrow swap-in note: at production scale the per-row fold
+would move into a pandas_udf matmul like
 ``similarity._ranked_centroids`` (same plan topology, faster math).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import warnings
+
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import to_double
+from ..functions.vectors import sq_l2, to_double
 from .util import spread
 
 
@@ -57,7 +73,7 @@ def kmeans_assign(
     un-reassigned (``iterations`` assign steps, ``iterations - 1``
     update steps).
     """
-    assigned, _ = lloyd_chain(embeddings, k=k, iterations=iterations, stride=stride)
+    assigned, _ = _lloyd(embeddings, k, iterations, stride)
     return assigned
 
 
@@ -87,28 +103,54 @@ def _check_seed_density(embeddings: DataFrame, k: int, stride: int) -> None:
         )
 
 
-def lloyd_chain(
-    embeddings: DataFrame, k: int = 8, iterations: int = 2, stride: int = 7
+def _slices(vec: Column, m: int, width: int, out: str = "v") -> Column:
+    """Generator: one (subspace BIGINT, ``out``) row per contiguous
+    ``width``-wide slice of ``vec``, ``m`` slices — the PQ split of the
+    corpus, the ``pq_topk`` queries and the ``ivf_pq_query`` (residual)
+    queries."""
+    return F.inline(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(s).cast("bigint").alias("subspace"),
+                    F.slice(vec, s * width + 1, width).alias(out),
+                )
+                for s in range(m)
+            ]
+        )
+    )
+
+
+def _lloyd(
+    embeddings: DataFrame,
+    k: int,
+    iterations: int,
+    stride: int,
+    m: int = 0,
+    dim: int = 64,
 ) -> tuple[DataFrame, DataFrame]:
-    """(assignment, codebook): the Lloyd loop of :func:`kmeans_assign`,
-    additionally returning the k-row centroid table the FINAL
-    assignment was computed against (what ADC distance tables need —
-    :func:`pq_topk`). Precondition: vec_id dense over [0, stride*k)
-    (checked — see :func:`_check_seed_density`)."""
+    """(assignment, codebook): THE fixed-iteration Lloyd chain, over a
+    (vec_id, *keys, v) frame — ``keys = []`` and whole vectors for
+    k-means (``m = 0``), ``keys = ["subspace"]`` and the ``m`` slices
+    of :func:`_slices` for PQ. Assignment = (vec_id, *keys, v, cid,
+    d2); codebook = (*keys, cid, cv) as used by the FINAL assignment.
+    Keyed on (subspace, cid), the m PQ chains share every scan, join
+    and aggregate, and each subspace's math is exactly an independent
+    k-means run over its slice (same stride init, same fold, same (d2,
+    cid) tie-break, same DECIMAL means). Precondition: vec_id dense
+    over [0, stride*k) (checked — see :func:`_check_seed_density`)."""
     _check_seed_density(embeddings, k, stride)
+    vec = to_double(F.col("embedding"))
+    keys = ["subspace"] if m else []
     e = spread(embeddings).select(
-        "vec_id", to_double(F.col("embedding")).alias("v")
+        "vec_id", _slices(vec, m, dim // m) if m else vec.alias("v")
     )
     cent = e.filter(
         (F.col("vec_id") % stride == 0) & (F.col("vec_id") < stride * k)
     ).select(
+        *keys,
         (F.col("vec_id") / stride).cast("bigint").alias("cid"),
         F.col("v").alias("cv"),
-    )
-    d2 = F.aggregate(
-        F.zip_with(F.col("v"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )
     assigned = None
     for it in range(iterations):
@@ -117,11 +159,14 @@ def lloyd_chain(
         # k candidates per vector to one row BEFORE the exchange, so
         # the shuffle carries N rows, not N*k window-sort input. Ties
         # break by cid (struct comparison is lexicographic; cid is
-        # unique per vec_id candidate set -> deterministic).
+        # unique per vec_id candidate set -> deterministic). With no
+        # keys the join is the k-row broadcast nested loop (join(df,
+        # []) would raise, hence ``keys or None``); with the subspace
+        # key it is a broadcast hash join.
         assigned = (
-            e.crossJoin(F.broadcast(cent))
-            .withColumn("d2", d2)
-            .groupBy("vec_id")
+            e.join(F.broadcast(cent), keys or None)
+            .withColumn("d2", sq_l2(F.col("v"), F.col("cv")))
+            .groupBy("vec_id", *keys)
             .agg(
                 F.min_by(
                     F.struct("v", "cid", "d2"), F.struct("d2", "cid")
@@ -129,6 +174,7 @@ def lloyd_chain(
             )
             .select(
                 "vec_id",
+                *keys,
                 F.col("m.v").alias("v"),
                 F.col("m.cid").alias("cid"),
                 F.col("m.d2").alias("d2"),
@@ -136,23 +182,55 @@ def lloyd_chain(
         )
         if it < iterations - 1:
             cent = (
-                assigned.select("cid", F.posexplode("v").alias("dim0", "x"))
-                .groupBy("cid", "dim0")
+                assigned.select(
+                    *keys, "cid", F.posexplode("v").alias("dim0", "x")
+                )
+                .groupBy(*keys, "cid", "dim0")
                 .agg(
                     (
                         F.sum(F.col("x").cast("decimal(20,10)")).cast("double")
                         / F.count("*")
                     ).alias("cx")
                 )
-                .groupBy("cid")
+                .groupBy(*keys, "cid")
                 .agg(
                     F.transform(
                         F.array_sort(F.collect_list(F.struct("dim0", "cx"))),
-                        lambda s: s["cx"],
+                        lambda st: st["cx"],
                     ).alias("cv")
                 )
             )
-    return assigned, cent
+    if not m:
+        return assigned, cent
+    # The PQ consumers (pq_topk, ivf_pq_index) evaluate TWO branches of
+    # this chain — codes via `assigned`, the ADC distance table via
+    # `cent` — and `cent`'s lineage is a prefix of `assigned`'s, so
+    # without a cache Spark runs the Lloyd iterations twice per query.
+    # Persisting the k_codes*m-row codebook (tiny: 32 rows at the
+    # defaults) makes the chain compute once: the dtable branch reads
+    # the cache, and `assigned`'s own final iteration reads the same
+    # cached codebook instead of re-deriving it (round-7 stage profile:
+    # the Lloyd stage was ~45% of ivf_pq_topk wall at sf20).
+    # Lifecycle note (round-7 ADVICE item 3): the persist is never
+    # explicitly released — callers return lazy DataFrames, so there is
+    # no post-action hook to unpersist from. The leak is bounded: one
+    # k_codes*m-row cached plan (32 rows at the defaults) per
+    # pq_topk/ivf_pq_topk INVOCATION, i.e. O(queries-per-session), and
+    # Spark's ContextCleaner reclaims entries once the DataFrame is
+    # garbage-collected. Callers that build many indexes in one session
+    # should call ``spark.catalog.clearCache()`` between builds.
+    return assigned, cent.persist()
+
+
+def lloyd_chain(
+    embeddings: DataFrame, k: int = 8, iterations: int = 2, stride: int = 7
+) -> tuple[DataFrame, DataFrame]:
+    """(assignment, codebook): the k-means form of :func:`_lloyd` —
+    :func:`kmeans_assign`'s loop, additionally returning the k-row
+    centroid table the FINAL assignment was computed against.
+    Precondition: vec_id dense over [0, stride*k) (checked — see
+    :func:`_check_seed_density`)."""
+    return _lloyd(embeddings, k, iterations, stride)
 
 
 def kmeans_clusters(
@@ -194,66 +272,119 @@ def semdedup(
     low-centroid-similarity keeper): ``u`` precedes ``v`` iff
     ``u.d2 > v.d2``, ties broken by lower ``vec_id``.
 
-    Scale shape: candidate pairs come from an equi-join on the cluster
-    id — NEVER a corpus cross join — so pair work is bounded by cluster
-    occupancy; at production scale ``k`` grows with the corpus to hold
-    expected cluster size constant (the paper runs k ~ sqrt(N)).
-    Assignment itself is the broadcast-k Lloyd chain of
-    :func:`kmeans_assign`; the dedup verdict never moves raw vectors
-    through more than one shuffle. Cosine and d2 are left-to-right
-    double folds, bit-identical to the DuckDB oracle's ``list_reduce``
-    / ``list_cosine_similarity``, so the threshold and precedence
+    Scale shape: pairs are only ever formed within one cluster — NEVER
+    a corpus cross join — so pair work is bounded by cluster occupancy;
+    at production scale ``k`` grows with the corpus to hold expected
+    cluster size constant (the paper runs k ~ sqrt(N)), which is what
+    :func:`semdedup_scaled` does. Assignment itself is the broadcast-k
+    Lloyd chain of :func:`kmeans_assign`; the verdict is the one
+    per-cluster Arrow pass of :func:`_semdedup_verdicts`, with no
+    member cap, so every member is checked against every
+    higher-precedence member and raw vectors move through exactly one
+    shuffle. Cosine and d2 are left-to-right double folds,
+    bit-identical to the DuckDB oracle's ``list_reduce`` /
+    ``list_cosine_similarity``, so the threshold and precedence
     comparisons agree across engines exactly. The 0.4 default is tuned
     to the synthetic fixture corpus (isotropic vectors: max pairwise
     cosine ~0.51, no planted duplicates); real embedding corpora run
     this at ~0.95+.
     """
-    assigned = kmeans_assign(
-        embeddings, k=k, iterations=iterations, stride=stride
-    ).persist()
-    # Norms are computed ONCE PER ROW before the pair join — inside the
-    # join predicate they would be recomputed per candidate PAIR (and
-    # the zero-norm guard would evaluate the denominator twice). The
-    # guarded ratio keeps the exact op sequence of
-    # functions.vectors.cosine / DuckDB list_cosine_similarity:
-    # dot / (sqrt(nx) * sqrt(ny)), zero-norm pairs scoring 0.0.
-    from ..functions.vectors import dot, l2_norm
+    return _semdedup_verdicts(
+        kmeans_assign(embeddings, k=k, iterations=iterations, stride=stride),
+        threshold,
+    )
 
-    withn = assigned.withColumn("nrm", l2_norm(F.col("v")))
-    x, y = withn.alias("x"), withn.alias("y")
-    precedence = (F.col("y.d2") > F.col("x.d2")) | (
-        (F.col("y.d2") == F.col("x.d2")) & (F.col("y.vec_id") < F.col("x.vec_id"))
-    )
-    denom = F.col("x.nrm") * F.col("y.nrm")
-    cos = F.when(denom == 0.0, F.lit(0.0)).otherwise(
-        dot(F.col("x.v"), F.col("y.v")) / denom
-    )
-    dropped = (
-        x.join(
-            y,
-            (F.col("x.cid") == F.col("y.cid"))
-            & (F.col("x.vec_id") != F.col("y.vec_id"))
-            & precedence
-            & (cos >= F.lit(threshold)),
-            "left_semi",
+
+def _cluster_verdict(
+    pdf: pd.DataFrame,
+    threshold: float,
+    max_bucket: int | None = None,
+    strict_cap: bool = False,
+) -> pd.DataFrame:
+    """One cluster's SemDedup verdict (cid, vec_id, v, d2 rows in; one
+    (cluster_id, n_vectors, n_dropped, n_kept) row out). Members sort by
+    keep-precedence (d2 DESC, vec_id ASC — a total order); x is dropped
+    iff some EARLIER-sorted member among the first ``max_bucket``
+    (all members when None) is >= ``threshold`` cosine-similar.
+    Cosines accumulate dot/norm sums dimension-by-dimension left to
+    right — per pair, the exact operation sequence of the sequential
+    fold / DuckDB list_cosine_similarity, a zero-norm pair scoring 0.0
+    — so the threshold cut is engine-exact (functions/vectors.
+    cosine_arrow rationale). Rows are scored in blocks against only
+    the droppers that can precede them, so memory stays
+    O(block * cluster size)."""
+    n = len(pdf)
+    cid = int(pdf["cid"].iloc[0])
+    if max_bucket is not None and n > max_bucket:
+        # Past the cap, drops are only checked against the max_bucket
+        # highest-precedence droppers — an approximation of the
+        # paper's semantics. Say so (round-7 VERDICT #1): fail loudly
+        # under strict_cap, else warn (executor log).
+        msg = (
+            f"semdedup_scaled cluster {cid} has {n} members > "
+            f"max_bucket={max_bucket}; verdicts are the capped "
+            "approximation. Re-train with more cells (hier_model) or "
+            "raise max_bucket."
         )
-        .select(F.col("x.vec_id").alias("vec_id"))
-        .withColumn("is_dropped", F.lit(1).cast("bigint"))
+        if strict_cap:
+            raise ValueError(msg)
+        warnings.warn(msg, stacklevel=2)
+    order = np.lexsort((pdf["vec_id"].to_numpy(), -pdf["d2"].to_numpy()))
+    x = np.vstack(pdf["v"].to_numpy())[order]
+    sq = np.zeros(n)
+    for i in range(x.shape[1]):
+        sq += x[:, i] * x[:, i]
+    nrm = np.sqrt(sq)
+    cap = n if max_bucket is None else min(n, max_bucket)
+    n_dropped = 0
+    block = 256
+    for lo in range(1, n, block):  # member 0 has no predecessor
+        hi = min(n, lo + block)
+        c = min(hi - 1, cap)  # droppers that precede some row here
+        dot_ = np.zeros((hi - lo, c))
+        for i in range(x.shape[1]):
+            dot_ += x[lo:hi, i][:, None] * x[:c, i][None, :]
+        denom = nrm[lo:hi][:, None] * nrm[:c][None, :]
+        with np.errstate(invalid="ignore", divide="ignore"):
+            cos = np.where(denom == 0.0, 0.0, dot_ / denom)
+        # dropper j can drop member i iff j < i in precedence order
+        hit = (cos >= threshold) & (
+            np.arange(c)[None, :] < np.arange(lo, hi)[:, None]
+        )
+        n_dropped += int(hit.any(axis=1).sum())
+    return pd.DataFrame(
+        {
+            "cluster_id": [cid],
+            "n_vectors": [n],
+            "n_dropped": [n_dropped],
+            "n_kept": [n - n_dropped],
+        }
     )
+
+
+def _semdedup_verdicts(
+    assigned: DataFrame,
+    threshold: float,
+    max_bucket: int | None = None,
+    strict_cap: bool = False,
+) -> DataFrame:
+    """(cluster_id, n_vectors, n_dropped, n_kept) from an assignment
+    (vec_id, v, cid, d2): the whole per-cluster verdict
+    (:func:`_cluster_verdict`) runs in ONE Arrow pass (applyInPandas on
+    the cluster key), so each vector moves once — vs a pair join
+    shuffling both 64-dim payloads per CANDIDATE PAIR (measured ~20 s
+    of interpreted per-pair folds at sf10)."""
+
+    def verdicts(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _cluster_verdict(pdf, threshold, max_bucket, strict_cap)
+
     return (
-        assigned.join(dropped, "vec_id", "left")
+        assigned.select("cid", "vec_id", "v", "d2")
         .groupBy("cid")
-        .agg(
-            F.count("*").alias("n_vectors"),
-            F.sum(F.coalesce(F.col("is_dropped"), F.lit(0).cast("bigint"))).alias(
-                "n_dropped"
-            ),
-        )
-        .select(
-            F.col("cid").alias("cluster_id"),
-            "n_vectors",
-            "n_dropped",
-            (F.col("n_vectors") - F.col("n_dropped")).alias("n_kept"),
+        .applyInPandas(
+            verdicts,
+            "cluster_id BIGINT, n_vectors BIGINT, n_dropped BIGINT, "
+            "n_kept BIGINT",
         )
     )
 
@@ -273,8 +404,8 @@ def pq_encode(
 
     The vector splits into ``m`` contiguous subspaces of ``dim/m``
     dimensions; each subspace trains its own ``k``-codeword codebook
-    with the shared fixed-iteration Lloyd chain (:func:`kmeans_assign`
-    over the sliced vectors — broadcast codebooks, no driver collect);
+    with the shared fixed-iteration Lloyd chain (:func:`_lloyd` over
+    the sliced vectors — broadcast codebooks, no driver collect);
     a vector's code is its per-subspace nearest-codeword id and its
     quantization error is the decimal-summed squared-L2 residual across
     subspaces. A 64-dim float vector (256 B) compresses to m=4 byte
@@ -292,7 +423,7 @@ def pq_encode(
     subspace) identical to m independent runs, so the per-subspace
     oracle replay still matches hash-exactly.
     """
-    assigned, _ = _pq_lloyd(embeddings, m, k, iterations, stride, dim)
+    assigned, _ = _lloyd(embeddings, k, iterations, stride, m, dim)
     # Scalar edge: the code tuple serializes as 's0-s1-...-s{m-1}' — the
     # repo convention keeps array columns OFF query edges (the driver
     # stringify-hash renders engine-native array types differently);
@@ -310,109 +441,6 @@ def pq_encode(
         .cast("double")
         .alias("q_error"),
     )
-
-
-def _pq_slices(embeddings: DataFrame, m: int, width: int) -> DataFrame:
-    """(vec_id, subspace, v): one row per vector per contiguous slice."""
-    return spread(embeddings).select(
-        "vec_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice(to_double(F.col("embedding")), s * width + 1, width)
-                    for s in range(m)
-                ]
-            )
-        ).alias("subspace", "v"),
-    ).withColumn("subspace", F.col("subspace").cast("bigint"))
-
-
-def _pq_lloyd(
-    embeddings: DataFrame,
-    m: int,
-    k: int,
-    iterations: int,
-    stride: int,
-    dim: int,
-) -> tuple[DataFrame, DataFrame]:
-    """(assignment, codebook) of the fused all-subspaces Lloyd chain:
-    assignment = (vec_id, subspace, cid, d2), codebook = (subspace,
-    cid, cv) as used by the FINAL assignment. Identical math to running
-    :func:`lloyd_chain` per slice (same stride init per subspace, same
-    fold, same (d2, cid) tie-break, same DECIMAL means). Precondition:
-    vec_id dense over [0, stride*k) (checked)."""
-    _check_seed_density(embeddings, k, stride)
-    width = dim // m
-    e = _pq_slices(embeddings, m, width)
-    cent = e.filter(
-        (F.col("vec_id") % stride == 0) & (F.col("vec_id") < stride * k)
-    ).select(
-        "subspace",
-        (F.col("vec_id") / stride).cast("bigint").alias("cid"),
-        F.col("v").alias("cv"),
-    )
-    d2 = F.aggregate(
-        F.zip_with(F.col("v"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    assigned = None
-    for it in range(iterations):
-        assigned = (
-            e.join(F.broadcast(cent), "subspace")
-            .withColumn("d2", d2)
-            .groupBy("vec_id", "subspace")
-            .agg(
-                F.min_by(
-                    F.struct("v", "cid", "d2"), F.struct("d2", "cid")
-                ).alias("mm")
-            )
-            .select(
-                "vec_id",
-                "subspace",
-                F.col("mm.v").alias("v"),
-                F.col("mm.cid").alias("cid"),
-                F.col("mm.d2").alias("d2"),
-            )
-        )
-        if it < iterations - 1:
-            cent = (
-                assigned.select(
-                    "subspace", "cid", F.posexplode("v").alias("dim0", "x")
-                )
-                .groupBy("subspace", "cid", "dim0")
-                .agg(
-                    (
-                        F.sum(F.col("x").cast("decimal(20,10)")).cast("double")
-                        / F.count("*")
-                    ).alias("cx")
-                )
-                .groupBy("subspace", "cid")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("dim0", "cx"))),
-                        lambda st: st["cx"],
-                    ).alias("cv")
-                )
-            )
-    # Both consumers (pq_topk, ivf_pq_topk) evaluate TWO branches of
-    # this chain — codes via `assigned`, the ADC distance table via
-    # `cent` — and `cent`'s lineage is a prefix of `assigned`'s, so
-    # without a cache Spark runs the Lloyd iterations twice per query.
-    # Persisting the k_codes*m-row codebook (tiny: 32 rows at the
-    # defaults) makes the chain compute once: the dtable branch reads
-    # the cache, and `assigned`'s own final iteration reads the same
-    # cached codebook instead of re-deriving it (round-7 stage profile:
-    # the Lloyd stage was ~45% of ivf_pq_topk wall at sf20).
-    # Lifecycle note (round-7 ADVICE item 3): the persist is never
-    # explicitly released — callers return lazy DataFrames, so there is
-    # no post-action hook to unpersist from. The leak is bounded: one
-    # k_codes*m-row cached plan (32 rows at the defaults) per
-    # pq_topk/ivf_pq_topk INVOCATION, i.e. O(queries-per-session), and
-    # Spark's ContextCleaner reclaims entries once the DataFrame is
-    # garbage-collected. Callers that build many indexes in one session
-    # should call ``spark.catalog.clearCache()`` between builds.
-    return assigned, cent.persist()
 
 
 def pq_topk(
@@ -445,24 +473,37 @@ def pq_topk(
     come from the same fused all-subspace Lloyd chain as
     :func:`pq_encode` (one scan, not m).
     """
-    width = dim // m
-    assigned, cent = _pq_lloyd(embeddings, m, k_codes, iterations, stride, dim)
-    codes = assigned.select("vec_id", "subspace", "cid")
-    d2q = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    assigned, cent = _lloyd(embeddings, k_codes, iterations, stride, m, dim)
+    qs = spread(embeddings.filter(F.col("vec_id") < num_queries)).select(
+        F.col("vec_id").alias("q_id"),
+        _slices(to_double(F.col("embedding")), m, dim // m, "qv"),
     )
-    qs = _pq_slices(
-        embeddings.filter(F.col("vec_id") < num_queries), m, width
-    ).select(F.col("vec_id").alias("q_id"), "subspace", F.col("v").alias("qv"))
-    dtable = (
-        qs.join(F.broadcast(cent), "subspace")
-        .select("q_id", "subspace", "cid", d2q.alias("d2"))
+    return _adc_topk(assigned.select("vec_id", "subspace", "cid"), qs, cent, [], k)
+
+
+def _adc_topk(
+    codes: DataFrame, qs: DataFrame, codebook: DataFrame, on: list, k: int
+) -> DataFrame:
+    """The ADC tail of :func:`pq_topk` and :func:`ivf_pq_query`:
+    (q_id, n_id, adc_d2, rank).
+
+    ``qs`` holds the query slices (q_id[, cell], subspace, qv); against
+    the codebook they give the per-query distance table (|Q| [x
+    nprobe] x m x k_codes rows — broadcast-sized). ``codes`` rows
+    (vec_id, subspace, cid, plus the ``on`` columns) look their entry
+    up on ``on`` + (subspace, cid), self-matches drop, one hash
+    aggregate sums the m entries per (q_id, vec_id) in DECIMAL
+    (associative — micro-partitioning cannot reorder it into a
+    different double) and a k-bounded (adc, vec_id) rank window
+    finishes."""
+    dtable = qs.join(F.broadcast(codebook), "subspace").select(
+        *[c for c in qs.columns if c != "qv"],
+        "cid",
+        sq_l2(F.col("qv"), F.col("cv")).alias("d2"),
     )
     adc = (
-        codes.join(F.broadcast(dtable), ["subspace", "cid"])
-        .filter(F.col("q_id") != F.col("vec_id"))
+        codes.join(F.broadcast(dtable), [*on, "subspace", "cid"])
+        .where(F.col("q_id") != F.col("vec_id"))
         .groupBy("q_id", "vec_id")
         .agg(F.sum(F.col("d2").cast("decimal(27,10)")).alias("adc_dec"))
     )
@@ -602,53 +643,30 @@ def ivf_pq_index(
     from pyspark import StorageLevel
 
     from .similarity import (
+        _cell_of,
+        _cell_table,
+        _coarse_router,
         _prepared,
-        _ranked_cells_hier,
-        _ranked_centroids,
         ivf_centroids,
     )
 
+    # two-level routing (similarity.ivf_model_hier) stays
+    # occupancy-constant past the flat 4096-centroid cap; build topology
+    # is unchanged — only the narrow cell expression differs
     if hier_model is not None:
-        # two-level routing (similarity.ivf_model_hier): occupancy-
-        # constant past the flat 4096-centroid cap; build topology is
-        # unchanged — only the narrow cell expression differs
-        cell_cent_list = sorted(
-            cell for lst in hier_model[1].values() for cell in lst
-        )
-        routing = ("hier", hier_model)
-
-        def cell_ranker(col, n):
-            return _ranked_cells_hier(col, hier_model, n)
+        routing: tuple = ("hier", hier_model)
+    elif centroids is not None:
+        routing = ("flat", centroids)
     else:
-        cents = (
-            centroids
-            if centroids is not None
-            else ivf_centroids(embeddings, ivf_stride)
-        )
-        cell_cent_list = cents
-        routing = ("flat", cents)
-
-        def cell_ranker(col, n):
-            return _ranked_centroids(col, cents, n)
-
-    spark = embeddings.sparkSession
-    cells = (
-        _prepared(embeddings, "n")
-        .select(
-            F.col("n_id").alias("vec_id"),
-            # try_element_at: empty probe list (memberless shard under
-            # an external hier model) -> NULL cell, row contributes
-            # nothing.
-            F.try_element_at(
-                cell_ranker(F.col("n_vec"), 1), F.lit(1)
-            ).alias("cell"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        routing = ("flat", ivf_centroids(embeddings, ivf_stride))
+    cell_list, cell_ranker = _coarse_router(routing)
+    cvdf = _cell_table(embeddings.sparkSession, cell_list)
+    routed = _prepared(embeddings, "n").select(
+        F.col("n_id").alias("vec_id"),
+        F.col("n_vec").alias("v"),
+        _cell_of(cell_ranker, F.col("n_vec")).alias("cell"),
     )
-    cvdf = spark.createDataFrame(
-        [(int(c), list(map(float, v))) for c, v in cell_cent_list],
-        "cell BIGINT, cv ARRAY<DOUBLE>",
-    )
+    cells = routed.select("vec_id", "cell").persist(StorageLevel.MEMORY_AND_DISK)
     res_src = None
     if residuals:
         # corpus residuals: one exact zip_with subtraction against the
@@ -657,28 +675,21 @@ def ivf_pq_index(
         # Lloyd chain evaluates its source once per iteration branch);
         # released below once the codes are materialized.
         res_src = (
-            _prepared(embeddings, "n")
-            .select(
-                F.col("n_id").alias("vec_id"),
-                F.col("n_vec").alias("v"),
-                F.try_element_at(
-                    cell_ranker(F.col("n_vec"), 1), F.lit(1)
-                ).alias("cell"),
-            )
-            .join(F.broadcast(cvdf), "cell")
+            routed.join(F.broadcast(cvdf), "cell")
             .select(
                 "vec_id",
                 F.zip_with("v", "cv", lambda a, b: a - b).alias("embedding"),
             )
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        assigned, cent = _pq_lloyd(
-            res_src, m, k_codes, iterations, pq_stride, dim
-        )
-    else:
-        assigned, cent = _pq_lloyd(
-            embeddings, m, k_codes, iterations, pq_stride, dim
-        )
+    assigned, cent = _lloyd(
+        embeddings if res_src is None else res_src,
+        k_codes,
+        iterations,
+        pq_stride,
+        m,
+        dim,
+    )
     codes = assigned.select("vec_id", "subspace", "cid").persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -722,73 +733,28 @@ def ivf_pq_query(
     """
     from .similarity import _prepared
 
-    width = index.dim // index.m
     q = _prepared(queries, "q")
     q_cell = q.select(
         "q_id",
         F.explode(index.cell_ranker(F.col("q_vec"), nprobe)).alias("cell"),
     )
-    cand = (
-        index.cells.join(F.broadcast(q_cell), "cell")
-        .where(F.col("q_id") != F.col("vec_id"))
-        .select("q_id", "vec_id", *(["cell"] if index.residuals else []))
+    on = ["q_id", "cell"] if index.residuals else ["q_id"]
+    cand = index.cells.join(F.broadcast(q_cell), "cell").select(
+        "vec_id", *on
     )
-    d2q = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    slices = F.posexplode(
-        F.array(
-            *[
-                F.slice(F.col("rv"), s * width + 1, width)
-                for s in range(index.m)
-            ]
-        )
-    ).alias("subspace", "qv")
     if index.residuals:
-        q_res = (
+        rv = (
             q.join(F.broadcast(q_cell), "q_id")
             .join(F.broadcast(index.cell_centroids), "cell")
             .select(
-                "q_id",
-                "cell",
-                F.zip_with("q_vec", "cv", lambda a, b: a - b).alias("rv"),
+                *on, F.zip_with("q_vec", "cv", lambda a, b: a - b).alias("rv")
             )
         )
-        qs = q_res.select("q_id", "cell", slices).withColumn(
-            "subspace", F.col("subspace").cast("bigint")
-        )
-        dtable = qs.join(F.broadcast(index.codebook), "subspace").select(
-            "q_id", "cell", "subspace", "cid", d2q.alias("d2")
-        )
-        join_keys = ["q_id", "cell", "subspace", "cid"]
     else:
-        qs = q.select(
-            "q_id", F.col("q_vec").alias("rv")
-        ).select("q_id", slices).withColumn(
-            "subspace", F.col("subspace").cast("bigint")
-        )
-        dtable = qs.join(F.broadcast(index.codebook), "subspace").select(
-            "q_id", "subspace", "cid", d2q.alias("d2")
-        )
-        join_keys = ["q_id", "subspace", "cid"]
-    adc = (
-        cand.join(index.codes, "vec_id")
-        .join(F.broadcast(dtable), join_keys)
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum(F.col("d2").cast("decimal(27,10)")).alias("adc_dec"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("adc_dec"), F.col("vec_id"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("n_id"),
-            F.round(F.col("adc_dec"), 4).cast("double").alias("adc_d2"),
-            F.col("rank").cast("bigint").alias("rank"),
-        )
+        rv = q.select("q_id", F.col("q_vec").alias("rv"))
+    qs = rv.select(*on, _slices(F.col("rv"), index.m, index.dim // index.m, "qv"))
+    return _adc_topk(
+        cand.join(index.codes, "vec_id"), qs, index.codebook, on, k
     )
 
 
@@ -856,44 +822,24 @@ def read_ivf_pq_index(spark, path: str) -> IvfPqIndex:
 
     from pyspark import StorageLevel
 
-    from .similarity import _ranked_cells_hier, _ranked_centroids
+    from .similarity import _cell_table, _coarse_router
 
     with open(f"{path}/meta.json") as f:
         meta = _json.load(f)
+
+    def cells_of(rows):
+        return [(int(c), list(map(float, v))) for c, v in rows]
+
+    model = meta["model"]
     if meta["routing"] == "hier":
-        l1 = [(int(s), list(map(float, v))) for s, v in meta["model"]["l1"]]
-        l2 = {
-            int(s): [(int(c), list(map(float, v))) for c, v in cells]
-            for s, cells in meta["model"]["l2"].items()
-        }
-        hier = (l1, l2)
-        cell_cent_list = sorted(
-            cell for lst in l2.values() for cell in lst
-        )
-        routing: tuple = ("hier", hier)
-
-        def cell_ranker(col, n):
-            return _ranked_cells_hier(col, hier, n)
+        l2 = {int(s): cells_of(c) for s, c in model["l2"].items()}
+        routing: tuple = ("hier", (cells_of(model["l1"]), l2))
     else:
-        cents = [(int(c), list(map(float, v))) for c, v in meta["model"]]
-        cell_cent_list = cents
-        routing = ("flat", cents)
-
-        def cell_ranker(col, n):
-            return _ranked_centroids(col, cents, n)
-
-    cells = spark.read.parquet(f"{path}/cells").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    codes = spark.read.parquet(f"{path}/codes").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    codebook = spark.read.parquet(f"{path}/codebook").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    cvdf = spark.createDataFrame(
-        [(int(c), list(map(float, v))) for c, v in cell_cent_list],
-        "cell BIGINT, cv ARRAY<DOUBLE>",
+        routing = ("flat", cells_of(model))
+    cell_list, cell_ranker = _coarse_router(routing)
+    cells, codes, codebook = (
+        spark.read.parquet(f"{path}/{name}").persist(StorageLevel.MEMORY_AND_DISK)
+        for name in ("cells", "codes", "codebook")
     )
     codebook.count()
     codes.count()
@@ -902,7 +848,7 @@ def read_ivf_pq_index(spark, path: str) -> IvfPqIndex:
         cells,
         codes,
         codebook,
-        cvdf,
+        _cell_table(spark, cell_list),
         cell_ranker,
         int(meta["m"]),
         int(meta["dim"]),
@@ -1007,14 +953,15 @@ def semdedup_scaled(
       corpora get proportionally more centroids inside the blob, so
       occupancy stays near target even when the distribution is
       head-heavy (measured on the clustered scalegen fixture);
-    - assignment is the Arrow matmul of :func:`similarity.
-      _ranked_centroids` (BLAS, not the interpreted per-row fold —
-      O(N*k) flops but vectorized), d2-to-centroid for keep-precedence
-      re-computed JVM-side as the exact left-to-right fold against the
-      broadcast centroid table (one fold per ROW, never per pair; the
-      oracle replays it with list_reduce);
-    - the pair join is occupancy-BOUNDED: each member is compared only
-      against its cluster's ``max_bucket`` highest-keep-precedence
+    - assignment is the Arrow matmul behind
+      :func:`similarity._coarse_router` (BLAS, not the interpreted
+      per-row fold — O(N*k) flops but vectorized), d2-to-centroid for
+      keep-precedence re-computed JVM-side as the exact left-to-right
+      fold against the broadcast centroid table (one fold per ROW,
+      never per pair; the oracle replays it with list_reduce);
+    - the verdict (:func:`_semdedup_verdicts`, shared with
+      :func:`semdedup`) is occupancy-BOUNDED: each member is compared
+      only against its cluster's ``max_bucket`` highest-keep-precedence
       members (precedence = farther-from-centroid first, ties lower
       vec_id — the members that can drop others), so pair work is
       <= N * max_bucket whatever the distribution. When a cluster's
@@ -1040,123 +987,33 @@ def semdedup_scaled(
     exact-semantics guarantee.
     """
     from .similarity import (
+        _cell_of,
+        _cell_table,
+        _coarse_router,
         _prepared,
-        _ranked_cells_hier,
-        _ranked_centroids,
         ivf_centroids,
     )
 
-    prep = _prepared(embeddings, "n")
     if hier_model is not None:
-        flat_cells = [cell for lst in hier_model[1].values() for cell in lst]
-        cent_list = sorted(flat_cells)
-        cid_expr = F.try_element_at(
-            _ranked_cells_hier(F.col("n_vec"), hier_model, 1), F.lit(1)
-        )
+        routing: tuple = ("hier", hier_model)
+    elif centroids is not None:
+        routing = ("flat", centroids)
     else:
-        cent_list = (
-            centroids
-            if centroids is not None
-            else ivf_centroids(embeddings, stride=target_occupancy)
-        )
-        cid_expr = F.element_at(
-            _ranked_centroids(F.col("n_vec"), cent_list, 1), 1
-        )
-    spark = embeddings.sparkSession
-    cent_df = spark.createDataFrame(
-        [(int(c), list(map(float, v))) for c, v in cent_list],
-        "cid BIGINT, cv ARRAY<DOUBLE>",
-    )
-    d2 = F.aggregate(
-        F.zip_with(F.col("v"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+        routing = ("flat", ivf_centroids(embeddings, stride=target_occupancy))
+    cells, ranker = _coarse_router(routing)
     assigned = (
-        prep.select(
+        _prepared(embeddings, "n")
+        .select(
             F.col("n_id").alias("vec_id"),
             F.col("n_vec").alias("v"),
-            cid_expr.alias("cid"),
+            _cell_of(ranker, F.col("n_vec")).alias("cell"),
         )
-        .join(F.broadcast(cent_df), "cid")
-        .withColumn("d2", d2)
-        .drop("cv")
-    )
-
-    # The whole per-cluster verdict runs in ONE Arrow pass (applyInPandas
-    # on the cluster key): each vector moves once (vs the pair-join form
-    # shuffling both 64-dim payloads per CANDIDATE PAIR — measured ~20 s
-    # of interpreted per-pair folds at sf10). Inside a group, members
-    # sort by keep-precedence (d2 DESC, vec_id ASC — a total order);
-    # only the first ``max_bucket`` sorted members are candidate
-    # droppers; x is dropped iff some EARLIER-sorted dropper is
-    # >= threshold cosine-similar. Cosines accumulate dot/norm sums
-    # dimension-by-dimension left-to-right over the pair grid — per
-    # pair, the exact operation sequence of the sequential fold /
-    # DuckDB list_cosine_similarity, so the threshold cut is
-    # engine-exact (functions/vectors.cosine_arrow rationale).
-    import pandas as pd  # noqa: PLC0415 (Arrow-path-only dependency)
-
-    max_b = max_bucket
-    thr = threshold
-    strict = strict_cap
-
-    def verdicts(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        ids = pdf["vec_id"].to_numpy()
-        d2v = pdf["d2"].to_numpy()
-        x = np.vstack(pdf["v"].to_numpy())
-        if len(ids) > max_b:
-            # Past the cap, drops are only checked against the max_b
-            # highest-precedence droppers — an approximation of the
-            # paper's semantics. Say so (round-7 VERDICT #1): fail
-            # loudly under strict_cap, else warn (executor log).
-            msg = (
-                f"semdedup_scaled cluster {int(pdf['cid'].iloc[0])} has "
-                f"{len(ids)} members > max_bucket={max_b}; verdicts are "
-                "the capped approximation. Re-train with more cells "
-                "(hier_model) or raise max_bucket."
-            )
-            if strict:
-                raise ValueError(msg)
-            import warnings
-
-            warnings.warn(msg, stacklevel=2)
-        order = np.lexsort((ids, -d2v))
-        xo, n = x[order], len(order)
-        cap = min(n, max_b)
-        y = xo[:cap]
-        dot_ = np.zeros((n, cap))
-        na = np.zeros(n)
-        nb = np.zeros(cap)
-        for i in range(x.shape[1]):
-            xi, yi = xo[:, i], y[:, i]
-            dot_ += xi[:, None] * yi[None, :]
-            na += xi * xi
-            nb += yi * yi
-        denom = np.sqrt(na)[:, None] * np.sqrt(nb)[None, :]
-        with np.errstate(invalid="ignore", divide="ignore"):
-            cos = np.where(denom == 0.0, 0.0, dot_ / denom)
-        # dropper j can drop member i iff j < i in precedence order
-        hit = cos >= thr
-        hit[np.arange(n)[:, None] <= np.arange(cap)[None, :]] = False
-        n_dropped = int(hit.any(axis=1).sum())
-        return pd.DataFrame(
-            {
-                "cluster_id": [int(pdf["cid"].iloc[0])],
-                "n_vectors": [n],
-                "n_dropped": [n_dropped],
-                "n_kept": [n - n_dropped],
-            }
-        )
-
-    return (
-        assigned.select("cid", "vec_id", "v", "d2")
-        .groupBy("cid")
-        .applyInPandas(
-            verdicts,
-            "cluster_id BIGINT, n_vectors BIGINT, n_dropped BIGINT, "
-            "n_kept BIGINT",
+        .join(F.broadcast(_cell_table(embeddings.sparkSession, cells)), "cell")
+        .select(
+            F.col("cell").alias("cid"),
+            "vec_id",
+            "v",
+            sq_l2(F.col("v"), F.col("cv")).alias("d2"),
         )
     )
+    return _semdedup_verdicts(assigned, threshold, max_bucket, strict_cap)

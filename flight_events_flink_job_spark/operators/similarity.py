@@ -22,7 +22,9 @@ pick candidates:
   measures it).
 - IVF — :func:`cosine_topk_ivf`, :func:`cosine_topk_ivf_hier`: corpus
   vectors sit in their nearest centroid's posting list, queries probe
-  their ``nprobe`` nearest lists, exact re-rank within.
+  their ``nprobe`` nearest lists, exact re-rank within; one pipeline,
+  :func:`_ivf_topk`, serves both quantizers through one coarse router,
+  :func:`_coarse_router`.
 
 All vector math is double-precision (functions/vectors.py); cosine is
 bit-identical to DuckDB's ``list_cosine_similarity`` on DOUBLE[], making
@@ -30,6 +32,8 @@ the exact variants fully oracle-hashable.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -914,6 +918,82 @@ def _ranked_centroids(vec_col, centroids, nprobe: int):
     return ranked(vec_col)
 
 
+def _coarse_router(routing: tuple) -> tuple[list, Callable]:
+    """``(cells, ranker)`` for a driver-held coarse model: ``routing``
+    is ``("flat", [(cid, vec), ...])`` (:func:`ivf_centroids`) or
+    ``("hier", (l1, l2))`` (:func:`ivf_model_hier`); ``cells`` is the
+    flat ``[(cell, vec), ...]`` list of every routable cell (sorted by
+    cell id) and ``ranker(col, n)`` the ARRAY<BIGINT> of ``col``'s ``n``
+    nearest cells (:func:`_ranked_centroids` /
+    :func:`_ranked_cells_hier`). Every IVF-family consumer routes
+    through here (the IVF top-k tiers, the IVF-PQ index build and
+    reload, ``semdedup_scaled``)."""
+    kind, model = routing
+    if kind == "hier":
+        cells = sorted(cell for lst in model[1].values() for cell in lst)
+
+        def ranker(col, n):
+            return _ranked_cells_hier(col, model, n)
+    else:
+        cells = model
+
+        def ranker(col, n):
+            return _ranked_centroids(col, model, n)
+
+    return cells, ranker
+
+
+def _cell_of(ranker, vec_col):
+    """A vector's coarse cell: the head of its 1-probe list.
+    try_element_at: a vector routed to a memberless shard (external hier
+    models only) has an EMPTY probe list, so its cell is NULL and it
+    joins nothing; flat probe lists are never empty."""
+    return F.try_element_at(ranker(vec_col, 1), F.lit(1))
+
+
+def _cell_table(spark, cells: list) -> DataFrame:
+    """(cell BIGINT, cv ARRAY<DOUBLE>): the routable cells as a tiny
+    broadcast-sized frame (residual subtraction, d2-to-centroid)."""
+    return spark.createDataFrame(
+        [(int(c), list(map(float, v))) for c, v in cells],
+        "cell BIGINT, cv ARRAY<DOUBLE>",
+    )
+
+
+def _ivf_topk(
+    prep: DataFrame, routing: tuple, k: int, num_queries: int, nprobe: int
+) -> DataFrame:
+    """The posting-list pipeline both IVF tiers share (the analogue of
+    :func:`_lsh_topk`): corpus vectors sit in their nearest cell's
+    posting list (a NARROW expression — no shuffle), each query probes
+    its ``nprobe`` nearest cells, candidates come from an equi-join on
+    the cell id, exact cosine re-rank within, one :func:`_top_k` tail.
+
+    ONE prepared corpus expression (``prep``) serves the corpus
+    assignment and the query side (:func:`_query_side`), and — when the
+    hier tier trains in-call — the train passes. Shared LAZILY on
+    purpose: an eager checkpoint here was interleave-A/B'd WORSE (1.26
+    -> 1.62 s at sf0.1 on the hier tier) — with only two post-train
+    consumers and no collect in the serve path, the extra
+    materialization job costs more than the duplicated
+    scan+sanitize+to_double chain it saves (unlike mips_topk_lsh, whose
+    FOUR consumers include a max-norm collect).
+    """
+    _, ranker = _coarse_router(routing)
+    e = prep.withColumn("cid", _cell_of(ranker, F.col("n_vec")))
+    q = (
+        _query_side(prep, None, num_queries)
+        .withColumn("probes", ranker(F.col("q_vec"), nprobe))
+        .select("q_id", "q_vec", F.explode("probes").alias("cid"))
+    )
+    scored = (
+        e.join(F.broadcast(q), "cid")
+        .where(F.col("q_id") != F.col("n_id"))
+        .withColumn("_cos", cosine_arrow(F.col("q_vec"), F.col("n_vec")))
+    )
+    return _top_k(scored, "_cos", k, "cosine")
+
+
 def cosine_topk_ivf(
     embeddings: DataFrame,
     k: int = 10,
@@ -922,10 +1002,8 @@ def cosine_topk_ivf(
     nprobe: int = 4,
     centroids: list | None = None,
 ) -> DataFrame:
-    """IVF approximate top-k: corpus vectors are assigned to their
-    nearest centroid's posting list (a NARROW expression — no shuffle);
-    each query probes its ``nprobe`` nearest lists; candidates come from
-    an equi-join on centroid id; exact cosine re-rank within.
+    """IVF approximate top-k on the flat coarse quantizer
+    (:func:`ivf_centroids`), served by :func:`_ivf_topk`.
 
     At 100 TB: assignment adds O(|C|) flops per row inside the scan,
     the candidate join touches ~nprobe/|C| of the corpus per query, and
@@ -935,20 +1013,9 @@ def cosine_topk_ivf(
     assignment/probing).
     """
     cents = centroids if centroids is not None else ivf_centroids(embeddings, stride)
-    e = _prepared(embeddings, "n").withColumn(
-        "cid", F.element_at(_ranked_centroids(F.col("n_vec"), cents, 1), 1)
+    return _ivf_topk(
+        _prepared(embeddings, "n"), ("flat", cents), k, num_queries, nprobe
     )
-    q = (
-        _prepared(embeddings.filter(F.col("vec_id") < num_queries), "q")
-        .withColumn("probes", _ranked_centroids(F.col("q_vec"), cents, nprobe))
-        .select("q_id", "q_vec", F.explode("probes").alias("cid"))
-    )
-    scored = (
-        e.join(F.broadcast(q), "cid")
-        .where(F.col("q_id") != F.col("n_id"))
-        .withColumn("_cos", cosine_arrow(F.col("q_vec"), F.col("n_vec")))
-    )
-    return _top_k(scored, "_cos", k, "cosine")
 
 
 # ---------------------------------------------------------------------------
@@ -1156,22 +1223,13 @@ def cosine_topk_ivf_hier(
     model: tuple | None = None,
 ) -> DataFrame:
     """IVF approximate top-k on the HIERARCHICAL coarse quantizer —
-    the same posting-list plan as :func:`cosine_topk_ivf` (narrow
-    assignment, equi-join candidate gate, exact cosine re-rank, only
-    the small candidate set ever shuffles) but with cell routing that
-    keeps occupancy ~``target_occupancy`` past the flat tier's
-    4096-centroid cap (see :func:`ivf_model_hier`). Deterministic end
-    to end: the DuckDB oracle replays both quantizer levels, so the
-    driver check is value-exact.
+    the same posting-list pipeline as :func:`cosine_topk_ivf`
+    (:func:`_ivf_topk`) but with cell routing that keeps occupancy
+    ~``target_occupancy`` past the flat tier's 4096-centroid cap (see
+    :func:`ivf_model_hier`). Deterministic end to end: the DuckDB
+    oracle replays both quantizer levels, so the driver check is
+    value-exact.
     """
-    # r13: ONE prepared corpus expression serves the train pass (when
-    # training in-call), the corpus assignment, and the query side.
-    # Shared LAZILY on purpose: an eager checkpoint here was
-    # interleave-A/B'd WORSE (1.26 -> 1.62 s at sf0.1) — with only two
-    # post-train consumers and no collect in the serve path, the extra
-    # materialization job costs more than the duplicated
-    # scan+sanitize+to_double chain it saves (unlike mips_topk_lsh,
-    # whose FOUR consumers include a max-norm collect).
     prep = _prepared(embeddings, "n")
     mdl = (
         model
@@ -1180,24 +1238,7 @@ def cosine_topk_ivf_hier(
             embeddings, target_occupancy=target_occupancy, prepared=prep
         )
     )
-    e = prep.withColumn(
-        # try_element_at: a vector routed to a memberless shard has an
-        # EMPTY probe list (external models only) — NULL cid joins to
-        # nothing, same contributes-no-candidates semantics as the
-        # multi-probe path; plain element_at would raise under ANSI.
-        "cid", F.try_element_at(_ranked_cells_hier(F.col("n_vec"), mdl, 1), F.lit(1))
-    )
-    q = (
-        _query_side(prep, None, num_queries)
-        .withColumn("probes", _ranked_cells_hier(F.col("q_vec"), mdl, nprobe))
-        .select("q_id", "q_vec", F.explode("probes").alias("cid"))
-    )
-    scored = (
-        e.join(F.broadcast(q), "cid")
-        .where(F.col("q_id") != F.col("n_id"))
-        .withColumn("_cos", cosine_arrow(F.col("q_vec"), F.col("n_vec")))
-    )
-    return _top_k(scored, "_cos", k, "cosine")
+    return _ivf_topk(prep, ("hier", mdl), k, num_queries, nprobe)
 
 
 def knn_label_vote(

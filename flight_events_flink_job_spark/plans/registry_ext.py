@@ -2535,8 +2535,9 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_topk(_embs(spark, sf_dir))
 
 
-# Trained coarse-quantizer models cached per corpus (train once, query
-# many — the IVF lifecycle; same pattern as registry_rel._IVF_MODELS).
+# Trained coarse-quantizer models cached per corpus and stride (train
+# once, query many — the IVF lifecycle); the one cache for every flat
+# coarse model (similarity_topk_ivf, the IVF-PQ indexes, semdedup_scaled).
 # Without the cache the bench re-trains per repetition and times the
 # train step instead of the query (round-7: semdedup_scaled read 20.5 s
 # at sf10 of which ~half was 4 retrains + cold assignment).

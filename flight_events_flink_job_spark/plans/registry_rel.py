@@ -56,7 +56,7 @@ from ..operators.relational import (
     VALUE_BANDS,
 )
 from ..operators.similarity import cosine_topk_ivf
-from ..sources.fixtures import fixture_token, load_table
+from ..sources.fixtures import load_table
 from ..sources.flight_adapter import FLIGHTS_CTE
 from . import vector_sql as vs
 from .registry import ORACLES, register
@@ -459,12 +459,6 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pricing_summary(load_table(spark, sf_dir, "lineitem"))
 
 
-# Keyed on the fixture snapshot token too (round-11 VERDICT item 8):
-# driver-held centroids are data-derived, so an in-place parquet
-# regeneration must retrain, not serve the stale model.
-_IVF_MODELS: dict[tuple, list] = {}
-
-
 @register(
     "similarity_topk_ivf",
     oracle=vs.query(
@@ -481,14 +475,14 @@ def q_similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact cosine re-rank — deterministic, hence value-oracle-checked
     (unlike the random-hyperplane LSH variant). The trained centroid
     set is cached per corpus (train once, query many — the normal IVF
-    lifecycle)."""
-    from ..operators.similarity import ivf_centroids
+    lifecycle) in the one coarse-model cache,
+    registry_ext._coarse_model, which the IVF-PQ indexes share."""
+    from .registry_ext import _coarse_model
 
-    embs = load_table(spark, sf_dir, "embeddings")
-    key = (sf_dir, fixture_token(sf_dir, "embeddings"))
-    if key not in _IVF_MODELS:
-        _IVF_MODELS[key] = ivf_centroids(embs)
-    return cosine_topk_ivf(embs, centroids=_IVF_MODELS[key])
+    return cosine_topk_ivf(
+        load_table(spark, sf_dir, "embeddings"),
+        centroids=_coarse_model(spark, sf_dir, 61),
+    )
 
 
 @register(

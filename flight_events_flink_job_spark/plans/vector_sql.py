@@ -214,8 +214,8 @@ def gate(probes: str, assign: str, cell: str) -> str:
 
 
 def lloyd(p: str, dim: int, k: int, iterations: int, stride: int) -> list[str]:
-    """The fixed-iteration Lloyd chain of operators/clustering
-    (kmeans_assign, and per subspace pq_encode) over the CTE ``{p}e``
+    """The fixed-iteration Lloyd chain of operators/clustering._lloyd
+    (k-means, and per subspace PQ) over the CTE ``{p}e``
     (vec_id, v): stride init (cid = vec_id / stride for the first k
     stride multiples), per iteration the folded d2 to every centroid
     with the (d2, cid) tie-break, and the DECIMAL-mean centroid update.
@@ -269,7 +269,7 @@ def adc(
     cand: bool = False, cell: bool = False,
 ) -> tuple[list[str], str]:
     """The Asymmetric Distance Computation tail of clustering.pq_topk /
-    ivf_pq_query over the ``pq_lloyd`` chains: per subspace the query
+    ivf_pq_query (clustering._adc_topk) over the ``pq_lloyd`` chains: per subspace the query
     slice of ``queries`` (q_id[, cell], qv) against every codeword
     (``dt{s}``, the same fold), the parts union looking each code up,
     the DECIMAL sum across subspaces and the (adc, n_id) rank. Without
@@ -316,10 +316,11 @@ def semdedup(
     ctes: list[str], assign: str, threshold: float, max_bucket: int | None = None
 ) -> str:
     """The SemDedup verdict and per-cluster summary of
-    clustering.semdedup / semdedup_scaled over ``assign`` (vec_id, v,
-    cid, d2): x is dropped iff a same-cluster y with keep-precedence
-    (farther from the centroid, ties lower vec_id) is >= ``threshold``
-    cosine-similar, a zero vector scoring 0.0. With ``max_bucket`` only
+    clustering.semdedup / semdedup_scaled (clustering._semdedup_verdicts)
+    over ``assign`` (vec_id, v, cid, d2): x is dropped iff a
+    same-cluster y with keep-precedence (farther from the centroid,
+    ties lower vec_id) is >= ``threshold`` cosine-similar, a zero
+    vector scoring 0.0. With ``max_bucket`` only
     each cluster's top-``max_bucket`` precedence members can drop.
     ``list_cosine_similarity`` on DOUBLE[] reproduces the Spark fold
     bit-exactly (functions/vectors.py), so the cut agrees."""

@@ -38,7 +38,6 @@ TOKEN_KEYED = [
     ("plans.registry_ext", "_COARSE_MODELS", "embeddings"),
     ("plans.registry_ext", "_IVFPQ_INDEXES", "embeddings"),
     ("plans.registry_ext", "_MIPS_PAIR_CONFIGS", "embeddings"),
-    ("plans.registry_rel", "_IVF_MODELS", "embeddings"),
     ("sources.flight_adapter", "_SHARED_FLIGHTS", "events"),
 ]
 
@@ -105,12 +104,6 @@ def _populate(module: str, attr: str, spark, sf_dir: str) -> None:
         )
 
         _mips_paired_config(spark, sf_dir)
-    elif attr == "_IVF_MODELS":
-        # populated by the registered query itself (its builder is
-        # inline in q_similarity_topk_ivf)
-        from flight_events_flink_job_spark.plans import QUERIES
-
-        QUERIES["similarity_topk_ivf"](spark, sf_dir)
     elif attr == "_SHARED_FLIGHTS":
         from flight_events_flink_job_spark.sources.flight_adapter import (
             shared_flights,

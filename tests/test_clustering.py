@@ -184,9 +184,9 @@ def test_pq_topk_approximates_exact_l2(spark, sf_dir):
     # entries for that neighbor's codes — recomputed driver-side from
     # the same fused Lloyd chain's codebook with the same
     # left-to-right fold.
-    from flight_events_flink_job_spark.operators.clustering import _pq_lloyd
+    from flight_events_flink_job_spark.operators.clustering import _lloyd
 
-    assigned, cent = _pq_lloyd(embs, m=4, k=8, iterations=2, stride=7, dim=64)
+    assigned, cent = _lloyd(embs, k=8, iterations=2, stride=7, m=4, dim=64)
     codes = {
         (r.vec_id, r.subspace): r.cid for r in assigned.collect()
     }
@@ -725,3 +725,115 @@ def test_ivfpq_index_disk_roundtrip(spark, sf_dir, tmp_path):
         for df in (loaded.cells, loaded.codes, loaded.codebook):
             assert df.storageLevel.useMemory or df.storageLevel.useDisk
         loaded.unpersist()
+
+
+def test_sq_l2_matches_vector_sql_l2(spark, sf_dir):
+    """The one squared-L2 fold of the Spark vector-index operators
+    (functions/vectors.sq_l2) and its DuckDB twin (plans/vector_sql.l2,
+    which every Lloyd/ADC/IVF oracle embeds) must return bit-identical
+    doubles on fixture vectors, the zero vector included."""
+    import duckdb
+
+    from flight_events_flink_job_spark.functions.vectors import sq_l2
+    from flight_events_flink_job_spark.plans import vector_sql as vs
+
+    vecs = [
+        (r.vec_id, [float(x) for x in r.embedding])
+        for r in _embs(spark, sf_dir).filter(F.col("vec_id") < 12).collect()
+    ]
+    vecs.append((-1, [0.0] * 64))
+    pairs = [(a, b, va, vb) for a, va in vecs for b, vb in vecs]
+    schema = "a_id BIGINT, b_id BIGINT, a ARRAY<DOUBLE>, b ARRAY<DOUBLE>"
+    got = {
+        (r.a_id, r.b_id): r.d
+        for r in spark.createDataFrame(pairs, schema)
+        .select("a_id", "b_id", sq_l2(F.col("a"), F.col("b")).alias("d"))
+        .collect()
+    }
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE p ({schema.replace('ARRAY<DOUBLE>', 'DOUBLE[]')})")
+    con.executemany("INSERT INTO p VALUES (?, ?, ?, ?)", pairs)
+    want = {
+        (a, b): d
+        for a, b, d in con.execute(
+            f"SELECT a_id, b_id, {vs.l2('a', 'b', 64)} FROM p"
+        ).fetchall()
+    }
+    assert len(got) == len(pairs) and got == want
+    assert got[(-1, -1)] == 0.0 and got[(0, 0)] == 0.0
+
+
+def test_semdedup_exact_past_256_members(spark):
+    """``semdedup`` has no member cap: on a single 300-member cluster
+    (past semdedup_scaled's default max_bucket of 256) the per-cluster
+    verdict must not warn, and its drop count must equal a driver-side
+    replay of the precedence rule over every pair (y drops x iff y.d2 >
+    x.d2, ties lower vec_id, and cosine >= threshold with left-to-right
+    dot/norm sums, a zero vector scoring 0.0)."""
+    import math
+    import warnings
+
+    import numpy as np
+
+    from flight_events_flink_job_spark.operators.clustering import (
+        _cluster_verdict,
+        kmeans_assign,
+    )
+
+    rng = np.random.default_rng(7)
+    base = rng.normal(size=(300, 8)) + 1.0
+    base[150:200] = base[:50] + 0.05 * rng.normal(size=(50, 8))  # near-dups
+    base[299] = 0.0
+    embs = spark.createDataFrame(
+        [(i, [float(x) for x in row], 0) for i, row in enumerate(base)],
+        "vec_id LONG, embedding ARRAY<FLOAT>, label INT",
+    )
+    thr = 0.95
+    (row,) = semdedup(embs, k=1, threshold=thr).collect()
+    assert row.n_vectors == 300
+
+    members = [
+        (r.vec_id, list(r.v), r.d2)
+        for r in kmeans_assign(embs, k=1).collect()
+    ]
+
+    def cos(a, b):
+        d = na = nb = 0.0
+        for x, y in zip(a, b):
+            d += x * y
+            na += x * x
+            nb += y * y
+        denom = math.sqrt(na) * math.sqrt(nb)
+        return 0.0 if denom == 0.0 else d / denom
+
+    dropped = sum(
+        any(
+            (yd > xd or (yd == xd and yi < xi)) and cos(xv, yv) >= thr
+            for yi, yv, yd in members
+        )
+        for xi, xv, xd in members
+    )
+    assert 0 < dropped < 300
+    assert (row.n_dropped, row.n_kept) == (dropped, 300 - dropped)
+
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        {
+            "cid": [0] * len(members),
+            "vec_id": [m[0] for m in members],
+            "v": [np.array(m[1]) for m in members],
+            "d2": [m[2] for m in members],
+        }
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = _cluster_verdict(pdf, thr)
+    assert out.to_dict("records") == [
+        {
+            "cluster_id": 0,
+            "n_vectors": 300,
+            "n_dropped": dropped,
+            "n_kept": 300 - dropped,
+        }
+    ]

@@ -287,11 +287,12 @@ def main() -> None:
             from pyspark.sql import functions as SF
 
             from flight_events_flink_job_spark.operators.clustering import (
-                _pq_lloyd,
+                _lloyd,
             )
             from flight_events_flink_job_spark.operators.similarity import (
+                _cell_of,
+                _coarse_router,
                 _prepared,
-                _ranked_centroids,
                 hyperplane_buckets,
                 ivf_centroids,
             )
@@ -346,12 +347,10 @@ def main() -> None:
                 .groupBy("b")
                 .agg(SF.count("*").alias("n"))
             )
-            cents = ivf_centroids(embs)
+            _, flat_ranker = _coarse_router(("flat", ivf_centroids(embs)))
             point["occupancy"]["ivf_cells"] = occ_stats(
                 prep.select(
-                    SF.element_at(
-                        _ranked_centroids(SF.col("n_vec"), cents, 1), 1
-                    ).alias("cell")
+                    _cell_of(flat_ranker, SF.col("n_vec")).alias("cell")
                 )
                 .groupBy("cell")
                 .agg(SF.count("*").alias("n"))
@@ -360,16 +359,14 @@ def main() -> None:
             # PRODUCTION target (64) — the flat tier's max cell grows
             # as N/4096 past the cap; hier must hold ~target through it
             from flight_events_flink_job_spark.operators.similarity import (
-                _ranked_cells_hier,
                 ivf_model_hier,
             )
 
             hier = ivf_model_hier(embs, target_occupancy=64)
+            _, hier_ranker = _coarse_router(("hier", hier))
             point["occupancy"]["ivf_cells_hier_t64"] = occ_stats(
                 prep.select(
-                    SF.element_at(
-                        _ranked_cells_hier(SF.col("n_vec"), hier, 1), 1
-                    ).alias("cell")
+                    _cell_of(hier_ranker, SF.col("n_vec")).alias("cell")
                 )
                 .groupBy("cell")
                 .agg(SF.count("*").alias("n"))
@@ -378,7 +375,7 @@ def main() -> None:
                 "l1_shards": len(hier[0]),
                 "l2_cells": sum(len(v) for v in hier[1].values()),
             }
-            assigned, _ = _pq_lloyd(embs, 4, 8, 2, 7, 64)
+            assigned, _ = _lloyd(embs, 8, 2, 7, m=4, dim=64)
             point["occupancy"]["pq_cells"] = occ_stats(
                 assigned.groupBy("subspace", "cid").agg(
                     SF.count("*").alias("n")
