@@ -133,7 +133,8 @@ def _lloyd(
     (vec_id, *keys, v) frame — ``keys = []`` and whole vectors for
     k-means (``m = 0``), ``keys = ["subspace"]`` and the ``m`` slices
     of :func:`_slices` for PQ. Assignment = (vec_id, *keys, v, cid,
-    d2); codebook = (*keys, cid, cv) as used by the FINAL assignment.
+    d2); codebook = (*keys, cid, cv) as used by the FINAL assignment
+    (checkpointed for PQ, see below).
     Keyed on (subspace, cid), the m PQ chains share every scan, join
     and aggregate, and each subspace's math is exactly an independent
     k-means run over its slice (same stride init, same fold, same (d2,
@@ -154,6 +155,16 @@ def _lloyd(
     )
     assigned = None
     for it in range(iterations):
+        if m and it == iterations - 1:
+            # The PQ consumers (pq_topk, ivf_pq_index) evaluate TWO
+            # branches of the chain — codes via `assigned`, the ADC
+            # distance table via the codebook — and the codebook's
+            # lineage is a prefix of `assigned`'s. One eager
+            # localCheckpoint of the k*m-row codebook the final
+            # assignment reads (32 rows at the defaults) makes the chain
+            # compute once per call. It belongs to this call: the cache
+            # manager never serves it to a later one, as a persist would.
+            cent = cent.localCheckpoint(eager=True)
         # argmin via min_by over a (d2, cid) struct, NOT a row_number
         # window: the hash aggregate partial-combines each partition's
         # k candidates per vector to one row BEFORE the exchange, so
@@ -200,26 +211,7 @@ def _lloyd(
                     ).alias("cv")
                 )
             )
-    if not m:
-        return assigned, cent
-    # The PQ consumers (pq_topk, ivf_pq_index) evaluate TWO branches of
-    # this chain — codes via `assigned`, the ADC distance table via
-    # `cent` — and `cent`'s lineage is a prefix of `assigned`'s, so
-    # without a cache Spark runs the Lloyd iterations twice per query.
-    # Persisting the k_codes*m-row codebook (tiny: 32 rows at the
-    # defaults) makes the chain compute once: the dtable branch reads
-    # the cache, and `assigned`'s own final iteration reads the same
-    # cached codebook instead of re-deriving it (round-7 stage profile:
-    # the Lloyd stage was ~45% of ivf_pq_topk wall at sf20).
-    # Lifecycle note (round-7 ADVICE item 3): the persist is never
-    # explicitly released — callers return lazy DataFrames, so there is
-    # no post-action hook to unpersist from. The leak is bounded: one
-    # k_codes*m-row cached plan (32 rows at the defaults) per
-    # pq_topk/ivf_pq_topk INVOCATION, i.e. O(queries-per-session), and
-    # Spark's ContextCleaner reclaims entries once the DataFrame is
-    # garbage-collected. Callers that build many indexes in one session
-    # should call ``spark.catalog.clearCache()`` between builds.
-    return assigned, cent.persist()
+    return assigned, cent
 
 
 def lloyd_chain(
@@ -566,15 +558,16 @@ class IvfPqIndex:
     - ``codes``     (vec_id, subspace, cid): PQ byte codes, persisted
       — after the build, queries NEVER touch raw corpus vectors;
     - ``codebook``  (subspace, cid, cv): the k_codes*m-row trained
-      codebook (broadcast-sized), persisted by the Lloyd chain;
+      codebook (broadcast-sized), persisted;
     - ``cell_centroids``: the coarse centroid table as a tiny
       DataFrame (residual mode subtracts against it query-side);
     - ``cell_ranker``: the narrow routing expression (flat or
       two-level hierarchical) for query-side probe selection.
 
-    ``unpersist()`` releases all cached artifacts — callers that cache
-    indexes (plans/registry_ext._IVFPQ_INDEXES) evict through it, so
-    rebuilds after a fixture regeneration don't accumulate storage.
+    ``unpersist()`` releases all cached artifacts — the registry's
+    index cache (``sources.fixtures.session_artifact``) evicts through
+    it, so rebuilds after a fixture regeneration don't accumulate
+    storage.
     """
 
     def __init__(
@@ -634,9 +627,8 @@ def ivf_pq_index(
     NO vec_id shuffle — the cell is recomputed inline rather than
     joined back, keeping the build scan-shaped); (3) the fused
     all-subspace Lloyd chain trains the codebook and assigns codes in
-    one lineage; (4) ``codebook`` then ``codes`` then ``cells`` are
-    materialized in dependency order so each downstream action reads
-    the upstream from cache, and the build-only residual frame is
+    one lineage; (4) ``codebook``, ``codes`` and ``cells`` are persisted
+    and materialized, and the build-only residual frame is
     unpersisted before returning — the returned index holds ONLY the
     serve-time artifacts.
     """
@@ -690,11 +682,12 @@ def ivf_pq_index(
         m,
         dim,
     )
+    # the index owns a persisted copy of the chain's checkpointed
+    # codebook, so unpersist() releases it with the other artifacts
+    cent = cent.persist(StorageLevel.MEMORY_AND_DISK)
     codes = assigned.select("vec_id", "subspace", "cid").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    # materialize in dependency order: codebook (the Lloyd chain's
-    # shared prefix), codes (reads the cached codebook), cells
     cent.count()
     codes.count()
     cells.count()
@@ -761,8 +754,8 @@ def ivf_pq_query(
 def write_ivf_pq_index(index: IvfPqIndex, path: str) -> None:
     """Persist a built :class:`IvfPqIndex` to ``path`` — the LITERAL
     "write codes once" half of the IVFADC lifecycle, durable across
-    Spark sessions (the in-session persisted-frame cache of
-    plans/registry_ext._IVFPQ_INDEXES dies with the application).
+    Spark sessions (the registry's in-session index cache,
+    ``sources.fixtures.session_artifact``, dies with the application).
 
     Layout: ``cells/``, ``codes/``, ``codebook/`` as parquet (the
     corpus-sized artifacts go through Spark writers, so any

@@ -625,7 +625,7 @@ def incremental_neardup(
     corpus-determined subtrees a caller evaluating several queries per
     session persists once and reuses (round-10 VERDICT item 6; the
     registry does this via plans/registry_ext._inc_neardup_prelude,
-    the PQ-codebook-style lifecycle of _NEARDUP_COMPONENTS). The live
+    one ``sources.fixtures.session_artifact`` per corpus). The live
     per-call work — incoming-side flagging, exact verification joins,
     the admission anti-join — is unaffected. At a real deployment the
     equivalent artifact is the persisted bucketed index of
@@ -1357,8 +1357,8 @@ def neardup_dedup_corpus(
     ``components`` (round-9 VERDICT item 3): pass a precomputed
     :func:`neardup_components` frame to share the candidate-pair + CC
     prelude across the family's consumers (the registry persists it
-    once per corpus — the PQ-codebook lifecycle); None recomputes,
-    keeping the operator self-contained.
+    once per corpus as a ``sources.fixtures.session_artifact``); None
+    recomputes, keeping the operator self-contained.
     """
     comp = (
         components

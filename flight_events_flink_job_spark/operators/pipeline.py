@@ -494,8 +494,9 @@ def dsir_importance(
     broadcast hash join of a ~1k-row weight table onto the gram stream
     followed by one per-doc hash aggregate. The gram stream is
     evaluated ONCE: it collapses immediately to a (doc, lang, bucket,
-    count) profile (partial-aggregated before its only exchange), from
-    which both the bucket model and the per-doc scores derive —
+    count) profile (partial-aggregated before its only exchange),
+    materialized by one eager ``localCheckpoint`` that this call owns,
+    from which both the bucket model and the per-doc scores derive —
     per-gram work never repeats and the corpus shuffles once. Engine-portability: the hash is the shared
     poly-hash, evaluated Arrow-vectorized on this hot path
     (functions/textual.py poly_hash_arrow — identical integer math to
@@ -527,7 +528,7 @@ def dsir_importance(
         )
         .groupBy("doc_id", "lang", "bkt")
         .agg(F.count("*").alias("cnt"))
-        .persist()
+        .localCheckpoint(eager=True)
     )
     model_counts = gb.groupBy("bkt").agg(
         F.sum("cnt").alias("ns"),

@@ -1336,16 +1336,17 @@ def event_pagerank(
         F.round(F.col("c").cast("decimal(19,9)") / F.col("tot"), 8)
         .cast("decimal(9,8)")
         .alias("p"),
-    ).coalesce(1).persist()  # |types|^2 rows, referenced by every
-    # iteration — without the persist the per-user lag window
-    # re-executes once per power iteration; coalesce(1) keeps the
-    # per-iteration joins single-task (the graph is tiny; at real
-    # graph scale drop the coalesce and co-partition edges on src)
+    ).coalesce(1).localCheckpoint(eager=True)  # |types|^2 rows,
+    # referenced by every iteration — materialized once by this call,
+    # or the per-user lag window re-executes once per power iteration;
+    # coalesce(1) keeps the per-iteration joins single-task (the graph
+    # is tiny; at real graph scale drop the coalesce and co-partition
+    # edges on src)
     nodes = (
         events.select(F.col("event_type").alias("node"))
         .distinct()
         .coalesce(1)
-        .persist()
+        .localCheckpoint(eager=True)
     )
     # |types| is a bounded model scalar (the tf_idf_top_terms N
     # pattern): one count embedded as a literal, never per-row work.

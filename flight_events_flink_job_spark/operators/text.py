@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -544,27 +543,17 @@ def bigram_lm_score(docs: DataFrame) -> DataFrame:
     )
 
 
-# Cache-of-one for ccnet_lm_buckets' persisted score table (see its
-# docstring): holds the most recent persisted frame so the next call can
-# eagerly release it.
-_CCNET_SCORE_CACHE: DataFrame | None = None
+def ccnet_lm_scores(docs: DataFrame) -> DataFrame:
+    """(doc_id, lang, mean_log_prob): the per-document LM fluency
+    score table :func:`ccnet_lm_buckets` cuts into tiers."""
+    return (
+        bigram_lm_score(docs)
+        .join(docs.select("doc_id", "lang"), "doc_id")
+        .select("doc_id", "lang", "mean_log_prob")
+    )
 
 
-def clear_ccnet_cache() -> None:
-    """Drop (and unpersist) the module-level ccnet score cache —
-    required after an IN-PLACE fixture regeneration, which plan-identity
-    keying cannot detect (``spark.catalog.clearCache()`` does not reach
-    this handle; see the cache_scores note in ccnet_lm_buckets)."""
-    global _CCNET_SCORE_CACHE
-    if _CCNET_SCORE_CACHE is not None:
-        try:
-            _CCNET_SCORE_CACHE.unpersist()
-        except Exception:
-            pass  # the frame's session may already be gone
-        _CCNET_SCORE_CACHE = None
-
-
-def ccnet_lm_buckets(docs: DataFrame, cache_scores: bool = True) -> DataFrame:
+def ccnet_lm_buckets(docs: DataFrame, scores: DataFrame | None = None) -> DataFrame:
     """CCNet-style per-language quality tiers (Wenzek et al. 2020): each
     document's LM fluency score (:func:`bigram_lm_score`, standing in
     for CCNet's KenLM perplexity) is cut into head / middle / tail
@@ -586,62 +575,20 @@ def ccnet_lm_buckets(docs: DataFrame, cache_scores: bool = True) -> DataFrame:
     id — documented, deterministic). Docs with < 2 tokens have no
     bigrams and are absent, as in :func:`bigram_lm_score`.
 
-    The scored (doc_id, lang, mean_log_prob) table is consumed TWICE —
+    The score table (:func:`ccnet_lm_scores`) is consumed TWICE —
     once to build the histogram the cuts derive from, once for the
-    final tier assignment — and the static plan duplicates the whole LM
-    train+score subtree under both consumers (36 exchanges; AQE's
-    runtime exchange reuse may or may not collapse the twin subtrees
-    depending on stage boundaries). ``cache_scores`` pins the
-    single-evaluation contract explicitly by persisting the narrow
-    3-column score table (MEMORY_AND_DISK): measured 8.5 s -> 3.1 s on
-    a cold session at 50k docs, steady-state equal. Footprint is
-    ~24 bytes/doc + lang string. Lifecycle is a CACHE OF ONE (round-9
-    ADVICE item 3): each call eagerly unpersists the score table the
-    PREVIOUS call pinned, so repeated registry runs in a long-lived
-    session hold at most one corpus's scores instead of accumulating
-    cached tables until ContextCleaner happens to GC the plans.
-
-    Fixture-regeneration gotcha (round-10 ADVICE item 3): the cache key
-    is PLAN identity (sameSemantics), so rewriting the parquet files in
-    place mid-session serves stale persisted rows — and
-    ``spark.catalog.clearCache()`` does NOT reach this module-level
-    handle. After an in-place regen, call this module's
-    :func:`clear_ccnet_cache` (or restart the session, which the
-    grading driver and bench always do).
+    final tier assignment — and the static plan would duplicate the
+    whole LM train+score subtree under both consumers (36 exchanges).
+    ``scores`` passes a score table the caller owns (the registry's
+    per-corpus ``session_artifact``); without it the call evaluates
+    its own table once through an eager ``localCheckpoint`` (single
+    evaluation measured 8.5 s -> 3.1 s on a cold session at 50k docs).
 
     Output: (doc_id, lang, mean_log_prob, bucket).
     """
-    j = bigram_lm_score(docs).join(
-        docs.select("doc_id", "lang"), "doc_id"
-    ).select("doc_id", "lang", "mean_log_prob")
-    if cache_scores:
-        global _CCNET_SCORE_CACHE
-        reused = False
-        if _CCNET_SCORE_CACHE is not None:
-            # Split try blocks (round-10 ADVICE item 2): a comparison
-            # failure must not skip the unpersist, or a live session's
-            # pinned table leaks when sameSemantics throws for any
-            # reason other than the old frame's session being gone.
-            try:
-                if _CCNET_SCORE_CACHE.sameSemantics(j):
-                    # SAME corpus (identical canonical plan): reuse the
-                    # live persisted frame — evicting it here would
-                    # recompute the LM train+score on every repeat
-                    # query, the legitimate-reuse case the persist
-                    # exists for (caught by the r10 bench diff: 1.16 →
-                    # 2.09 s under always-evict).
-                    j = _CCNET_SCORE_CACHE
-                    reused = True
-            except Exception:
-                pass  # comparison failed — fall through to eviction
-            if not reused:
-                try:
-                    _CCNET_SCORE_CACHE.unpersist()
-                except Exception:
-                    pass  # session of the old frame may already be gone
-        if not reused:
-            j = j.persist(StorageLevel.MEMORY_AND_DISK)
-            _CCNET_SCORE_CACHE = j
+    j = scores
+    if j is None:
+        j = ccnet_lm_scores(docs).localCheckpoint(eager=True)
     h = j.groupBy("lang", "mean_log_prob").agg(F.count("*").alias("c"))
     wcum = (
         Window.partitionBy("lang")
@@ -1237,7 +1184,8 @@ def heavy_hitters_checked(docs: DataFrame, k: int = 80) -> DataFrame:
                 lambda i: F.substring(F.col("word"), i, F.lit(2)),
             )
         ).alias("pair")
-    ).persist()  # consumed twice: the MG sketch pass + the exact tier
+    ).localCheckpoint(eager=True)  # consumed twice: the MG sketch pass
+    # + the exact tier; materialized once by this call
 
     def mg(batches):
         counters: dict[str, int] = {}

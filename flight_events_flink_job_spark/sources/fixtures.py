@@ -9,6 +9,7 @@ file or a single machine.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -76,12 +77,12 @@ EMBEDDINGS_VIEW_SQL = (
 
 def fixture_token(sf_dir: str, table: str = "documents") -> tuple:
     """Snapshot identity of a fixture table: (mtime_ns, size) of its
-    parquet — changes whenever the driver regenerates the file, so any
-    module-level cache keyed on it self-invalidates on in-place regen
-    (the round-9/10 fixture-regeneration gotcha, BASELINE §9;
+    parquet — changes whenever the driver regenerates the file, so a
+    cache keyed on it self-invalidates on in-place regen (the
+    round-9/10 fixture-regeneration gotcha, BASELINE §9;
     ``spark.catalog.clearCache()`` does not reach module-level
-    handles). Canonical home since round 12 — every data-derived
-    module cache must key on this or be declared exempt
+    handles). Every data-derived cache keys on it through
+    :func:`session_artifact`, the one cross-call cache
     (tests/test_cache_invalidation.py)."""
     path = os.path.join(sf_dir, f"{table}.parquet")
     try:
@@ -89,6 +90,49 @@ def fixture_token(sf_dir: str, table: str = "documents") -> tuple:
         return (st.st_mtime_ns, st.st_size)
     except OSError:
         return (None, None)
+
+
+# The one store of cross-call artifacts: (kind, app, sf_dir, token,
+# params) -> artifact.
+_ARTIFACTS: dict[tuple, object] = {}
+
+
+def session_artifact(
+    spark: SparkSession,
+    kind: str,
+    sf_dir: str,
+    table: str,
+    params: tuple,
+    build: Callable[[], object],
+):
+    """Train once, query many: the artifact ``build()`` returns for
+    this Spark application, corpus snapshot and ``params`` — built on
+    the first call, served from the store after (the batch form of the
+    reference's parse-once fan-out, FEA:37-85).
+
+    The key is (kind, application id, ``sf_dir``, the
+    :func:`fixture_token` of ``table``, ``params``): a frame from a
+    stopped session is never served, and an in-place fixture regen is
+    a miss. A miss evicts every entry of the same ``kind`` built for
+    another (application, ``sf_dir``, token) and releases it; entries
+    of the live corpus with other ``params`` coexist. Release is
+    ``unpersist()`` on a frame, on each frame of a tuple, or on an
+    object that owns frames (``IvfPqIndex``); driver-held models
+    (lists, tuples of scalars) have nothing to release.
+    """
+    app = spark.sparkContext.applicationId
+    corpus = (app, sf_dir, fixture_token(sf_dir, table))
+    key = (kind, *corpus, params)
+    if key not in _ARTIFACTS:
+        for old in [k for k in _ARTIFACTS if k[0] == kind and k[1:4] != corpus]:
+            artifact = _ARTIFACTS.pop(old)
+            for part in artifact if isinstance(artifact, tuple) else (artifact,):
+                try:
+                    part.unpersist()
+                except Exception:
+                    pass  # a driver-held value, or the owning session is gone
+        _ARTIFACTS[key] = build()
+    return _ARTIFACTS[key]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -210,16 +210,11 @@ def flights_from_events(spark, sf_dir: str) -> DataFrame:
     return valid_flights(parse_flight_events(raw))
 
 
-# Parsed-flights staging cache, keyed by (Spark application, sf_dir,
-# fixture snapshot token) — the token invalidates on in-place parquet
-# regeneration (round-11 VERDICT item 8; a persisted frame over
-# rewritten bytes would serve stale rows otherwise).
-_SHARED_FLIGHTS: dict = {}
-
-
 def shared_flights(spark, sf_dir: str) -> DataFrame:
     """Cluster-cached parsed-flights table, parsed at most once per
-    Spark application per ``sf_dir``.
+    Spark application per ``events`` snapshot (one
+    :func:`~.fixtures.session_artifact`; a second ``sf_dir`` evicts the
+    first).
 
     The JSON build + ``from_json`` parse is the per-row hot path of
     every flight-family query; running it once and fanning the cached
@@ -236,26 +231,15 @@ def shared_flights(spark, sf_dir: str) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    from .fixtures import fixture_token
+    from .fixtures import session_artifact
 
-    key = (
-        spark.sparkContext.applicationId,
+    return session_artifact(
+        spark,
+        "shared_flights",
         sf_dir,
-        fixture_token(sf_dir, "events"),
-    )
-    df = _SHARED_FLIGHTS.get(key)
-    if df is None:
-        # evict ONLY a stale snapshot of this same (app, sf_dir) — the
-        # in-place-regen case; concurrent entries for other fixture
-        # dirs keep their parse-once contract
-        for old in list(_SHARED_FLIGHTS):
-            if old[:2] == key[:2]:
-                try:
-                    _SHARED_FLIGHTS.pop(old).unpersist()
-                except Exception:
-                    pass  # the old frame's session may be gone
-        df = flights_from_events(spark, sf_dir).persist(
+        "events",
+        (),
+        lambda: flights_from_events(spark, sf_dir).persist(
             StorageLevel.MEMORY_AND_DISK
-        )
-        _SHARED_FLIGHTS[key] = df
-    return df
+        ),
+    )

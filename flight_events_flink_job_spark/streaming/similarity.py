@@ -89,8 +89,9 @@ def drain_ivfpq_queries_from_staged(
     """Continuous ANN serving from a batch-built
     :class:`operators.clustering.IvfPqIndex` — the index-tier
     batch/stream unification (round-11 VERDICT item 7): the index is
-    built ONCE on the batch side (persisted cells/codes/codebook,
-    cached per corpus by plans/registry_ext._ivfpq_index_cached) and a
+    built ONCE on the batch side (persisted cells/codes/codebook, one
+    ``sources.fixtures.session_artifact`` per corpus via
+    plans/registry_ext._ivfpq_index_cached) and a
     continuous stream of QUERY vectors is answered from it, micro-batch
     by micro-batch, with ZERO per-batch index work — each batch pays
     only the serve plan (broadcast probe gate onto the persisted cell

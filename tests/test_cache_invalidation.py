@@ -1,23 +1,22 @@
-"""Fixture-token discipline for EVERY module-level cache (round-11
-VERDICT item 8): the driver regenerates /root/testdata in place
-between rounds, and ``spark.catalog.clearCache()`` does not reach
-module-level handles — so every data-derived module cache must either
-key on the fixture snapshot token (sources.fixtures.fixture_token:
-(mtime_ns, size) of the backing parquet) or carry a documented
-exemption with an explicit escape hatch.
+"""Fixture-token discipline for every cross-call cache (round-11
+VERDICT item 8): fixture parquet can be regenerated in place between
+runs, and ``spark.catalog.clearCache()`` does not reach
+module-level handles — so every data-derived cache goes through the
+one owner, ``sources.fixtures.session_artifact``, whose key embeds the
+fixture snapshot token (sources.fixtures.fixture_token: (mtime_ns,
+size) of the backing parquet).
 
-Three layers:
-  1. a SOURCE SWEEP that finds every module-level mutable cache in the
-     package and fails if one is not classified below — a new cache
-     cannot ship unclassified;
-  2. a parameterized KEY CHECK: each token-keyed cache is populated
-     once through its real builder and every key must embed the
-     current token of its backing table (test_fixture_token_
+Two layers:
+  1. a SOURCE SWEEP that finds every module-level mutable cache slot in
+     the package and fails on any but the helper's store, and every
+     ``session_artifact`` call site, so a new kind cannot ship without
+     a key check below;
+  2. a parameterized KEY CHECK over the helper's kinds: each is
+     populated once through its real builder and every key must embed
+     the current token of its backing table (test_fixture_token_
      invalidates_on_regen in test_dedup.py pins that the token itself
      moves on an in-place rewrite, so token-in-key == regen
-     invalidates);
-  3. the exemption check: the plan-identity-keyed ccnet cache must
-     keep its documented clear_ccnet_cache() escape hatch.
+     invalidates).
 """
 
 from __future__ import annotations
@@ -30,122 +29,86 @@ import pytest
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PKG = ROOT / "flight_events_flink_job_spark"
 
-# (module path, attribute, backing fixture table) — token-keyed caches
-TOKEN_KEYED = [
-    ("plans.registry_ext", "_INC_NEARDUP_PRELUDE", "documents"),
-    ("plans.registry_ext", "_NEARDUP_COMPONENTS", "documents"),
-    ("plans.registry_ext", "_HIER_MODELS", "embeddings"),
-    ("plans.registry_ext", "_COARSE_MODELS", "embeddings"),
-    ("plans.registry_ext", "_IVFPQ_INDEXES", "embeddings"),
-    ("plans.registry_ext", "_MIPS_PAIR_CONFIGS", "embeddings"),
-    ("sources.flight_adapter", "_SHARED_FLIGHTS", "events"),
-]
 
-# attribute -> why no token is needed + the escape hatch
-EXEMPT = {
-    "_CCNET_SCORE_CACHE": (
-        "cache-of-one keyed by PLAN identity (sameSemantics); in-place "
-        "regen is handled by the documented clear_ccnet_cache() hatch, "
-        "and the grading driver/bench always run in a fresh session"
+def _populate_registry(builder: str, *args):
+    def populate(spark, sf_dir):
+        from flight_events_flink_job_spark.plans import registry_ext
+
+        getattr(registry_ext, builder)(spark, sf_dir, *args)
+
+    return populate
+
+
+def _populate_shared_flights(spark, sf_dir):
+    from flight_events_flink_job_spark.sources.flight_adapter import (
+        shared_flights,
+    )
+
+    shared_flights(spark, sf_dir)
+
+
+def _populate_ccnet_scores(spark, sf_dir):
+    from flight_events_flink_job_spark.plans import QUERIES
+
+    QUERIES["ccnet_lm_buckets"](spark, sf_dir)
+
+
+# helper kind -> (backing fixture table, the real builder that fills it)
+KINDS = {
+    "shared_flights": ("events", _populate_shared_flights),
+    "inc_neardup_prelude": ("documents", _populate_registry("_inc_neardup_prelude")),
+    "neardup_components": (
+        "documents",
+        _populate_registry("_neardup_components_cached"),
     ),
+    "hier_model": ("embeddings", _populate_registry("_hier_model", 16)),
+    "coarse_model": ("embeddings", _populate_registry("_coarse_model", 61)),
+    "ivfpq_index": ("embeddings", _populate_registry("_ivfpq_index_cached", "raw")),
+    "mips_pair_config": ("embeddings", _populate_registry("_mips_paired_config")),
+    "ccnet_scores": ("documents", _populate_ccnet_scores),
 }
 
 
 def test_every_module_cache_is_classified():
-    """Source sweep: any module-level `_NAME = {}` / `_NAME = None`
-    cache slot must appear in TOKEN_KEYED or EXEMPT."""
-    pat = re.compile(r"^(_[A-Z0-9_]+)(?::[^=]+)? = (?:\{\}|None)$", re.M)
-    found = set()
+    """Source sweep: the helper's store is the only module-level
+    `_NAME = {}` / `_NAME = None` cache slot, and every kind passed to
+    ``session_artifact`` has a key check in KINDS."""
+    slot = re.compile(r"^(_[A-Z0-9_]+)(?::[^=]+)? = (?:\{\}|None)$", re.M)
+    call = re.compile(r"session_artifact\(\s*spark,\s*\"(\w+)\"")
+    slots, kinds = set(), set()
     for path in PKG.rglob("*.py"):
-        for m in pat.finditer(path.read_text()):
-            found.add(m.group(1))
-    classified = {attr for _, attr, _ in TOKEN_KEYED} | set(EXEMPT)
-    assert found == classified, (
-        f"unclassified module-level caches: {sorted(found - classified)}; "
-        f"stale classifications: {sorted(classified - found)} — update "
-        "tests/test_cache_invalidation.py with a token key or a "
-        "documented exemption"
+        text = path.read_text()
+        rel = path.relative_to(PKG).as_posix()
+        slots |= {(rel, m.group(1)) for m in slot.finditer(text)}
+        kinds |= {m.group(1) for m in call.finditer(text)}
+    assert slots == {("sources/fixtures.py", "_ARTIFACTS")}, (
+        f"module-level caches outside sources.fixtures.session_artifact: "
+        f"{sorted(slots)}"
+    )
+    assert kinds == set(KINDS), (
+        f"session_artifact kinds without a key check: "
+        f"{sorted(kinds - set(KINDS))}; stale: {sorted(set(KINDS) - kinds)}"
     )
 
 
-def _populate(module: str, attr: str, spark, sf_dir: str) -> None:
-    """Run the real builder that fills this cache once."""
-    if attr == "_INC_NEARDUP_PRELUDE":
-        from flight_events_flink_job_spark.plans.registry_ext import (
-            _inc_neardup_prelude,
-        )
-
-        _inc_neardup_prelude(spark, sf_dir)
-    elif attr == "_NEARDUP_COMPONENTS":
-        from flight_events_flink_job_spark.plans.registry_ext import (
-            _neardup_components_cached,
-        )
-
-        _neardup_components_cached(spark, sf_dir)
-    elif attr == "_HIER_MODELS":
-        from flight_events_flink_job_spark.plans.registry_ext import _hier_model
-
-        _hier_model(spark, sf_dir, 16)
-    elif attr == "_COARSE_MODELS":
-        from flight_events_flink_job_spark.plans.registry_ext import (
-            _coarse_model,
-        )
-
-        _coarse_model(spark, sf_dir, 61)
-    elif attr == "_IVFPQ_INDEXES":
-        from flight_events_flink_job_spark.plans.registry_ext import (
-            _ivfpq_index_cached,
-        )
-
-        _ivfpq_index_cached(spark, sf_dir, "raw")
-    elif attr == "_MIPS_PAIR_CONFIGS":
-        from flight_events_flink_job_spark.plans.registry_ext import (
-            _mips_paired_config,
-        )
-
-        _mips_paired_config(spark, sf_dir)
-    elif attr == "_SHARED_FLIGHTS":
-        from flight_events_flink_job_spark.sources.flight_adapter import (
-            shared_flights,
-        )
-
-        shared_flights(spark, sf_dir)
-
-
-@pytest.mark.parametrize("module,attr,table", TOKEN_KEYED)
-def test_token_keyed_cache_embeds_current_fixture_token(
-    spark, sf_dir, module, attr, table
-):
+@pytest.mark.parametrize("kind", sorted(KINDS))
+def test_token_keyed_cache_embeds_current_fixture_token(spark, sf_dir, kind):
     """Populate the cache through its real builder, then require every
-    key for this sf_dir to embed the CURRENT fixture token of its
-    backing table — with the token pinned to move on in-place regen
-    (test_fixture_token_invalidates_on_regen), token-in-key means the
-    regenerated fixture can never be served from the stale entry."""
-    import importlib
+    key of this kind for this sf_dir to embed the CURRENT fixture token
+    of its backing table — with the token pinned to move on in-place
+    regen (test_fixture_token_invalidates_on_regen), token-in-key means
+    the regenerated fixture can never be served from the stale entry."""
+    from flight_events_flink_job_spark.sources import fixtures
 
-    from flight_events_flink_job_spark.sources.fixtures import fixture_token
-
-    mod = importlib.import_module(f"flight_events_flink_job_spark.{module}")
-    _populate(module, attr, spark, sf_dir)
-    cache = getattr(mod, attr)
-    token = fixture_token(sf_dir, table)
+    table, populate = KINDS[kind]
+    populate(spark, sf_dir)
+    token = fixtures.fixture_token(sf_dir, table)
     assert token != (None, None)
-    keys = [k for k in cache if sf_dir in k]
-    assert keys, f"{attr}: builder did not populate a key for {sf_dir}"
+    keys = [k for k in fixtures._ARTIFACTS if k[0] == kind and k[2] == sf_dir]
+    assert keys, f"{kind}: builder did not populate a key for {sf_dir}"
     for k in keys:
-        assert token in k, (
-            f"{attr} key {k!r} does not embed the fixture token "
+        assert k[3] == token, (
+            f"{kind} key {k!r} does not embed the fixture token "
             f"{token!r} of {table}.parquet — an in-place regeneration "
             "would serve this stale entry"
         )
-
-
-def test_exempt_cache_keeps_documented_escape_hatch():
-    from flight_events_flink_job_spark.operators import text
-
-    assert callable(text.clear_ccnet_cache)
-    doc = text.ccnet_lm_buckets.__doc__ or ""
-    assert "regen" in doc and "clear_ccnet_cache" in doc, (
-        "_CCNET_SCORE_CACHE exemption requires the regeneration gotcha "
-        "and the escape hatch to stay documented on ccnet_lm_buckets"
-    )

@@ -622,7 +622,10 @@ def test_ivfpq_registry_cache_is_per_fixture_token(spark, sf_dir):
     variants of one corpus concurrently, and key on the fixture
     snapshot token so an in-place regeneration rebuilds."""
     from flight_events_flink_job_spark.plans import registry_ext as rx
-    from flight_events_flink_job_spark.sources.fixtures import fixture_token
+    from flight_events_flink_job_spark.sources.fixtures import (
+        _ARTIFACTS,
+        fixture_token,
+    )
 
     i1 = rx._ivfpq_index_cached(spark, sf_dir, "residual")
     i2 = rx._ivfpq_index_cached(spark, sf_dir, "residual")
@@ -630,11 +633,12 @@ def test_ivfpq_registry_cache_is_per_fixture_token(spark, sf_dir):
     raw = rx._ivfpq_index_cached(spark, sf_dir, "raw")
     assert raw is not i1
     # both variants of the live corpus coexist in the cache
-    live = [k for k in rx._IVFPQ_INDEXES if k[1] == sf_dir]
+    indexes = [k for k in _ARTIFACTS if k[0] == "ivfpq_index"]
+    live = [k for k in indexes if k[2] == sf_dir]
     assert len(live) >= 2
-    # key carries the fixture token (position 2): a moved token is a miss
-    key = next(k for k in rx._IVFPQ_INDEXES if k[3] == "residual")
-    assert key[2] == fixture_token(sf_dir, "embeddings")
+    # key carries the fixture token (position 3): a moved token is a miss
+    key = next(k for k in indexes if k[4] == ("residual",))
+    assert key[3] == fixture_token(sf_dir, "embeddings")
 
 
 def test_ivfpq_index_split_artifact():

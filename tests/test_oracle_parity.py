@@ -124,12 +124,51 @@ def test_oracle_neardup_edge_set_matches_all_pairs_reference():
     assert sorted(rejected) == sorted(ref_rejected) == [(8,), (10,), (11,)]
 
 
+def _held_cache_entries() -> int:
+    """Distinct cache-manager entries behind the frames that
+    ``sources.fixtures.session_artifact`` holds (a tuple holds frames,
+    an IvfPqIndex holds them as attributes; two frames with the same
+    plan share one entry)."""
+    from pyspark.sql import DataFrame
+
+    from flight_events_flink_job_spark.sources.fixtures import _ARTIFACTS
+
+    def frames(obj):
+        if isinstance(obj, DataFrame):
+            yield obj
+        elif isinstance(obj, tuple):
+            for part in obj:
+                yield from frames(part)
+        elif hasattr(obj, "unpersist"):
+            yield from (v for v in vars(obj).values() if isinstance(v, DataFrame))
+
+    cached: list = []
+    for artifact in _ARTIFACTS.values():
+        for df in frames(artifact):
+            level = df.storageLevel
+            if (level.useMemory or level.useDisk) and not any(
+                df.sameSemantics(c) for c in cached
+            ):
+                cached.append(df)
+    return len(cached)
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, sf_dir, duck, name):
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    entries, held = cm.numCachedEntries(), _held_cache_entries()
     df = QUERIES[name](spark, sf_dir)
     if name not in ORACLES:
         assert df.count() >= 0  # rows-only check (driver does the same)
-        return
-    rel = duck.sql(ORACLES[name])
-    errors = compare(name, df, rel)
-    assert not errors, f"{name}: {errors}"
+    else:
+        rel = duck.sql(ORACLES[name])
+        errors = compare(name, df, rel)
+        assert not errors, f"{name}: {errors}"
+    # every frame a query leaves in the cache manager is one the
+    # session_artifact helper holds: no operator leaks a persist
+    grown = cm.numCachedEntries() - entries
+    held_grown = _held_cache_entries() - held
+    assert grown == held_grown, (
+        f"{name}: cache manager grew by {grown}, helper-held entries by "
+        f"{held_grown}"
+    )

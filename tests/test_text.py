@@ -665,33 +665,45 @@ def test_ccnet_buckets_deterministic_and_no_per_doc_sort_shuffle(
     assert "BroadcastHashJoin" in plan
 
 
-def test_ccnet_cache_lifecycle_reuse_evict_clear(spark, sf_dir):
-    """Round-10 ADVICE item 2 + fixture-regen escape hatch: the
-    cache-of-one must (a) REUSE the persisted frame on an identical
-    corpus plan, (b) EVICT-and-unpersist it when the corpus changes —
-    even though sameSemantics comparison and unpersist now live in
-    separate try blocks — and (c) drop it on clear_ccnet_cache()."""
-    from flight_events_flink_job_spark.operators import text as text_mod
-    from flight_events_flink_job_spark.operators.text import (
-        ccnet_lm_buckets,
-        clear_ccnet_cache,
-    )
-    from flight_events_flink_job_spark.sources.fixtures import load_table
+def test_ccnet_cache_lifecycle_reuse_evict_clear(spark, sf_dir, tmp_path):
+    """The registry's ccnet score table is one
+    ``sources.fixtures.session_artifact``: (a) the same key REUSES the
+    same persisted frame, (b) a new corpus — a fixture copy in another
+    dir, the in-place-regen stand-in — EVICTS and unpersists it, and (c)
+    the operator without a caller-owned table returns the same rows as
+    with one, and leaves nothing in the cache manager."""
+    import shutil
 
-    clear_ccnet_cache()
-    docs = load_table(spark, sf_dir, "documents")
-    ccnet_lm_buckets(docs).count()
-    first = text_mod._CCNET_SCORE_CACHE
-    assert first is not None and first.storageLevel.useMemory
-    # (a) identical corpus: the SAME frame object is reused
-    ccnet_lm_buckets(docs).count()
-    assert text_mod._CCNET_SCORE_CACHE is first
-    # (b) different corpus: evicted AND unpersisted
-    ccnet_lm_buckets(docs.limit(50)).count()
-    second = text_mod._CCNET_SCORE_CACHE
-    assert second is not first
+    from flight_events_flink_job_spark.operators.text import ccnet_lm_buckets
+    from flight_events_flink_job_spark.plans import QUERIES
+    from flight_events_flink_job_spark.sources import fixtures
+
+    def scores(d):
+        (frame,) = [
+            v
+            for k, v in fixtures._ARTIFACTS.items()
+            if k[0] == "ccnet_scores" and k[2] == d
+        ]
+        return frame
+
+    QUERIES["ccnet_lm_buckets"](spark, sf_dir)
+    first = scores(sf_dir)
+    assert first.storageLevel.useMemory
+    # (a) same key: the SAME frame object is reused
+    QUERIES["ccnet_lm_buckets"](spark, sf_dir)
+    assert scores(sf_dir) is first
+    # (b) new corpus: the old frame is evicted AND unpersisted
+    copy = tmp_path / "sf"
+    copy.mkdir()
+    shutil.copyfile(f"{sf_dir}/documents.parquet", copy / "documents.parquet")
+    QUERIES["ccnet_lm_buckets"](spark, str(copy))
+    assert scores(str(copy)) is not first
     assert not first.storageLevel.useMemory, "evicted frame still pinned"
-    # (c) explicit clear (the in-place fixture-regen escape hatch)
-    clear_ccnet_cache()
-    assert text_mod._CCNET_SCORE_CACHE is None
-    assert not second.storageLevel.useMemory
+    # (c) caller-owned table vs the call's own checkpoint: same rows
+    served = QUERIES["ccnet_lm_buckets"](spark, sf_dir).collect()
+    docs = fixtures.load_table(spark, sf_dir, "documents")
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    own = ccnet_lm_buckets(docs).collect()
+    assert cm.numCachedEntries() == before
+    assert sorted(map(tuple, served)) == sorted(map(tuple, own)) and own
