@@ -26,7 +26,6 @@ from ..sources.flight_adapter import (
     CORRUPT_EVERY,
     FLIGHTS_CTE,
     flight_event_json_with_corrupt,
-    flights_from_events,
     shared_flights,
 )
 
@@ -75,8 +74,11 @@ def _bucket_sql(col: str, seconds: int) -> str:
 )
 def q_flights_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1-P4 + S3 raw archive: the full parse/enrich pipeline output
-    (sink schema readme.txt:18+73-74, INSERT FlightEventAggregator.java:160)."""
-    return flights_from_events(spark, sf_dir)
+    (sink schema readme.txt:18+73-74, INSERT FlightEventAggregator.java:160).
+    Read through ``shared_flights``: the cache manager serves any plan
+    equal to the cached table from it, so once another flight query ran,
+    a direct ``flights_from_events`` read that cache anyway."""
+    return shared_flights(spark, sf_dir)
 
 
 @register(

@@ -225,9 +225,9 @@ def shared_flights(spark, sf_dir: str) -> DataFrame:
     is a Spark ``persist(MEMORY_AND_DISK)`` — partitions spill to local
     disk under memory pressure, nothing is collected to the driver, and
     plans downstream of the cache are unchanged (values identical to
-    :func:`flights_from_events`; ``flights_raw`` / ``rejected_rows``
-    deliberately stay on the uncached path so the full parse pipeline
-    remains oracle-covered end-to-end).
+    :func:`flights_from_events`, and ``flights_raw`` checks every column
+    of the cached table against its oracle; ``rejected_rows`` stays on
+    the uncached path).
     """
     from pyspark import StorageLevel
 

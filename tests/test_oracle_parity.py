@@ -9,6 +9,7 @@ import pytest
 from flight_events_flink_job_spark.plans import ORACLES, QUERIES
 from flight_events_flink_job_spark.plans import vector_sql as vs
 from flight_events_flink_job_spark.schemas import FIXTURE_TABLES
+from flight_events_flink_job_spark.sources import fixtures
 
 import sys
 import os
@@ -124,14 +125,10 @@ def test_oracle_neardup_edge_set_matches_all_pairs_reference():
     assert sorted(rejected) == sorted(ref_rejected) == [(8,), (10,), (11,)]
 
 
-def _held_cache_entries() -> int:
-    """Distinct cache-manager entries behind the frames that
-    ``sources.fixtures.session_artifact`` holds (a tuple holds frames,
-    an IvfPqIndex holds them as attributes; two frames with the same
-    plan share one entry)."""
+def _cached_frames(artifacts):
+    """Cached frames among helper artifacts (a tuple holds frames, an
+    IvfPqIndex holds them as attributes)."""
     from pyspark.sql import DataFrame
-
-    from flight_events_flink_job_spark.sources.fixtures import _ARTIFACTS
 
     def frames(obj):
         if isinstance(obj, DataFrame):
@@ -142,22 +139,77 @@ def _held_cache_entries() -> int:
         elif hasattr(obj, "unpersist"):
             yield from (v for v in vars(obj).values() if isinstance(v, DataFrame))
 
-    cached: list = []
-    for artifact in _ARTIFACTS.values():
+    for artifact in artifacts:
         for df in frames(artifact):
             level = df.storageLevel
-            if (level.useMemory or level.useDisk) and not any(
-                df.sameSemantics(c) for c in cached
-            ):
-                cached.append(df)
+            if level.useMemory or level.useDisk:
+                yield df
+
+
+def _held_cache_entries() -> int:
+    """Distinct cache-manager entries behind the frames that
+    ``sources.fixtures.session_artifact`` holds (two frames with the
+    same plan share one entry)."""
+    cached: list = []
+    for df in _cached_frames(fixtures._ARTIFACTS.values()):
+        if not any(df.sameSemantics(c) for c in cached):
+            cached.append(df)
     return len(cached)
+
+
+class _Served(dict):
+    """A copy of the helper's store that records the keys read from it,
+    i.e. the artifacts the helper served."""
+
+    def __init__(self, store):
+        super().__init__(store)
+        self.read: set = set()
+
+    def __getitem__(self, key):
+        self.read.add(key)
+        return super().__getitem__(key)
+
+
+def _unowned_cache_reads(spark, df, artifacts) -> list[str]:
+    """The cached relations in ``df``'s optimized plan (subqueries
+    included) whose cache builder no frame of ``artifacts`` owns. With
+    ``artifacts`` the ones the helper served to the query, this sees a
+    query reading a cache entry another query made, which the entry
+    counts cannot when both persist the same plan."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    ident = spark._jvm.java.lang.System.identityHashCode
+    owned = set()
+    for held in _cached_frames(artifacts):
+        data = cm.lookupCachedData(held._jdf)
+        if data.isDefined():
+            owned.add(ident(data.get().cachedRepresentation().cacheBuilder()))
+    plan = df._jdf.queryExecution().optimizedPlan()
+    subs = plan.subqueriesAll()
+    unowned = []
+    for p in [plan] + [subs.apply(i) for i in range(subs.size())]:
+        leaves = p.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if (
+                leaf.getClass().getSimpleName() == "InMemoryRelation"
+                and ident(leaf.cacheBuilder()) not in owned
+            ):
+                unowned.append(leaf.cacheBuilder().cachedPlan().toString()[:160])
+    return unowned
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, sf_dir, duck, name):
     cm = spark._jsparkSession.sharedState().cacheManager()
     entries, held = cm.numCachedEntries(), _held_cache_entries()
-    df = QUERIES[name](spark, sf_dir)
+    store = fixtures._ARTIFACTS
+    served = fixtures._ARTIFACTS = _Served(store)
+    try:
+        df = QUERIES[name](spark, sf_dir)
+    finally:
+        fixtures._ARTIFACTS = store
+        store.clear()
+        store.update(served)  # what the build stored or evicted
     if name not in ORACLES:
         assert df.count() >= 0  # rows-only check (driver does the same)
     else:
@@ -165,10 +217,14 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
         errors = compare(name, df, rel)
         assert not errors, f"{name}: {errors}"
     # every frame a query leaves in the cache manager is one the
-    # session_artifact helper holds: no operator leaks a persist
+    # session_artifact helper holds, and every cached relation it reads
+    # is owned by an artifact the helper served it: no operator leaks a
+    # persist, and no query is served by another query's cache entry
     grown = cm.numCachedEntries() - entries
     held_grown = _held_cache_entries() - held
     assert grown == held_grown, (
         f"{name}: cache manager grew by {grown}, helper-held entries by "
         f"{held_grown}"
     )
+    unowned = _unowned_cache_reads(spark, df, [store[k] for k in served.read if k in store])
+    assert not unowned, f"{name}: reads cache entries not served to it: {unowned}"
