@@ -11,13 +11,17 @@ the driver itself, not just pytest.
 from __future__ import annotations
 
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..schemas import FLIGHT_SCHEMA
 from ..sources.fixtures import load_table
 from ..sources.flight_adapter import FLIGHTS_CTE
 from ..streaming.job import (
     merge_airline_stats,
+    partial_airline_stats,
+    partial_route_stats,
     run_file_stream,
     run_file_stream_jdbc,
     stage_flight_event_json,
@@ -76,17 +80,35 @@ def _stage_events(
     return f"{base}/in", f"{base}/ckpt", ev
 
 
+def _stage_flight_json(spark: SparkSession, sf_dir: str, prefix: str) -> str:
+    """Stage the events fixture as 4 Kafka-shaped JSON text parts in
+    ``{base}/in`` under a fresh temp dir ``base``; return ``base``."""
+    base = tempfile.mkdtemp(prefix=prefix)
+    stage_flight_event_json(spark, sf_dir, f"{base}/in", parts=4)
+    return base
+
+
+def _read_partials(spark: SparkSession, path: str, partial: Callable) -> DataFrame:
+    """A fan-out partials table, read under the schema of ``partial``
+    (a ``partial_*_stats``) over an empty FLIGHT_SCHEMA frame: no
+    footer-inference job; partition discovery still adds ``epoch``."""
+    schema = partial(spark.createDataFrame([], FLIGHT_SCHEMA)).schema
+    return spark.read.schema(schema).parquet(path)
+
+
 @register("streaming_airline_stats", oracle=ORACLES["airline_delay_stats"])
 def q_streaming_airline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch/stream parity, driver-checked: availableNow drain of the
     staged event stream in 2-file micro-batches -> partials -> merge.
     Must hash-equal the batch oracle exactly."""
-    base = tempfile.mkdtemp(prefix="stream_roundtrip_")
-    staging, warehouse, ckpt = f"{base}/in", f"{base}/wh", f"{base}/ckpt"
-    stage_flight_event_json(spark, sf_dir, staging, parts=4)
-    run_file_stream(spark, staging, warehouse, ckpt, max_files_per_trigger=2)
+    base = _stage_flight_json(spark, sf_dir, "stream_roundtrip_")
+    run_file_stream(
+        spark, f"{base}/in", f"{base}/wh", f"{base}/ckpt", max_files_per_trigger=2
+    )
     return merge_airline_stats(
-        spark.read.parquet(f"{warehouse}/airline_delay_stats_partial")
+        _read_partials(
+            spark, f"{base}/wh/airline_delay_stats_partial", partial_airline_stats
+        )
     )
 
 
@@ -98,11 +120,9 @@ def q_stream_jdbc_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     A1 oracle exactly (streaming/job.py run_file_stream_jdbc)."""
     from ..sources.jdbc import derby_url, read_jdbc_table
 
-    base = tempfile.mkdtemp(prefix="stream_jdbc_")
-    staging, ckpt = f"{base}/in", f"{base}/ckpt"
+    base = _stage_flight_json(spark, sf_dir, "stream_jdbc_")
     url = derby_url(f"{base}/db")
-    stage_flight_event_json(spark, sf_dir, staging, parts=4)
-    run_file_stream_jdbc(spark, staging, url, ckpt)
+    run_file_stream_jdbc(spark, f"{base}/in", url, f"{base}/ckpt")
     return merge_airline_stats(
         read_jdbc_table(spark, url, "airline_stats_partial")
     )
@@ -172,26 +192,22 @@ def q_stream_watermark_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     + a 30-min watermark over the datagen STREAM (monotone event time,
     so eviction drops nothing and windows leave state while the query
     runs — the configuration the round-6 endurance soak measures flat);
-    the latest-epoch changelog snapshot must hash-equal the batch
+    the changelog's last-emission snapshot must hash-equal the batch
     window aggregate over the same generated rows (streaming/job.py
     streaming_datagen_stats_watermarked)."""
     base = tempfile.mkdtemp(prefix="stream_wm_")
-    return streaming_datagen_stats_watermarked(
-        spark, f"{base}/out", f"{base}/ckpt"
-    )
+    return streaming_datagen_stats_watermarked(spark, f"{base}/ckpt")
 
 
 @register("stream_update_mode_stats", oracle=ORACLES["airline_delay_stats"])
 def q_stream_update_mode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UPDATE-output-mode + RocksDB-state-store parity, driver-checked:
-    the changelog drain's latest-epoch snapshot per (airline, window)
+    the changelog drain's last-emission snapshot per (airline, window)
     must hash-equal the batch A1 oracle exactly (streaming/job.py
     streaming_airline_stats_update — §2.4 config surface the append
     demos don't cover)."""
-    base = tempfile.mkdtemp(prefix="stream_update_")
-    staging, out, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    stage_flight_event_json(spark, sf_dir, staging, parts=4)
-    return streaming_airline_stats_update(spark, staging, out, ckpt)
+    base = _stage_flight_json(spark, sf_dir, "stream_update_")
+    return streaming_airline_stats_update(spark, f"{base}/in", f"{base}/ckpt")
 
 
 @register(
@@ -498,12 +514,12 @@ def q_stream_topk_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/job.py topk_routes_from_partials)."""
     from ..streaming.job import run_file_stream, topk_routes_from_partials
 
-    base = tempfile.mkdtemp(prefix="stream_topk_")
-    staging, warehouse, ckpt = f"{base}/in", f"{base}/wh", f"{base}/ckpt"
-    stage_flight_event_json(spark, sf_dir, staging, parts=4)
-    run_file_stream(spark, staging, warehouse, ckpt, max_files_per_trigger=2)
+    base = _stage_flight_json(spark, sf_dir, "stream_topk_")
+    run_file_stream(
+        spark, f"{base}/in", f"{base}/wh", f"{base}/ckpt", max_files_per_trigger=2
+    )
     return topk_routes_from_partials(
-        spark.read.parquet(f"{warehouse}/route_delay_stats_partial")
+        _read_partials(spark, f"{base}/wh/route_delay_stats_partial", partial_route_stats)
     )
 
 
@@ -516,13 +532,13 @@ def q_airline_stats_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     still hash-equal the batch A1 oracle exactly."""
     from ..streaming.sinks import compact_table
 
-    base = tempfile.mkdtemp(prefix="compact_serving_")
-    staging, warehouse, ckpt = f"{base}/in", f"{base}/wh", f"{base}/ckpt"
-    stage_flight_event_json(spark, sf_dir, staging, parts=4)
-    run_file_stream(spark, staging, warehouse, ckpt, max_files_per_trigger=1)
+    base = _stage_flight_json(spark, sf_dir, "compact_serving_")
+    run_file_stream(
+        spark, f"{base}/in", f"{base}/wh", f"{base}/ckpt", max_files_per_trigger=1
+    )
     compacted = compact_table(
         spark,
-        f"{warehouse}/airline_delay_stats_partial",
+        f"{base}/wh/airline_delay_stats_partial",
         f"{base}/compacted",
         sort_cols=["airline", "window_start"],
     )

@@ -18,12 +18,15 @@ end-to-end over a source with NO backing files at all.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
 )
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StringType, StructField, StructType
 
 GEN_FORMAT = "flight_events_gen"
@@ -164,6 +167,35 @@ def _streamReader(self, schema):
 FlightEventsDataSource.streamReader = _streamReader
 
 
+def stop_at_rows(query: StreamingQuery, rows: int, timeout_s: float) -> list[dict]:
+    """The generator's stop rule: wait until the completed micro-batches'
+    ``numInputRows`` reach ``rows`` (progress is posted after a batch
+    commits), stop ``query`` on every exit path and return every batch's
+    progress in batch order. The generator cannot run availableNow: the
+    Python stream reader has no admission control and its
+    ``latestOffset`` advances by ``rowsPerBatch`` on each call.
+    ``recentProgress`` keeps ~100 batches, so each poll absorbs it by
+    batch id. Raises TimeoutError after ``timeout_s``, and the query's
+    own error if it fails."""
+    seen: dict[int, dict] = {}
+    deadline = time.monotonic() + timeout_s
+    try:
+        while True:
+            for p in query.recentProgress:
+                seen[p["batchId"]] = p
+            n = sum(p["numInputRows"] for p in seen.values())
+            if n >= rows:
+                return [seen[b] for b in sorted(seen)]
+            if time.monotonic() >= deadline:
+                raise TimeoutError(
+                    f"stream read {n} of {rows} rows in {timeout_s} s"
+                )
+            if query.awaitTermination(0.2):  # raises the query's error
+                raise RuntimeError(f"stream ended after {n} of {rows} rows")
+    finally:
+        query.stop()
+
+
 def drain_datagen_stream(
     spark,
     checkpoint_dir: str,
@@ -172,16 +204,11 @@ def drain_datagen_stream(
     timeout_s: int = 300,
 ):
     """Run the streaming generator through the real parse pipeline into
-    an exactly-once parquet sink, stopping once all ``rows`` committed.
-
-    The stop condition polls the sink's row count (the source holds its
-    latest offset once exhausted, so the query idles at exactly
-    ``rows``); a restarted query would resume from the checkpointed
-    offset, not row 0.
-    """
-    import time as _time
-
+    an exactly-once parquet sink until :func:`stop_at_rows`, and read it
+    back under the stream's schema. A restarted query would resume from
+    the checkpointed offset, not row 0."""
     from ..operators.parse import parse_flight_events, valid_flights
+    from ..streaming.roundtrip import read_back
 
     register_datagen(spark)
     out_dir = f"{checkpoint_dir}_out"
@@ -191,26 +218,14 @@ def drain_datagen_stream(
         .option("rowsPerBatch", rows_per_batch)
         .load()
     )
-    q = (
-        valid_flights(parse_flight_events(raw))
-        .writeStream.format("parquet")
+    flights = valid_flights(parse_flight_events(raw))
+    stop_at_rows(
+        flights.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .start()
+        .start(),
+        rows,
+        timeout_s,
     )
-    deadline = _time.time() + timeout_s
-    try:
-        while _time.time() < deadline:
-            try:
-                if spark.read.parquet(out_dir).count() >= rows:
-                    break
-            except Exception:
-                pass  # sink directory not committed yet
-            _time.sleep(0.5)
-        else:
-            raise TimeoutError("datagen stream did not finish draining")
-    finally:
-        q.stop()
-        q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return read_back(spark, out_dir, flights.schema)

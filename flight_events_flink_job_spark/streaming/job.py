@@ -34,6 +34,13 @@ multi-aggregate fan-out in ONE pass over the data with exact results
 and no cross-batch driver state; the serving merge is a small groupBy
 over (key, window) rows.
 
+Beside the fan-out and the watermarked file sink, the queries here run
+through streaming/roundtrip.py: the JDBC partials query through its
+``foreachBatch`` runner (``run_batches``), the two update-mode A1
+queries through ``drain`` plus the last-emission fold over
+``total_flights``; the datagen one passes the generator's stop rule
+(``sources.datagen.stop_at_rows``) to the runner.
+
 :func:`streaming_airline_stats_watermarked` is the idiomatic
 single-aggregate alternative: event-time window + watermark + append
 mode + parquet sink with checkpointing — late data beyond the watermark
@@ -49,12 +56,11 @@ to ``to_json`` + Kafka sink on topic flight-delay-notifications).
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.streaming import StreamingQuery
 
 from ..observability import observe_parse
 
@@ -72,11 +78,14 @@ from ..operators.aggregates import (  # noqa: F401
 from ..operators.notifications import delay_notifications
 from ..operators.parse import parse_flight_events, rejected_rows, valid_flights
 from ..operators.util import plan_size
-from ..schemas import AIRLINE_STATS_COLUMNS
 from ..session import ROCKSDB_PROVIDER, rocksdb_state_store  # noqa: F401
 from ..sources.fixtures import load_table
 from ..sources.flight_adapter import flight_event_json
+from .roundtrip import drain, last_emission, run_batches
 from .sinks import write_serving_table
+
+# The key an update-mode A1 changelog re-emits rows under.
+_A1_KEYS = ("airline", "window_start")
 
 
 def stage_flight_event_json(
@@ -410,52 +419,12 @@ def run_file_stream_jdbc(
             column_types="airline VARCHAR(64)",
         )
 
-    q = (
-        parsed.writeStream.foreachBatch(insert_partials)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def _changelog_snapshot(
-    agg: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    drain: Callable[[DataStreamWriter], None],
-) -> DataFrame:
-    """Drain an UPDATE-mode A1 aggregate into an epoch-stamped changelog
-    and return its snapshot — the upsert sink shared by the two
-    update-mode queries below. foreachBatch appends each emission
-    tagged with ``_epoch``; the snapshot keeps each key's latest-epoch
-    row (max_by over ``_epoch``; ties impossible: one emission per key
-    per epoch). ``drain`` sets the trigger on the writer, starts it and
-    returns once the changelog is complete."""
-
-    def append_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.withColumn("_epoch", F.lit(epoch_id)).write.mode("append").parquet(
-            out_dir
-        )
-
-    drain(
-        agg.writeStream.outputMode("update")
-        .foreachBatch(append_epoch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    log = agg.sparkSession.read.parquet(out_dir)
-    value_cols = [c for c in log.columns if c not in ("airline", "window_start", "_epoch")]
-    return (
-        log.groupBy("airline", "window_start")
-        .agg(*[F.expr(f"max_by({c}, _epoch)").alias(c) for c in value_cols])
-        .select(AIRLINE_STATS_COLUMNS)
-    )
+    run_batches(parsed, checkpoint_dir, insert_partials)
 
 
 def streaming_airline_stats_update(
     spark: SparkSession,
     source_dir: str,
-    out_dir: str,
     checkpoint_dir: str,
     window_size: str = "2 minutes",
     max_files_per_trigger: int | None = 2,
@@ -466,7 +435,9 @@ def streaming_airline_stats_update(
 
     Update mode re-emits a (airline, window) row in EVERY micro-batch
     that changed it (a changelog, vs append's emit-once-on-finalize),
-    so the sink is an epoch-stamped upsert (:func:`_changelog_snapshot`).
+    so the result is each key's last emission: the update-mode
+    :func:`roundtrip.drain` folded by :func:`roundtrip.last_emission`
+    over ``total_flights``.
     No watermark on purpose — nothing is late-dropped and windows never
     leave state, so the final snapshot must equal the batch A1
     aggregate exactly (that parity is the oracle); production would add
@@ -484,12 +455,8 @@ def streaming_airline_stats_update(
         parse_flight_events(_text_stream(spark, source_dir, max_files_per_trigger))
     )
     with rocksdb_state_store(spark):
-        return _changelog_snapshot(
-            airline_stats(flights, window_size),
-            out_dir,
-            checkpoint_dir,
-            lambda w: w.trigger(availableNow=True).start().awaitTermination(),
-        )
+        updates = drain(airline_stats(flights, window_size), checkpoint_dir, "update")
+    return last_emission(updates, _A1_KEYS, "total_flights")
 
 
 def topk_routes_from_partials(partials: DataFrame, k: int = 10) -> DataFrame:
@@ -527,7 +494,6 @@ def topk_routes_from_partials(partials: DataFrame, k: int = 10) -> DataFrame:
 
 def streaming_datagen_stats_watermarked(
     spark: SparkSession,
-    out_dir: str,
     checkpoint_dir: str,
     rows: int = 5000,
     rows_per_batch: int = 500,
@@ -548,14 +514,16 @@ def streaming_datagen_stats_watermarked(
     2-minute window is fully fed before the ``watermark`` lag passes
     it, windows are finalized and EVICTED from the RocksDB store while
     the stream runs (the flat-state behavior the round-6 soak measures
-    over 110 batches, tools/stream_soak.py), and the latest-epoch
+    over 110 batches, tools/stream_soak.py), and the last-emission
     snapshot of the changelog still equals the batch aggregate exactly.
     One query therefore driver-checks update mode + RocksDB + watermark
     eviction + the Python DataSourceStreamReader together.
-    """
-    import time as _time
 
-    from ..sources.datagen import GEN_FORMAT, register_datagen
+    ``state_probe`` receives ``max_state_rows``, the peak state rows
+    over the batches :func:`sources.datagen.stop_at_rows` saw: the
+    pytest's evidence that finalized windows left the store mid-run.
+    """
+    from ..sources.datagen import GEN_FORMAT, register_datagen, stop_at_rows
 
     register_datagen(spark)
     raw = (
@@ -566,55 +534,21 @@ def streaming_datagen_stats_watermarked(
     )
     flights = valid_flights(parse_flight_events(raw))
 
-    def drain(writer: DataStreamWriter) -> None:
-        q = writer.trigger(processingTime="0 seconds").start()
-        # The generator holds at `rows`; stop once all input is
-        # consumed AND an empty batch has run (the changelog is then
-        # complete — update mode emits on change, not on finalize).
-        # recentProgress retains only the last ~100 entries, so absorb
-        # it incrementally keyed by batchId: a long run (or a flood of
-        # no-data micro-batches) can then never evict a counted data
-        # batch out of the row-total or the state-peak scan (round-6
-        # ADVICE item 3 — the bounded-buffer re-sum raised spurious
-        # TimeoutErrors past ~100 batches).
-        seen: dict = {}
-
-        def _absorb() -> None:
-            for p in q.recentProgress:
-                seen[p["batchId"]] = p
-
-        deadline = _time.time() + timeout_s
-        while _time.time() < deadline:
-            _absorb()
-            if (
-                seen
-                and sum(p["numInputRows"] for p in seen.values()) >= rows
-                and seen[max(seen)]["numInputRows"] == 0
-            ):
-                break
-            _time.sleep(0.5)
-        else:
-            raise TimeoutError("watermarked datagen stream did not drain")
-        if state_probe is not None:
-            # Eviction evidence for the pytest: peak state rows must sit
-            # FAR below the total window count (finalized windows left
-            # the store mid-run), not just end low.
-            _absorb()
-            state_probe["max_state_rows"] = max(
-                (
-                    p["stateOperators"][0]["numRowsTotal"]
-                    for p in seen.values()
-                    if p.get("stateOperators")
-                ),
-                default=0,
-            )
-        q.stop()
-        q.awaitTermination()
-
+    progress: list[dict] = []
     with rocksdb_state_store(spark):
-        return _changelog_snapshot(
+        updates = drain(
             airline_stats(flights.withWatermark("scheduled_time", watermark), window_size),
-            out_dir,
             checkpoint_dir,
-            drain,
+            "update",
+            until=lambda q: progress.extend(stop_at_rows(q, rows, timeout_s)),
         )
+    if state_probe is not None:
+        state_probe["max_state_rows"] = max(
+            (
+                p["stateOperators"][0]["numRowsTotal"]
+                for p in progress
+                if p.get("stateOperators")
+            ),
+            default=0,
+        )
+    return last_emission(updates, _A1_KEYS, "total_flights")

@@ -1,17 +1,21 @@
-"""The plumbing every staged streaming round trip shares.
+"""The plumbing every streaming query that runs to completion shares.
 
 A round trip stages files, replays them as a rate-limited stream,
-drains that stream with an availableNow trigger and compares the
-result with a batch oracle (the batch/stream parity stance, SURVEY.md
-§7). :func:`staged_stream` is its one file source, :func:`drain` its
-one sink and :func:`stage_time_ranges` its one event-time-ordered
-stager.
+drains that stream and compares the result with a batch oracle (the
+batch/stream parity stance, SURVEY.md §7). :func:`staged_stream` is
+its one file source, :func:`run_batches` its one ``foreachBatch``
+runner (availableNow, or the datagen generator's stop rule
+``sources.datagen.stop_at_rows``), :func:`drain` its one sink,
+:func:`last_emission` its one update-mode snapshot and
+:func:`stage_time_ranges` its one event-time-ordered stager.
 
 The sink follows from the output mode alone (Watermarks in Stream
 Processing Systems, VLDB 2021, PAPERS.md): append emits final rows and
 update emits a changelog, so both append every micro-batch; complete
 emits the whole result table each time, so it overwrites and keeps the
-last snapshot. Every drain writes parquet through ``foreachBatch`` to
+last snapshot. An update-mode changelog's result is each key's last
+emission, and :func:`last_emission` folds it out with no batch tag.
+Every drain writes parquet through the runner to
 ``{checkpoint_dir}_out`` and reads it back under the stream's own
 schema, so the result stays distributed (no driver-side memory sink)
 and the read runs no schema-inference job. Rows persist across drains
@@ -27,6 +31,7 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 # The staged event rows the event round trips stream (the events
@@ -47,26 +52,57 @@ def staged_stream(
     )
 
 
-def drain(df: DataFrame, checkpoint_dir: str, output_mode: str) -> DataFrame:
-    """Run the streaming frame ``df`` to completion (availableNow) and
-    return what it emitted: every row in append and update mode, the
-    last snapshot in complete mode (see the module docstring)."""
-    spark = df.sparkSession
-    out_dir = f"{checkpoint_dir}_out"
-    write_mode = "overwrite" if output_mode == "complete" else "append"
-
-    def write_batch(batch_df: DataFrame, _epoch: int) -> None:
-        batch_df.write.mode(write_mode).parquet(out_dir)
-
-    (
+def run_batches(
+    df: DataFrame,
+    checkpoint_dir: str,
+    write_batch: Callable[[DataFrame, int], None],
+    output_mode: str = "append",
+    until: Callable[[StreamingQuery], object] | None = None,
+) -> None:
+    """Run the streaming frame ``df`` through ``write_batch`` once per
+    micro-batch, checkpointed at ``checkpoint_dir``: availableNow, then
+    wait for the query to end. A source that cannot run availableNow
+    passes its stop rule as ``until``: the query then triggers back to
+    back and ``until(query)`` stops it."""
+    writer = (
         df.writeStream.outputMode(output_mode)
         .foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )
-    return read_back(spark, out_dir, df.schema)
+    if until is None:
+        writer.trigger(availableNow=True).start().awaitTermination()
+    else:
+        until(writer.trigger(processingTime="0 seconds").start())
+
+
+def drain(
+    df: DataFrame,
+    checkpoint_dir: str,
+    output_mode: str,
+    until: Callable[[StreamingQuery], object] | None = None,
+) -> DataFrame:
+    """Run the streaming frame ``df`` to completion (:func:`run_batches`
+    with ``until``) and return what it emitted: every row in append and
+    update mode, the last snapshot in complete mode (see the module
+    docstring)."""
+    out_dir = f"{checkpoint_dir}_out"
+    write_mode = "overwrite" if output_mode == "complete" else "append"
+
+    def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
+        batch_df.write.mode(write_mode).parquet(out_dir)
+
+    run_batches(df, checkpoint_dir, write_batch, output_mode, until)
+    return read_back(df.sparkSession, out_dir, df.schema)
+
+
+def last_emission(updates: DataFrame, keys: Sequence[str], counter: str) -> DataFrame:
+    """Each key's last row of an update-mode changelog: the row with the
+    largest ``counter``, a running count. Update mode re-emits a key
+    only when new rows reach it, so ``counter`` strictly increases per
+    key; ties cannot occur and the fold needs no batch tag."""
+    return updates.groupBy(*keys).agg(
+        *[F.max_by(c, counter).alias(c) for c in updates.columns if c not in keys]
+    ).select(updates.columns)
 
 
 def read_back(spark: SparkSession, out_dir: str, schema: StructType) -> DataFrame:

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_arrow, to_double
-from .roundtrip import drain, read_back, staged_stream
+from .roundtrip import drain, read_back, run_batches, staged_stream
 
 # Staged-parquet twin of the embeddings fixture (post ingest-contract).
 EMB_SCHEMA = "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
@@ -107,9 +107,10 @@ def drain_ivfpq_queries_from_staged(
     wall times — the soak tool uses it to prove the no-rebuild claim
     (bench/stream_ivfpq_soak_r12.json).
 
-    The answers are read back like every drain's
-    (:func:`roundtrip.read_back`): under the serve frame's schema, and
-    as an empty frame of it when nothing was staged.
+    The batches run through the one ``foreachBatch`` runner
+    (:func:`roundtrip.run_batches`) and the answers are read back like
+    every drain's (:func:`roundtrip.read_back`): under the serve frame's
+    schema, and as an empty frame of it when nothing was staged.
     """
     import time as _time
 
@@ -130,11 +131,5 @@ def drain_ivfpq_queries_from_staged(
         if batch_hook is not None:
             batch_hook(batch_id, _time.monotonic() - t0)
 
-    q = (
-        stream.writeStream.foreachBatch(serve)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_batches(stream, checkpoint_dir, serve)
     return read_back(spark, out_dir, schema)

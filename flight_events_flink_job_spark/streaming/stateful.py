@@ -29,12 +29,12 @@ from __future__ import annotations
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..session import rocksdb_state_store
-from .roundtrip import EVENT_STREAM_SCHEMA, drain, staged_stream
+from .roundtrip import EVENT_STREAM_SCHEMA, drain, last_emission, staged_stream
 
 STATE_SCHEMA = (
     "n_events LONG, sum_value DOUBLE, last_ts TIMESTAMP, "
@@ -126,9 +126,10 @@ def drain_user_activity(
 
 
 def final_user_state(updates: DataFrame) -> DataFrame:
-    """Reduce the update-mode emission log to the FINAL state per user.
-    ``n_events`` strictly increases on every emission for a user, so the
-    max-``n_events`` row is the last one — no batch-id column needed.
+    """Reduce the update-mode emission log to the FINAL state per user:
+    each user's last emission (:func:`roundtrip.last_emission`), whose
+    counter is ``n_events`` — it strictly increases on every emission
+    for a user, so no batch-id column is needed.
 
     Only the batch-order-INDEPENDENT state fields are returned
     (count / sum / max-ts form a commutative monoid over micro-batches),
@@ -137,16 +138,9 @@ def final_user_state(updates: DataFrame) -> DataFrame:
     ``sum_value`` is rounded to 2 dp: inputs carry 2 decimals, so the
     true sum has 2 decimals and rounding absorbs FP association order.
     """
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        updates.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "user_id",
-            "n_events",
-            F.round("sum_value", 2).alias("sum_value"),
-            "last_ts",
-        )
+    fields = updates.select("user_id", "n_events", "sum_value", "last_ts")
+    return last_emission(fields, ["user_id"], "n_events").withColumn(
+        "sum_value", F.round("sum_value", 2)
     )
 
 

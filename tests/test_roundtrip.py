@@ -1,14 +1,26 @@
-"""The shared round-trip sink (streaming/roundtrip.py) and the per-user
-fold both state APIs share (streaming/stateful.py)."""
+"""The shared round-trip runner, sink and last-emission fold
+(streaming/roundtrip.py), the generator's stop rule (sources/datagen.py)
+and the per-user fold both state APIs share (streaming/stateful.py)."""
 
 from __future__ import annotations
 
 import datetime as dt
 import os
+import time
 
 import pandas as pd
+import pytest
 
-from flight_events_flink_job_spark.streaming.roundtrip import drain, staged_stream
+from flight_events_flink_job_spark.sources.datagen import (
+    GEN_FORMAT,
+    register_datagen,
+    stop_at_rows,
+)
+from flight_events_flink_job_spark.streaming.roundtrip import (
+    drain,
+    last_emission,
+    staged_stream,
+)
 
 SCHEMA = "user_id long, ts timestamp, event_type string, value double"
 
@@ -52,6 +64,43 @@ def test_drain_of_nothing_staged_is_empty(spark, tmp_path):
     out = drain(stream, str(tmp_path / "ckpt"), "update")
     assert out.count() == 0
     assert out.columns == stream.columns
+
+
+def test_last_emission_keeps_largest_counter_in_any_read_order(spark, tmp_path):
+    """Three emissions of one key across two changelog files: the fold
+    returns the largest-counter row whichever file is read first."""
+    schema = "k long, n long, tag string"
+    files = []
+    for i, rows in enumerate([[(1, 1, "a"), (1, 3, "c"), (2, 5, "x")], [(1, 2, "b")]]):
+        path = str(tmp_path / f"log{i}")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
+        files.append(path)
+    for order in (files, files[::-1]):
+        out = last_emission(spark.read.schema(schema).parquet(*order), ["k"], "n")
+        assert out.columns == ["k", "n", "tag"]
+        assert sorted(map(tuple, out.collect())) == [(1, 3, "c"), (2, 5, "x")]
+
+
+def test_stop_rule_timeout_stops_the_query(spark, tmp_path):
+    """A generator stream that never reaches ``rows`` raises within the
+    rule's timeout and leaves no query running."""
+    register_datagen(spark)
+    raw = (
+        spark.readStream.format(GEN_FORMAT)
+        .option("rows", 50)
+        .option("rowsPerBatch", 50)
+        .load()
+    )
+    t0 = time.monotonic()
+    with pytest.raises(TimeoutError):
+        drain(
+            raw,
+            str(tmp_path / "ckpt"),
+            "append",
+            until=lambda q: stop_at_rows(q, 51, timeout_s=3),
+        )
+    assert time.monotonic() - t0 < 60
+    assert spark.streams.active == []
 
 
 def test_fold_activity_sorts_chunks_before_folding():

@@ -65,11 +65,11 @@ def test_stream_parity_flights_archive(spark, sf_dir, drained):
 
 def test_update_mode_rocksdb_matches_batch(spark, sf_dir, drained, tmp_path):
     """UPDATE output mode over the RocksDB state store: the changelog's
-    latest-epoch snapshot must equal the batch A1 aggregate exactly,
+    last-emission snapshot must equal the batch A1 aggregate exactly,
     and the checkpoint must contain RocksDB artifacts (.zip snapshots /
     .changelog increments — the HDFS-backed default writes .delta)."""
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    snap = streaming_airline_stats_update(spark, drained["staging"], out, ckpt)
+    ckpt = str(tmp_path / "ckpt")
+    snap = streaming_airline_stats_update(spark, drained["staging"], ckpt)
     batch = airline_stats(flights_from_events(spark, sf_dir))
     assert _rows(snap) == _rows(batch)
 
@@ -896,7 +896,6 @@ def test_watermark_evicts_windows_mid_run(spark, tmp_path):
     probe: dict = {}
     out = streaming_datagen_stats_watermarked(
         spark,
-        str(tmp_path / "out"),
         str(tmp_path / "ckpt"),
         state_probe=probe,
     )

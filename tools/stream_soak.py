@@ -56,7 +56,10 @@ def main() -> int:
         valid_flights,
     )
     from flight_events_flink_job_spark.session import get_spark
-    from flight_events_flink_job_spark.sources.datagen import register_datagen
+    from flight_events_flink_job_spark.sources.datagen import (
+        register_datagen,
+        stop_at_rows,
+    )
     from flight_events_flink_job_spark.streaming.job import ROCKSDB_PROVIDER
 
     spark = get_spark("stream_soak")
@@ -128,18 +131,9 @@ def main() -> int:
         .start()
     )
     t0 = time.perf_counter()
-    # Drain: the datagen reader holds at `rows`; stop once the batch
-    # count is reached or input goes quiet.
-    deadline = time.time() + 1800
-    while time.time() < deadline:
-        done = [p for p in progress if p["input_rows"] == 0]
-        if len(progress) >= n_batches and done:
-            break
-        if not q.isActive:
-            break
-        time.sleep(1.0)
-    q.stop()
-    q.awaitTermination(60)
+    # Drain: the datagen reader holds at `rows`; the generator's stop
+    # rule stops the query once every row is committed.
+    stop_at_rows(q, n_batches * per_batch, timeout_s=1800)
     wall = time.perf_counter() - t0
     shutil.rmtree(tmp, ignore_errors=True)
 

@@ -3,7 +3,7 @@
 #
 # Runs every correctness and plan-shape gate the repo has, in the
 # order that fails fastest:
-#   1. full pytest suite (937 tests incl. plan gates, property tests,
+#   1. full pytest suite (939 tests incl. plan gates, property tests,
 #      streaming batch/stream parity, adversarial regressions; ~15 min)
 #   2. full-registry (188-query) parity sweep vs the DuckDB oracles at
 #      sf0.01 — the same comparison the grading driver runs (~10 min)
